@@ -18,9 +18,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG pipeline (ordered reassembly → hierarchy windows →
-    mention/definition Arrow kernels → broadcast linking) over transcripts
-    synthesized from the sf0.001 documents table; returns the triples frame.
+    """Flagship: full KG pipeline (pre-shuffle mention/definition Arrow
+    kernel → conv_id shuffle + mapInArrow hierarchy state pass → parquet
+    spill → broadcast linking) over transcripts synthesized from the
+    sf0.001 documents table; returns the triples frame.
     """
     from open_source_legislation_spark import schemas, synth
     from open_source_legislation_spark.plans.pipeline import run_pipeline

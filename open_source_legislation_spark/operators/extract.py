@@ -3,66 +3,35 @@
 Re-expresses the reference's per-document imperative parse loop
 (``scrapeCA.py:150-221`` parent resolution, ``scrapeECFR.py:530-837``
 definition state machine, ``scrapeECFR.py:1112-1172`` mention extraction)
-as:
+as one derive engine, :func:`derive_nodes_stream`:
 
-- **Arrow-batched pandas UDFs** for the regex kernels (shared with the
-  oracle via ``rules.py`` — no drift, no per-row Python through Spark's
-  row UDF path);
-- two interchangeable stateful engines (equivalence is a test invariant,
-  tests/test_engines_equivalent.py):
+- a stateless **Arrow-batched payload UDF** (``turn_payload_udf``) runs
+  every regex kernel BEFORE the ``conv_id`` shuffle — shared with the
+  oracle via ``rules.py`` (no drift), balanced across scan partitions and
+  immune to hot-conversation skew;
+- a vectorized ``mapInArrow`` state pass over the ``hash(conv_id)``-
+  partitioned, sorted turns does dedup/ordinals/parent-stack/scope fills
+  at ~µs/row (:func:`derive_nodes_sharded` splits a pathologically long
+  conversation across tasks with stitched boundary state).
 
-  * ``derive_nodes_stream`` — the scale/default path: all expensive regex
-    work runs as a stateless payload UDF BEFORE the ``conv_id`` shuffle
-    (balanced across scan partitions, immune to hot-conversation skew),
-    then a vectorized ``mapInArrow`` state pass does dedup/ordinals/
-    parent-stack/scope fills at ~µs/row;
-  * ``derive_nodes`` — the pure-Catalyst reference plan: parent-by-rank
-    resolution as "nearest preceding strictly-higher-ranked row" via
-    per-rank running ``last(..., ignorenulls=True)`` windows (the
-    as-of-join shape SURVEY §2.3 ``join_hierarchy_rank`` calls for),
-    duplicate-id versioning as a ``row_number`` window (SURVEY §2.6
-    ``dedup_version``), scope flags as running-last fills — all windows
-    sharing one ``conv_id`` partitioning, so Catalyst plans a single
-    exchange.
+The pure-Python oracle (``oracle.py``) is the independent reference the
+engine is tested against (tests/test_engines_equivalent.py).
 
-At 10^12 turns per-conv state is O(1)-ish per row in both engines, so hot
-conversations cost time, not memory; the expensive reassembly path is
-chunk-salted separately (see ``reassembly.py``).
+At 10^12 turns per-conv state is O(stack depth) per partition, so hot
+conversations cost time, not memory; the per-node text reassembly is
+chunk-salted separately (:func:`node_text_agg`).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .. import rules
-from .reassembly import conv_root_col
 
-# ---------------------------------------------------------------------------
-# Arrow kernels (scalar pandas UDFs over rules.py)
-# ---------------------------------------------------------------------------
-
-_HIER_TYPE = T.StructType(
-    [
-        T.StructField("classifier", T.StringType()),
-        T.StructField("number", T.StringType()),
-        T.StructField("name", T.StringType()),
-    ]
-)
-# fused per-turn features: one Arrow round-trip instead of three
-# (clean + hierarchy marker + definitions header)
-_FEATURES_TYPE = T.StructType(
-    [
-        T.StructField("clean_text", T.StringType()),
-        T.StructField("classifier", T.StringType()),
-        T.StructField("number", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("defs_header", T.BooleanType()),
-    ]
-)
 _MENTIONS_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -96,69 +65,12 @@ def _def_tuple(d: dict) -> tuple:
     )
 
 
-@pandas_udf(_FEATURES_TYPE)
-def turn_features_udf(texts: pd.Series) -> pd.DataFrame:
-    """Fused per-turn kernel: clean_text + parse_hierarchy_marker +
-    is_definitions_header in ONE Arrow batch transfer. At 10^12 turns the
-    JVM↔Python hop dominates kernel cost, so the three scalar rules run
-    fused over each batch (they all need the full text anyway)."""
-    cleaned = texts.map(rules.clean_text)
-    parsed = cleaned.map(rules.parse_hierarchy_marker)
-    return pd.DataFrame(
-        {
-            "clean_text": cleaned,
-            "classifier": parsed.map(lambda t: t[0] if t else None),
-            "number": parsed.map(lambda t: t[1] if t else None),
-            "name": parsed.map(lambda t: t[2] if t else None),
-            "defs_header": cleaned.map(rules.is_definitions_header),
-        }
-    )
-
-
 _EXTRACTIONS_TYPE = T.StructType(
     [
         T.StructField("mentions", _MENTIONS_TYPE),
         T.StructField("defs", _DEFS_TYPE),
     ]
 )
-
-
-@pandas_udf(_EXTRACTIONS_TYPE)
-def extractions_udf(texts: pd.Series, in_scope: pd.Series) -> pd.DataFrame:
-    """Fused mention + definition extraction — one Arrow round-trip for the
-    two content kernels (reference scrapeECFR.py:1112-1172 + 530-837)."""
-    mentions = texts.map(
-        lambda t: [
-            (m["mention_text"], m["corpus"], m["raw_key"], m["start"])
-            for m in rules.extract_mentions(t)
-        ]
-    )
-    defs = pd.Series(
-        [
-            [_def_tuple(d) for d in rules.extract_definitions(t, bool(s))]
-            for t, s in zip(texts, in_scope)
-        ],
-        index=texts.index,
-    )
-    return pd.DataFrame({"mentions": mentions, "defs": defs})
-
-
-@pandas_udf(_HIER_TYPE)
-def hierarchy_marker_udf(texts: pd.Series) -> pd.DataFrame:
-    """parse_hierarchy_marker over an Arrow batch → nullable struct."""
-    parsed = texts.map(rules.parse_hierarchy_marker)
-    return pd.DataFrame(
-        {
-            "classifier": parsed.map(lambda t: t[0] if t else None),
-            "number": parsed.map(lambda t: t[1] if t else None),
-            "name": parsed.map(lambda t: t[2] if t else None),
-        }
-    )
-
-
-@pandas_udf(T.BooleanType())
-def definitions_header_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(rules.is_definitions_header)
 
 
 @pandas_udf(_MENTIONS_TYPE)
@@ -170,176 +82,6 @@ def mentions_udf(texts: pd.Series) -> pd.Series:
             for m in rules.extract_mentions(t)
         ]
     )
-
-
-@pandas_udf(_DEFS_TYPE)
-def definitions_udf(texts: pd.Series, in_scope: pd.Series) -> pd.Series:
-    """Definition extraction (reference scrapeECFR.py:530-837) per batch."""
-    return pd.Series(
-        [
-            [_def_tuple(d) for d in rules.extract_definitions(t, bool(s))]
-            for t, s in zip(texts, in_scope)
-        ]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hierarchy nodes via windows
-# ---------------------------------------------------------------------------
-
-_RANKED_LEVELS = sorted(rules.LEVEL_RANKS, key=rules.LEVEL_RANKS.get)
-
-
-def _versioned(raw_id_col: str, ord_col: str = "ord"):
-    """Duplicate-id versioning: rn=1 keeps the id, rn=n>1 appends ``-v_n``
-    in arrival (= turn) order — deterministic re-expression of the
-    reference's insert-collision retry loop (scrapingHelpers.py:61-115).
-
-    Partitioned by ``(conv_id, raw_id)``: node ids are conv-prefixed so this
-    is semantically per-raw-id, and hash(conv_id) already satisfies the
-    clustered distribution — no extra exchange, and the null (non-node) rows
-    spread across conversations instead of one global skew partition."""
-    w = Window.partitionBy("conv_id", raw_id_col).orderBy(ord_col)
-    rn = F.row_number().over(w)
-    return F.when(rn == 1, F.col(raw_id_col)).otherwise(
-        F.concat(F.col(raw_id_col), F.lit("-v_"), rn.cast("string"))
-    )
-
-
-def derive_nodes(ordered: DataFrame) -> DataFrame:
-    """Attach hierarchy-node columns to the ordered turns.
-
-    Adds: ``node_id`` (versioned, null for non-node turns), ``node_parent``,
-    ``level_classifier``, ``node_name``, ``node_status``, ``current_node``
-    (running scope node for every turn), ``in_defs_scope``.
-
-    Level-by-level construction: each level's full path id depends on the
-    nearest preceding higher-ranked node's *final (versioned)* id, exactly
-    like the oracle's parent stack — so the windows chain per level
-    (4 window stages, one shared exchange on ``conv_id``).
-    """
-    w = Window.partitionBy("conv_id").orderBy("ord")
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-
-    if "clean_text" in ordered.columns:
-        # caller already cleaned (standalone use) — parse markers only
-        df = (
-            ordered.withColumn("hier", hierarchy_marker_udf("clean_text"))
-            .withColumn("level_classifier", F.col("hier.classifier"))
-            .withColumn("level_number", F.col("hier.number"))
-            .withColumn("node_name", F.col("hier.name"))
-            .withColumn("_defs_header_c", definitions_header_udf("clean_text"))
-            .drop("hier")
-        )
-    else:
-        # fused path (the pipeline): clean + marker + defs-header in one
-        # Arrow round-trip
-        df = (
-            ordered.withColumn("feat", turn_features_udf("text"))
-            .withColumn("clean_text", F.col("feat.clean_text"))
-            .withColumn("level_classifier", F.col("feat.classifier"))
-            .withColumn("level_number", F.col("feat.number"))
-            .withColumn("node_name", F.col("feat.name"))
-            .withColumn("_defs_header_c", F.col("feat.defs_header"))
-            .drop("feat")
-        )
-    df = df.withColumn("root_id", conv_root_col(F.col("conv_id")))
-
-    # per-rank running (ord, id) of the most recent final node id
-    last_cols: list[str] = []
-    for level in _RANKED_LEVELS:
-        rank = rules.LEVEL_RANKS[level]
-        # parent = max-position among running lasts of strictly higher levels
-        higher = [F.col(c) for c in last_cols]
-        if higher:
-            parent = F.coalesce(F.greatest(*higher).getField("id") if len(higher) > 1
-                                else higher[0].getField("id"), F.col("root_id"))
-        else:
-            parent = F.col("root_id")
-        is_level = F.col("level_classifier") == level
-        raw_col, fin_col, last_col = f"_raw_{level}", f"_fin_{level}", f"_last_{level}"
-        df = df.withColumn(
-            raw_col,
-            F.when(
-                is_level,
-                F.concat(parent, F.lit(f"/{level}="), F.col("level_number")),
-            ),
-        )
-        df = df.withColumn(fin_col, F.when(is_level, _versioned(raw_col)))
-        df = df.withColumn(
-            last_col,
-            F.last(
-                F.when(is_level, F.struct(F.col("ord").alias("o"), F.col(fin_col).alias("id"))),
-                ignorenulls=True,
-            ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        last_cols.append(last_col)
-        _ = rank  # rank ordering is implicit in _RANKED_LEVELS iteration
-
-    node_id = F.coalesce(*[F.col(f"_fin_{lv}") for lv in _RANKED_LEVELS])
-    raw_id = F.coalesce(*[F.col(f"_raw_{lv}") for lv in _RANKED_LEVELS])
-    df = (
-        df.withColumn("node_id", node_id)
-        .withColumn("node_raw_id", raw_id)
-        .withColumn(
-            "node_parent",
-            F.when(
-                F.col("node_id").isNotNull(),
-                F.expr(
-                    "array_join(slice(split(node_raw_id,'/'),1,"
-                    "size(split(node_raw_id,'/'))-1),'/')"
-                ),
-            ),
-        )
-        .withColumn(
-            "node_status",
-            F.when(F.col("node_id").isNull(), F.lit(None)).otherwise(
-                F.when(F.lower("node_name").rlike(r"\[\s*reserved"), "reserved")
-                .when(F.lower("node_name").rlike(r"\brepealed\b"), "repealed")
-                .when(F.lower("node_name").rlike(r"\[\s*renumbered"), "renumbered")
-                .otherwise("valid")
-            ),
-        )
-        # current node scope for every turn (running last incl. current row)
-        .withColumn(
-            "current_node",
-            F.coalesce(
-                F.last("node_id", ignorenulls=True).over(
-                    w.rowsBetween(Window.unboundedPreceding, 0)
-                ),
-                F.col("root_id"),
-            ),
-        )
-        # definitions scope: opened by a Definitions. header, closed by any
-        # hierarchy node (reference scope semantics, scrapeECFR.py:301-351)
-        .withColumn(
-            "in_defs_scope",
-            F.coalesce(
-                F.last(
-                    F.when(F.col("node_id").isNotNull(), F.lit(False)).when(
-                        F.col("_defs_header_c"), F.lit(True)
-                    ),
-                    ignorenulls=True,
-                ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-                F.lit(False),
-            ),
-        )
-        .drop("_defs_header_c", *[f"_last_{lv}" for lv in _RANKED_LEVELS],
-              *[f"_fin_{lv}" for lv in _RANKED_LEVELS],
-              *[f"_raw_{lv}" for lv in _RANKED_LEVELS])
-    )
-    # fused content kernel, computed once here so a persist() of this frame
-    # caches the extractions and the downstream mention/definition explodes
-    # stay JVM-only (node-marker turns yield no content extractions)
-    df = df.withColumn(
-        "extractions",
-        F.when(
-            F.col("node_id").isNull(),
-            extractions_udf("clean_text", "in_defs_scope"),
-        ),
-    )
-    _ = w_prev  # parent resolution uses up-to-current lasts of higher levels only
-    return df
 
 
 _DERIVED_SCHEMA = T.StructType(
@@ -717,11 +459,11 @@ def derive_nodes_stream(
     Arrow batches inside a partition, so hot conversations cost O(stack
     depth) memory and ~µs/row time.
 
-    Produces the same frame as :func:`derive_nodes` (windows engine); the
-    equivalence of the two engines is itself a test invariant. For a
-    conversation too long even for the ~µs/row sequential pass in one
-    task, :func:`derive_nodes_sharded` splits it across tasks on turn
-    ranges with stitched boundary state.
+    Equality with the pure-Python oracle on adversarial inputs (duplicates,
+    hot skew, dirty text) is a test invariant. For a conversation too long
+    even for the ~µs/row sequential pass in one task,
+    :func:`derive_nodes_sharded` splits it across tasks on turn ranges with
+    stitched boundary state.
     """
     df = _prepped_payload(transcripts, num_partitions)
     out = df.mapInArrow(_make_state_kernel(), schema=_DERIVED_SCHEMA)
@@ -732,7 +474,7 @@ def derive_nodes_sharded(
     transcripts: DataFrame,
     shard_turns: int = 1_000_000,
     num_partitions: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list[DataFrame]]:
     """Skew escape hatch: :func:`derive_nodes_stream`, but a conversation
     whose turn index reaches ``shard_turns`` is split into ``(conv_id,
     turn_range)`` shards processed by DIFFERENT tasks, with the boundary
@@ -753,6 +495,13 @@ def derive_nodes_sharded(
 
     A duplicated turn_idx never straddles shards (equal index → equal
     bucket), so first-writer-wins dedup is shard-local.
+
+    Returns ``(derived, round_caches)``: each round is persisted DISK_ONLY
+    (its exit-state collect and the final union must see the SAME pass —
+    ids depend on walk state), and those caches back ``derived``'s plan.
+    The caller owns them: unpersist each once ``derived`` is materialized
+    elsewhere (``run_pipeline`` does so right after its parquet spill).
+    The list is empty when no conversation reaches ``shard_turns``.
     """
     import json
 
@@ -767,7 +516,7 @@ def derive_nodes_sharded(
     big_rows = mx.filter(F.col("_mx") >= shard_turns).collect()
     big_ids = [r.conv_id for r in big_rows]
     if not big_ids:
-        return derive_nodes_stream(transcripts, num_partitions)
+        return derive_nodes_stream(transcripts, num_partitions), []
 
     big = transcripts.sparkSession.createDataFrame(
         [(c,) for c in big_ids], schema="conv_id string"
@@ -775,7 +524,7 @@ def derive_nodes_sharded(
     small = transcripts.join(F.broadcast(big), "conv_id", "left_anti")
     bigt = transcripts.join(F.broadcast(big), "conv_id", "inner")
     parts = [derive_nodes_stream(small, num_partitions)]
-    persisted = []
+    round_caches = []
 
     n_rounds = max(int(r._mx) for r in big_rows) // shard_turns + 1
     entry: dict[str, dict] = {}
@@ -788,10 +537,7 @@ def derive_nodes_sharded(
             _make_state_kernel(entry, emit_exit_state=True),
             schema=_DERIVED_SCHEMA,
         )
-        # one materialization per round: the exit-state collect and the
-        # final union must see the SAME pass (ids depend on walk state)
-        persist_disk(raw)
-        persisted.append(raw)
+        round_caches.append(persist_disk(raw))
         exits = {
             r["conv_id"]: json.loads(r["clean_text"])
             for r in raw.filter(F.col("node_id") == _SHARD_STATE)
@@ -811,11 +557,15 @@ def derive_nodes_sharded(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # the per-round DISK_ONLY caches back the returned plan; the consumer
-    # that materializes `out` elsewhere (e.g. run_pipeline's parquet spill)
-    # releases them via this handle once its copy is durable
-    out._osl_shard_persists = persisted
-    return out
+    return out, round_caches
+
+
+def conv_root_col(conv_id: Column) -> Column:
+    """Column form of rules.conv_root_id."""
+    return F.concat(F.lit("conv="), conv_id)
+
+
+_RANKED_LEVELS = sorted(rules.LEVEL_RANKS, key=rules.LEVEL_RANKS.get)
 
 
 def citation_expr(node_id_col) -> "F.Column":
@@ -885,8 +635,9 @@ def node_text_agg(
     turn peeled as the node's addendum is EXCLUDED (the reference removes
     the trailing source paragraph from the node body before storing it,
     extract_addendum scrapeECFR.py:867-992). Two-phase chunk-salted
-    aggregation (the ``reassembly.reassemble_documents`` shape) bounds
-    per-reduce-task state on hot nodes at 10^12-turn scale; ``ord`` is
+    aggregation (phase 1 on ``(node, ord div chunk_size)``, phase 2
+    stitches the ordered chunks — SURVEY §7.4.1) bounds per-reduce-task
+    state on hot nodes at 10^12-turn scale; ``ord`` is
     unique within a node's conversation, so chunk ranges align with text
     order. ``addenda`` (one row per node, ≪ turns) rides a broadcast
     anti-join.

@@ -21,13 +21,20 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
 
     Without this, every iteration STACKS its join/agg subtree on the
     previous plan — at 20+ iterations analysis/optimization time grows
-    superlinearly and the lineage chain re-derives every upstream subtree
-    on failure recovery: the classic iterative-DataFrame failure mode at
-    scale. ``localCheckpoint(eager=True)`` materializes the frame on
-    executor storage and replaces its plan with a scan of the
-    materialized blocks (the loop frames are one row per node — the
-    smallest frame in the computation, so the materialization is cheap
-    relative to one iteration's shuffle)."""
+    superlinearly: the classic iterative-DataFrame failure mode at scale.
+    ``localCheckpoint(eager=True)`` materializes the frame on executor
+    storage and replaces its plan with a scan of the materialized blocks
+    (the loop frames are one row per node — the smallest frame in the
+    computation, so the materialization is cheap relative to one
+    iteration's shuffle).
+
+    The trade-off: plan depth is bounded, but the blocks are stored
+    unreplicated (MEMORY_AND_DISK) with no lineage behind them, so losing
+    an executor that holds them fails the query instead of recomputing
+    the lost partitions. The blocks are not among the ``_osl_persists``
+    handles, and ``unpersist()`` on the returned frame does not release
+    them: they stay listed in ``SparkContext.getPersistentRDDs()`` after
+    it, and after a driver-side GC."""
     return df.localCheckpoint(eager=True)
 
 
@@ -266,9 +273,7 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
     ``cache_oriented`` (default) it is persisted DISK_ONLY — O(|E|), the
     same footprint class as the input. The cache is handed to the caller
     on the result as ``_osl_persists`` for release after consumption —
-    the contract/bench harnesses unpersist it after collecting (the same
-    handle-handover pattern as the sharded engine's
-    ``_osl_shard_persists``).
+    the contract/bench harnesses unpersist it after collecting.
 
     Every triangle is produced exactly once (its corners are totally
     ordered by (degree, id)). Output: ``(node, n_triangles: bigint)``.

@@ -1,8 +1,6 @@
 """Custom join shapes Spark has no native operator for — the range
 (interval-containment) join and the as-of join — composed from existing
-DataFrame ops (the task's canonical "custom operator" case; the as-of
-pattern also powers ``extract.derive_nodes``'s window formulation
-internally, exposed here as a standalone operator).
+DataFrame ops (the task's canonical "custom operator" case).
 
 Naive formulations become a ``CartesianProduct`` + filter (Catalyst cannot
 equi-plan ``lo <= x AND x < hi``) — quadratic at scale. The bucketed

@@ -196,6 +196,11 @@ def _normalize_stratum_key(k, dt, col_name: str):
                 f"stratified_sample: key {k!r} is not numeric for column "
                 f"'{col_name}' ({dt})"
             )
+        if isinstance(k, int) and int(float(k)) != k:
+            raise ValueError(
+                f"stratified_sample: key {k!r} does not convert losslessly "
+                f"to floating-point column '{col_name}' ({dt})"
+            )
         return float(k)
     if isinstance(dt, T.StringType):
         return str(k)

@@ -2,9 +2,10 @@
 
 One declarative DataFrame plan per the SURVEY §3.2 lifecycle:
 
-    scan(transcripts) → repartition(hash(conv_id)) → ordered/dedup window →
-    derive hierarchy nodes (windows) → mention + definition kernels
-    (Arrow UDFs) → explode → broadcast candidate-ladder join →
+    scan(transcripts) → payload Arrow kernel (clean + marker + mention/
+    definition extraction) → repartition(hash(conv_id)) → sort →
+    mapInArrow state pass (dedup, ordinals, hierarchy nodes, scopes) →
+    parquet spill → explode → broadcast candidate-ladder join →
     alias CC loop → triples/nodes/edges materialization.
 
 The reference runs this as a per-document Python loop with one Postgres
@@ -28,7 +29,6 @@ from ..operators import (
     extract,
     graph,
     linking,
-    reassembly,
 )
 
 
@@ -78,14 +78,9 @@ class PipelineResult:
         edges_fn: Callable[[], DataFrame],
         applicable_defs_fn: Callable[[], DataFrame],
         rewritten_fn: Callable[[], DataFrame],
-        spill_dir: str | None = None,
-        extra_persists: list[DataFrame] | None = None,
+        spill_dir: str,
     ) -> None:
         self.turns = turns
-        # additional cached frames backing `turns` (the sharded engine's
-        # per-round DISK_ONLY caches in persist mode) — released by
-        # cleanup() alongside the main frame
-        self._extra_persists = list(extra_persists or [])
         self._fns = {
             "mentions": mentions_fn,
             "definitions": definitions_fn,
@@ -97,7 +92,6 @@ class PipelineResult:
         }
         self._cache: dict[str, DataFrame] = {}
         self.spill_dir = spill_dir
-        self.metrics: dict[str, float] = {}
 
     def _lazy(self, key: str) -> DataFrame:
         if key not in self._cache:
@@ -133,24 +127,12 @@ class PipelineResult:
         return self._lazy("rewritten")
 
     def cleanup(self) -> None:
-        """Release the derived-frame materialization: unpersist (persist
-        mode) or delete the spill directory (parquet mode). Call after the
-        outputs are consumed."""
-        try:
-            self.turns.unpersist()
-        except Exception:  # noqa: BLE001 — non-cached frame
-            pass
-        for cached in self._extra_persists:
-            try:
-                cached.unpersist()
-            except Exception:  # noqa: BLE001 — already released
-                pass
-        self._extra_persists = []
-        if self.spill_dir:
-            import shutil
+        """Delete the derived-frame spill directory. Call after the outputs
+        are consumed."""
+        import shutil
 
-            shutil.rmtree(self.spill_dir, ignore_errors=True)
-            _LIVE_SPILL_DIRS.discard(self.spill_dir)
+        shutil.rmtree(self.spill_dir, ignore_errors=True)
+        _LIVE_SPILL_DIRS.discard(self.spill_dir)
 
 
 def _mention_triples(linked: DataFrame) -> DataFrame:
@@ -318,82 +300,54 @@ def run_pipeline(
     alias_edges: DataFrame | None = None,
     num_partitions: int | None = None,
     canonicalize_triples: bool = False,
-    engine: str = "stream",
-    spill: str = "parquet",
     max_conv_turns: int | None = None,
 ) -> PipelineResult:
-    """``engine="stream"`` (default): one exchange + one JVM sort + one
-    Python pass (mapInPandas stack machine — extract.derive_nodes_stream);
-    ``engine="windows"``: the declarative window-cascade derive. Both
-    produce identical frames (tested equivalence) — windows is kept as the
-    pure-Catalyst reference plan, stream is the scale/throughput path.
+    """Build the KG outputs of ``transcripts`` as one DataFrame DAG.
 
-    ``spill`` controls how the multiply-consumed derived frame is
-    materialized: ``"parquet"`` (default) writes it to a columnar spill
-    and re-reads it, so each downstream branch PRUNES the columns it needs
-    (node triples never decode the nested extractions column; measured
-    ~10% faster warm and ~2x faster cold than DISK_ONLY at 500k turns) —
-    and it is the shape a real deployment uses anyway (the derived table
-    is an Iceberg materialization, cf. plans/checkpoint.py);
-    ``"persist"`` keeps the round-1 DISK_ONLY cache (no temp directory,
-    rides the block manager). Call ``PipelineResult.cleanup()`` when done.
+    The derive stage is :func:`extract.derive_nodes_stream`: one exchange,
+    one JVM sort, one pre-shuffle Arrow payload pass and one ``mapInArrow``
+    state pass. ``max_conv_turns`` is the skew escape hatch: a conversation
+    whose turn index reaches it is derived in ``(conv_id, turn_range)``
+    shards across tasks with stitched boundary state
+    (:func:`extract.derive_nodes_sharded`).
+
+    The multiply-consumed derived frame is written to a columnar parquet
+    spill and re-read, so each downstream branch PRUNES the columns it
+    needs (node triples never decode the nested extractions column). It
+    measured ~10% faster warm and ~2x faster cold than a DISK_ONLY persist
+    at 500k turns (SCALE.md), and it is the shape a real deployment uses
+    anyway (the derived table is an Iceberg materialization, cf.
+    plans/checkpoint.py). Every other output is a lazy plan over the
+    spill; call ``PipelineResult.cleanup()`` when done to delete it.
     """
-    if engine == "stream":
-        # max_conv_turns: skew escape hatch — a conversation whose turn
-        # index reaches it is derived in (conv_id, turn_range) shards
-        # across tasks with stitched boundary state
-        if max_conv_turns is not None:
-            derived = extract.derive_nodes_sharded(
-                transcripts,
-                shard_turns=max_conv_turns,
-                num_partitions=num_partitions,
-            )
-        else:
-            derived = extract.derive_nodes_stream(
-                transcripts, num_partitions=num_partitions
-            )
-    else:
-        # clean=False: cleaning runs fused with the marker/defs-header parse
-        # inside derive_nodes (one Arrow round-trip over the full text column)
-        ordered = reassembly.ordered_turns(
-            transcripts, num_partitions=num_partitions, clean=False
+    import tempfile
+
+    round_caches: list[DataFrame] = []
+    if max_conv_turns is not None:
+        derived, round_caches = extract.derive_nodes_sharded(
+            transcripts, shard_turns=max_conv_turns, num_partitions=num_partitions
         )
-        derived = extract.derive_nodes(ordered)
-    spill_dir = None
-    # the sharded engine's per-round DISK_ONLY caches back the derived
-    # plan; in parquet mode they are subsumed by the spill copy and
-    # released here, in persist mode they must live as long as the result
-    # and are handed to PipelineResult.cleanup()
-    shard_persists = list(getattr(derived, "_osl_shard_persists", []))
-    if spill == "parquet" and engine == "stream":
-        import tempfile
-
-        spill_dir = tempfile.mkdtemp(prefix="osl_derived_")
-        # exit-time backstop for callers that can only consume the outputs
-        # LAZILY and never reach cleanup() (contract queries return a
-        # DataFrame reading this dir; the harness collects it after the
-        # query callable is long gone) — without it every sweep leaks one
-        # derived-parquet dir per pipeline-backed query (observed: 500+
-        # orphans). cleanup() still removes it eagerly and retires the
-        # registry entry, so a long-lived process does not accumulate
-        # dead callbacks.
-        _register_spill_dir(spill_dir)
-        derived.write.mode("overwrite").parquet(spill_dir)
-        for cached in shard_persists:
-            cached.unpersist()
-        shard_persists = []
-        # explicit schema: an empty input writes no part files, and the
-        # schema must survive that
-        derived = spark.read.schema(extract._DERIVED_SCHEMA).parquet(spill_dir)
     else:
-        # DISK_ONLY, deliberately (round-1 measurement): in-memory columnar
-        # encoding of the nested extraction column costs ~50% of the whole
-        # derive stage and competes with execution memory, while a
-        # disk-cached intermediate consumed within the same job rides the
-        # OS page cache.
-        from ..operators._cache import persist_disk
-
-        derived = persist_disk(derived)
+        derived = extract.derive_nodes_stream(
+            transcripts, num_partitions=num_partitions
+        )
+    spill_dir = tempfile.mkdtemp(prefix="osl_derived_")
+    # exit-time backstop for callers that can only consume the outputs
+    # LAZILY and never reach cleanup() (contract queries return a
+    # DataFrame reading this dir; the harness collects it after the
+    # query callable is long gone) — without it every sweep leaks one
+    # derived-parquet dir per pipeline-backed query (observed: 500+
+    # orphans). cleanup() still removes it eagerly and retires the
+    # registry entry, so a long-lived process does not accumulate
+    # dead callbacks.
+    _register_spill_dir(spill_dir)
+    derived.write.mode("overwrite").parquet(spill_dir)
+    # the spill copy is durable: the sharded rounds' caches are not needed
+    for cached in round_caches:
+        cached.unpersist()
+    # explicit schema: an empty input writes no part files, and the
+    # schema must survive that
+    derived = spark.read.schema(extract._DERIVED_SCHEMA).parquet(spill_dir)
 
     # ---- lazy plans (built on first PipelineResult access) --------------
     # Every output's logical plan is constructed on demand: driver-side
@@ -537,5 +491,4 @@ def run_pipeline(
         applicable_defs_fn=_applicable_defs,
         rewritten_fn=lambda: _rewritten_turns(derived, _linked()),
         spill_dir=spill_dir,
-        extra_persists=shard_persists,
     )

@@ -1505,8 +1505,9 @@ def ensure_fetch_fixture(sf_dir: str) -> str:
     temp sibling and ``os.rename``-s the whole directory into place —
     never a truncate-rewrite of a file a concurrent run's executors may
     already be reading; the creator that loses the rename race discards
-    its temp build. The parquet read is one 2-column scan of the gate
-    table — cheap at contract scale."""
+    its temp build, and any other rename failure is raised. The parquet
+    read is one 2-column scan of the gate table — cheap at contract
+    scale."""
     import hashlib
     import os
     import shutil
@@ -1540,7 +1541,11 @@ def ensure_fetch_fixture(sf_dir: str) -> str:
     try:
         os.rename(tmp, d)
     except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs is ours
+        shutil.rmtree(tmp, ignore_errors=True)
+        # only a rival's completed publish is a lost race (theirs is ours);
+        # any other failure (EXDEV, EACCES, ...) must surface here
+        if not os.path.exists(os.path.join(d, "_SUCCESS")):
+            raise
     return d
 
 

@@ -98,15 +98,14 @@ def dedup_stream(
     stream: DataFrame,
     watermark: str = "1 hour",
     ts_col: str = "ts",
-    subset: list[str] | None = None,
 ) -> DataFrame:
     """Watermarked STREAMING dedup — exactly-once landing of an
-    at-least-once feed (replayed files, redelivered messages). State is
+    at-least-once feed (replayed files, redelivered messages). Dedups on
+    ALL columns, so the dedup key always includes ``ts_col`` and state is
     bounded by the watermark: keys older than ``watermark`` behind the
     max event time are evicted, and a replay arriving later than that is
     dropped outright — for a dedup, dropping the late copy IS the
-    desired outcome (the original already landed). ``subset=None``
-    dedups on ALL columns, which also makes the kept row deterministic
-    whenever duplicates are byte-identical."""
-    d = stream.withWatermark(ts_col, watermark)
-    return d.dropDuplicates(subset) if subset else d.dropDuplicates()
+    desired outcome (the original already landed). Whole-row keys also
+    make the kept row deterministic whenever duplicates are
+    byte-identical."""
+    return stream.withWatermark(ts_col, watermark).dropDuplicates()

@@ -1,10 +1,11 @@
-"""The two derive engines — declarative window cascade vs streaming
-stack-machine kernel — must produce identical derived frames and identical
-triples on every input (duplicates, hot-conversation skew, dirty text)."""
+"""The derive engine against the pure-Python oracle (the reference spec):
+per-turn text, nodes and triples must be exactly equal on every input
+(duplicates, hot-conversation skew, dirty text); the sharded skew path must
+be bit-identical to the single-task kernel."""
 
 from __future__ import annotations
 
-from open_source_legislation_spark import schemas, synth
+from open_source_legislation_spark import oracle, schemas, synth
 from open_source_legislation_spark.plans.pipeline import run_pipeline
 
 _COLS = [
@@ -21,36 +22,49 @@ _COLS = [
     "current_node",
     "in_defs_scope",
 ]
+_TURN_COLS = ["conv_id", "turn_idx", "clean_text"]
+_NODE_COLS = ["node_id", "level_classifier", "parent", "status"]
+_TRIPLE_COLS = ["subj", "pred", "obj"]
 
 
-def _frames(spark, entity_dict_df, pdf):
+def _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf):
+    """Exact equality with the oracle on per-turn ``(conv_id, turn_idx,
+    clean_text)``, nodes ``(node_id, level_classifier, parent, status)`` and
+    the ``(subj, pred, obj)`` triple set."""
     tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    out = {}
-    for eng in ("stream", "windows"):
-        res = run_pipeline(spark, tdf, entity_dict_df, engine=eng)
-        out[eng] = (
-            set(map(tuple, res.turns.select(*_COLS).collect())),
-            set(map(tuple, res.triples.select("subj", "pred", "obj").collect())),
-        )
+    res = run_pipeline(spark, tdf, entity_dict_df)
+    try:
+        turns = [tuple(r) for r in res.turns.select(*_TURN_COLS).collect()]
+        nodes = {tuple(r) for r in res.nodes.select(*_NODE_COLS).collect()}
+        triples = {tuple(r) for r in res.triples.select(*_TRIPLE_COLS).collect()}
+    finally:
         res.cleanup()
-    return out
+    o = oracle.run_oracle(pdf, entity_dict_pd)
+    exp_turns = set(o["turns"][_TURN_COLS].itertuples(index=False, name=None))
+    exp_nodes = {
+        (n, lvl, None if par != par else par, st)  # NaN parent → None
+        for n, lvl, par, st in o["nodes"][_NODE_COLS].itertuples(
+            index=False, name=None
+        )
+    }
+    exp_triples = set(o["triples"][_TRIPLE_COLS].itertuples(index=False, name=None))
+    assert len(turns) == len(set(turns))  # one row per (conv_id, turn_idx)
+    assert set(turns) == exp_turns
+    assert nodes == exp_nodes
+    assert triples == exp_triples
+    assert triples  # non-empty
 
 
-def test_engines_equivalent_base(spark, entity_dict_df):
+def test_engines_equivalent_base(spark, entity_dict_df, entity_dict_pd):
     pdf = synth.make_transcripts(seed=13, n_turns_target=900)
-    out = _frames(spark, entity_dict_df, pdf)
-    assert out["stream"][0] == out["windows"][0]
-    assert out["stream"][1] == out["windows"][1]
-    assert out["stream"][1]  # non-empty
+    _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
 
 
-def test_engines_equivalent_skewed_dups(spark, entity_dict_df):
+def test_engines_equivalent_skewed_dups(spark, entity_dict_df, entity_dict_pd):
     pdf = synth.make_transcripts(
         seed=99, n_turns_target=1500, hot_fraction=0.35, dup_fraction=0.08
     )
-    out = _frames(spark, entity_dict_df, pdf)
-    assert out["stream"][0] == out["windows"][0]
-    assert out["stream"][1] == out["windows"][1]
+    _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
 
 
 def test_sharded_engine_equivalent_on_giant_conv(spark, entity_dict_df):
@@ -58,8 +72,6 @@ def test_sharded_engine_equivalent_on_giant_conv(spark, entity_dict_df):
     engine — shards in different tasks, boundary state (stack, id counts,
     open node, defs scope, ordinals) stitched across rounds — must be
     bit-identical to the single-task kernel."""
-    from pyspark.sql import functions as F
-
     from open_source_legislation_spark.operators import extract
 
     # 45% of all turns in one conversation, duplicates included, with a
@@ -81,10 +93,13 @@ def test_sharded_engine_equivalent_on_giant_conv(spark, entity_dict_df):
                 .collect(),
             )
         )
-        sharded_df = extract.derive_nodes_sharded(
+        sharded_df, round_caches = extract.derive_nodes_sharded(
             tdf, shard_turns=60, num_partitions=4
         )
         sharded = set(map(tuple, sharded_df.select(*_COLS).collect()))
+        assert len(round_caches) >= 2  # one cache per round, caller-owned
+        for cached in round_caches:
+            cached.unpersist()
     finally:
         spark.conf.set(key, old)
     assert sharded == base
@@ -105,14 +120,11 @@ def test_sharded_engine_noop_below_knob(spark, entity_dict_df):
     base = set(
         map(tuple, extract.derive_nodes_stream(tdf).select(*_COLS).collect())
     )
-    sharded = set(
-        map(
-            tuple,
-            extract.derive_nodes_sharded(tdf, shard_turns=10_000_000)
-            .select(*_COLS)
-            .collect(),
-        )
+    sharded_df, round_caches = extract.derive_nodes_sharded(
+        tdf, shard_turns=10_000_000
     )
+    assert round_caches == []
+    sharded = set(map(tuple, sharded_df.select(*_COLS).collect()))
     assert sharded == base
 
 
@@ -129,9 +141,7 @@ def test_stream_engine_partitioning_invariant(spark, entity_dict_df):
     try:
         base = None
         for nparts in (1, 3, 16):
-            res = run_pipeline(
-                spark, tdf, entity_dict_df, num_partitions=nparts, engine="stream"
-            )
+            res = run_pipeline(spark, tdf, entity_dict_df, num_partitions=nparts)
             got = set(
                 map(tuple, res.triples.select("subj", "pred", "obj").collect())
             )

@@ -5,10 +5,15 @@ urllib serves file:// through the same code path as https://)."""
 
 from __future__ import annotations
 
+import errno
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from open_source_legislation_spark import queries
 from open_source_legislation_spark.sources import fetch
 
 
@@ -81,3 +86,36 @@ def test_fetch_feeds_the_parse_layer(spark, tmp_path):
     got = sorted(r.item for r in items.collect())
     assert got == ["title=1 Alpha", "title=2 Beta"]
     assert os.path.exists(p)
+
+
+def test_fixture_publish_raises_unless_a_rival_published(tmp_path, monkeypatch):
+    """``ensure_fetch_fixture`` publishes by ``os.rename``: a failed rename
+    is a lost race only when a rival's complete fixture sits at the
+    destination; any other failure (here EXDEV) must raise, not return a
+    directory that does not exist."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": [1, 2, 4], "text": ["one", "two", "four"]}),
+        str(sf / "documents.parquet"),
+    )
+    dest = tmp_path / "fixture"
+    monkeypatch.setattr(queries, "_fetch_fixture_dir", lambda sf_dir, digest: str(dest))
+
+    def cross_device(src, dst):
+        raise OSError(errno.EXDEV, "Invalid cross-device link")
+
+    monkeypatch.setattr(os, "rename", cross_device)
+    with pytest.raises(OSError):
+        queries.ensure_fetch_fixture(str(sf))
+    assert not dest.exists()
+    assert list(tmp_path.glob("fixture.build-*")) == []  # temp build discarded
+
+    def rival_wins(src, dst):
+        os.makedirs(dst)
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+        raise OSError(errno.ENOTEMPTY, "Directory not empty")
+
+    monkeypatch.setattr(os, "rename", rival_wins)
+    assert queries.ensure_fetch_fixture(str(sf)) == str(dest)
+    assert list(tmp_path.glob("fixture.build-*")) == []

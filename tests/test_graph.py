@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from open_source_legislation_spark.operators import extract, graph, reassembly
+from open_source_legislation_spark.operators import extract, graph
 from open_source_legislation_spark.plans.pipeline import run_pipeline
 
 
@@ -79,7 +79,7 @@ def test_version_suffix_determinism(spark, entity_dict_df):
     from open_source_legislation_spark import schemas
 
     tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    derived = extract.derive_nodes(reassembly.ordered_turns(tdf))
+    derived = extract.derive_nodes_stream(tdf)
     ids = [r["node_id"] for r in derived.orderBy("turn_idx").collect()]
     assert ids == [
         "conv=c1/section=1.1",

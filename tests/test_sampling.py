@@ -252,6 +252,10 @@ def test_stratified_sample_rejects_lossy_and_colliding_keys(spark):
     docs = spark.createDataFrame([(1, 2020)], "doc_id long, yr long")
     with pytest.raises(ValueError, match="losslessly"):
         sampling.stratified_sample(docs, "yr", {2020.5: 10000})
+    # 2**53 + 1 has no double: float() would silently rate 2**53's stratum
+    fdocs = spark.createDataFrame([(1, float(2**53))], "doc_id long, yr double")
+    with pytest.raises(ValueError, match="losslessly"):
+        sampling.stratified_sample(fdocs, "yr", {2**53 + 1: 10000})
     sdocs = spark.createDataFrame([(1, "2020")], "doc_id long, yr string")
     with pytest.raises(ValueError, match="collide"):
         sampling.stratified_sample(sdocs, "yr", {2020: 10000, "2020": 5000})
