@@ -8,7 +8,9 @@ as one derive engine, :func:`derive_nodes_stream`:
 - a stateless **Arrow-batched payload UDF** (``turn_payload_udf``) runs
   every regex kernel BEFORE the ``conv_id`` shuffle — shared with the
   oracle via ``rules.py`` (no drift), balanced across scan partitions and
-  immune to hot-conversation skew;
+  immune to hot-conversation skew. It also resolves each incorporated
+  definition's citation to its raw key, so linking after the spill is
+  JVM-only;
 - a vectorized ``mapInArrow`` state pass over the ``hash(conv_id)``-
   partitioned, sorted turns does dedup/ordinals/parent-stack/scope fills
   at ~µs/row (:func:`derive_nodes_sharded` splits a pathologically long
@@ -50,18 +52,28 @@ _DEFS_TYPE = T.ArrayType(
             T.StructField("kind", T.StringType()),
             T.StructField("incorporated_from", T.StringType()),
             T.StructField("parent_term", T.StringType()),
+            T.StructField("incorporated_key", T.StringType()),
         ]
     )
 )
 
 
 def _def_tuple(d: dict) -> tuple:
+    """One ``_DEFS_TYPE`` row. ``incorporated_key`` is the raw key of the
+    first mention inside an incorporated definition's citation (the key
+    ``pipeline.link_incorporated`` links), else null."""
+    hits = (
+        rules.extract_mentions(d["incorporated_from"])
+        if d["kind"] == "incorporated"
+        else []
+    )
     return (
         d["term"],
         d["definition"],
         d["kind"],
         d["incorporated_from"],
         d["parent_term"],
+        hits[0]["raw_key"] if hits else None,
     )
 
 
@@ -71,17 +83,6 @@ _EXTRACTIONS_TYPE = T.StructType(
         T.StructField("defs", _DEFS_TYPE),
     ]
 )
-
-
-@pandas_udf(_MENTIONS_TYPE)
-def mentions_udf(texts: pd.Series) -> pd.Series:
-    """Mention extraction (reference scrapeECFR.py:1112-1172) per batch."""
-    return texts.map(
-        lambda t: [
-            (m["mention_text"], m["corpus"], m["raw_key"], m["start"])
-            for m in rules.extract_mentions(t)
-        ]
-    )
 
 
 _DERIVED_SCHEMA = T.StructType(
@@ -687,57 +688,34 @@ def node_text_agg(
     )
 
 
+def _explode_extractions(derived: DataFrame, field: str) -> DataFrame:
+    """One row per ``extractions.<field>`` entry of the non-node turns:
+    ``conv_id, turn_idx, current_node`` plus the entry's struct fields."""
+    return derived.filter(F.col("node_id").isNull()).select(
+        "conv_id",
+        "turn_idx",
+        "current_node",
+        F.inline(f"extractions.{field}"),
+    )
+
+
 def extract_mentions(derived: DataFrame) -> DataFrame:
     """Explode citation/URL mentions from non-node turns.
 
     One row per mention: ``conv_id, turn_idx, current_node, mention_text,
-    corpus, raw_key`` (reference Reference rows, pydanticModels.py:169-189).
+    corpus, raw_key, start`` (reference Reference rows,
+    pydanticModels.py:169-189).
     """
-    return (
-        derived.filter(F.col("node_id").isNull())
-        .select(
-            "conv_id",
-            "turn_idx",
-            "current_node",
-            F.explode("extractions.mentions").alias("m"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "current_node",
-            F.col("m.mention_text").alias("mention_text"),
-            F.col("m.corpus").alias("corpus"),
-            F.col("m.raw_key").alias("raw_key"),
-            F.col("m.start").alias("start"),
-        )
-    )
+    return _explode_extractions(derived, "mentions")
 
 
 def extract_definitions(derived: DataFrame) -> DataFrame:
     """Explode definitions from non-node turns.
 
     One row per definition: ``conv_id, turn_idx, current_node, term,
-    definition, kind, incorporated_from, term_id``.
+    definition, kind, incorporated_from, parent_term, incorporated_key,
+    term_id``.
     """
-    return (
-        derived.filter(F.col("node_id").isNull())
-        .select(
-            "conv_id",
-            "turn_idx",
-            "current_node",
-            F.explode("extractions.defs").alias("d"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "current_node",
-            F.col("d.term").alias("term"),
-            F.col("d.definition").alias("definition"),
-            F.col("d.kind").alias("kind"),
-            F.col("d.incorporated_from").alias("incorporated_from"),
-            F.col("d.parent_term").alias("parent_term"),
-            F.concat(F.col("current_node"), F.lit("/term="), F.col("d.term")).alias(
-                "term_id"
-            ),
-        )
+    return _explode_extractions(derived, "defs").withColumn(
+        "term_id", F.concat(F.col("current_node"), F.lit("/term="), F.col("term"))
     )

@@ -4,10 +4,12 @@ Replaces the reference's per-row linking lookups (``analyze_partial_link``,
 reference ``pydanticModels.py:555-636``: repeated ``SELECT ... ILIKE`` with
 pop-level / zero-pad backoff — an N+1-query correlated lookup) with:
 
-1. a scalar pandas UDF generating the *ranked candidate keys* per mention
-   (exact → zero-padded → popped level, shared with the oracle via
-   ``rules.candidate_keys``); at most ONE candidate exists per priority, so
-   the ladder is three nullable key columns, not an exploded array;
+1. a JVM ``regexp_extract`` / ``lpad`` expression generating the *ranked
+   candidate keys* per mention (exact → zero-padded → popped level, the
+   ``rules.candidate_keys`` spec the oracle uses, pinned equal by a
+   property test); at most ONE candidate exists per priority, so the ladder
+   is three nullable key columns, not an exploded array — and no row
+   crosses into Python;
 2. one **broadcast hash join per rung** against the alias-exploded canonical
    dictionary — three map-side joins, zero shuffles;
 3. ``coalesce`` in priority order picks the highest-priority hit.
@@ -21,42 +23,36 @@ none).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from .. import rules
-
-_CAND3_TYPE = T.StructType(
-    [
-        T.StructField("k1", T.StringType()),
-        T.StructField("k2", T.StringType()),
-        T.StructField("k3", T.StringType()),
-    ]
-)
+# ``head/cls=num`` with the split at the LAST slash and the first ``=`` of
+# the last level; ``(?s)`` and ``\z`` because Java's ``.`` skips ``\n`` and
+# its ``$`` also matches before a trailing line terminator.
+_LAST_LEVEL = r"(?s)^(.*)/([^/=]*)=([^/]*)\z"
+# a paddable ``num``: 1-2 ASCII digits, optionally followed by ``.<rest>``
+_PADDABLE = r"(?s)^([0-9]{1,2})((?:\..*)?)\z"
 
 
-@pandas_udf(_CAND3_TYPE)
-def candidate_keys3_udf(raw_keys: pd.Series) -> pd.DataFrame:
-    """The ladder as three nullable columns (priority 1/2/3) — same
-    ``rules.candidate_keys`` spec, join-friendly shape."""
-
-    def three(k):
-        out = {1: None, 2: None, 3: None}
-        if k is not None:
-            for p, key in rules.candidate_keys(k):
-                out[p] = key
-        return out
-
-    cols = raw_keys.map(three)
-    return pd.DataFrame(
-        {
-            "k1": cols.map(lambda d: d[1]),
-            "k2": cols.map(lambda d: d[2]),
-            "k3": cols.map(lambda d: d[3]),
-        }
+def _candidate_keys(raw_key: Column) -> Column:
+    """The ``rules.candidate_keys`` ladder as a JVM ``struct<k1,k2,k3>``
+    (priority 1/2/3, each nullable): exact, zero-padded last number,
+    popped last level."""
+    head = F.regexp_extract(raw_key, _LAST_LEVEL, 1)
+    num = F.regexp_extract(raw_key, _LAST_LEVEL, 3)
+    padded = F.concat(
+        head,
+        F.lit("/"),
+        F.regexp_extract(raw_key, _LAST_LEVEL, 2),
+        F.lit("="),
+        F.lpad(F.regexp_extract(num, _PADDABLE, 1), 3, "0"),
+        F.regexp_extract(num, _PADDABLE, 2),
+    )
+    return F.struct(
+        raw_key.alias("k1"),
+        # num is "" when the key has no last level, so k2 stays null
+        F.when(num.rlike(_PADDABLE), padded).alias("k2"),
+        F.when(raw_key.rlike(_LAST_LEVEL), head).alias("k3"),
     )
 
 
@@ -175,7 +171,7 @@ def link_mentions(
         raise ValueError(f"link_mentions: unknown strategy {strategy!r}")
     idx = alias_index(entity_dict)
     orig = mentions.columns
-    out = mentions.withColumn("_c", candidate_keys3_udf("raw_key"))
+    out = mentions.withColumn("_c", _candidate_keys(F.col("raw_key")))
     if strategy == "auto":
         est = _estimated_bytes(idx)
         # No size estimate (Spark Connect / API drift) must fail SAFE: an

@@ -8,6 +8,11 @@ One declarative DataFrame plan per the SURVEY §3.2 lifecycle:
     parquet spill → explode → broadcast candidate-ladder join →
     alias CC loop → triples/nodes/edges materialization.
 
+Python runs only before the spill (the two Arrow kernels) and in the
+nodes enrichment (``enrich.node_enrich_udf``): the linking ladder is a JVM
+expression and the incorporated definitions' raw keys come out of the
+payload kernel, so the triples plan after the spill is JVM-only.
+
 The reference runs this as a per-document Python loop with one Postgres
 round-trip per node (``2_scrape_regular.py:33-146``); here the whole corpus
 is one DAG with exactly one wide exchange on ``conv_id`` for the stateful
@@ -16,7 +21,7 @@ stages plus the small linking/CC shuffles.
 
 from __future__ import annotations
 
-from typing import Callable
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,72 +64,178 @@ def _register_spill_dir(d: str) -> None:
 
 
 class PipelineResult:
-    """Pipeline outputs. ``turns`` (the materialized derived frame) is
-    eager; every other output's logical plan is built lazily on first
-    attribute access — plan construction costs ~2 s of driver-side Py4J
+    """Pipeline outputs. ``turns`` (the spilled derived frame) is eager;
+    every other output's logical plan is built on first attribute access
+    and cached — plan construction costs ~2 s of driver-side Py4J
     round-trips at 500k turns, and no consumer touches every output (the
     bench headline and streaming micro-batches read only ``triples``; the
-    checkpoint runner's nodes write never needs ``rewritten``). Lazy
-    construction changes WHEN a plan is built, never what it computes."""
+    checkpoint runner's nodes write never needs ``rewritten``). The shared
+    intermediates (linked incorporated definitions, addenda, the node
+    projection and the cites edges) are cached the same way, so all outputs
+    agree. Lazy construction changes WHEN a plan is built, never what it
+    computes."""
 
     def __init__(
         self,
         *,
-        turns: DataFrame,
-        mentions_fn: Callable[[], DataFrame],
-        definitions_fn: Callable[[], DataFrame],
-        triples_fn: Callable[[], DataFrame],
-        nodes_fn: Callable[[], DataFrame],
-        edges_fn: Callable[[], DataFrame],
-        applicable_defs_fn: Callable[[], DataFrame],
-        rewritten_fn: Callable[[], DataFrame],
+        derived: DataFrame,
+        entity_dict: DataFrame,
+        alias_edges: DataFrame | None,
+        canonicalize_triples: bool,
         spill_dir: str,
     ) -> None:
-        self.turns = turns
-        self._fns = {
-            "mentions": mentions_fn,
-            "definitions": definitions_fn,
-            "triples": triples_fn,
-            "nodes": nodes_fn,
-            "edges": edges_fn,
-            "applicable_defs": applicable_defs_fn,
-            "rewritten": rewritten_fn,
-        }
-        self._cache: dict[str, DataFrame] = {}
+        self.turns = derived
+        self._entity_dict = entity_dict
+        self._alias_edges = alias_edges
+        self._canonicalize_triples = canonicalize_triples
         self.spill_dir = spill_dir
 
-    def _lazy(self, key: str) -> DataFrame:
-        if key not in self._cache:
-            self._cache[key] = self._fns[key]()
-        return self._cache[key]
-
-    @property
+    @cached_property
     def mentions(self) -> DataFrame:
-        return self._lazy("mentions")
+        return linking.link_mentions(
+            extract.extract_mentions(self.turns), self._entity_dict
+        )
 
-    @property
+    @cached_property
     def definitions(self) -> DataFrame:
-        return self._lazy("definitions")
+        return extract.extract_definitions(self.turns)
 
-    @property
+    @cached_property
+    def _linked_incorp(self) -> DataFrame:
+        return link_incorporated(self.definitions, self._entity_dict)
+
+    @cached_property
+    def _addenda(self) -> DataFrame:
+        """Last source/history trailer per node (reference
+        extract_addendum, scrapeECFR.py:867-992): pure groupBy + max_by on
+        the per-conv ordinal — one partial-aggregated exchange on
+        current_node, no window."""
+        return (
+            self.turns.filter(
+                F.col("node_id").isNull()
+                & F.col("clean_text").rlike(rules.ADDENDUM_PATTERN)
+            )
+            .groupBy("current_node")
+            .agg(
+                F.max_by(
+                    F.struct(
+                        F.col("clean_text").alias("text"),
+                        F.col("conv_id").alias("conv_id"),
+                        F.col("turn_idx").alias("turn_idx"),
+                    ),
+                    F.col("ord"),
+                ).alias("a")
+            )
+            .select(
+                "current_node",
+                F.col("a.text").alias("node_addendum"),
+                F.col("a.conv_id").alias("conv_id"),
+                F.col("a.turn_idx").alias("turn_idx"),
+            )
+        )
+
+    @cached_property
+    def _rel_src(self) -> DataFrame:
+        # cheap projection of the node rows: everything keyed off hierarchy
+        # shape (children/siblings/edges/defscope) reads THIS, not the
+        # enriched frame — otherwise each relationship join would
+        # re-evaluate the node_text / embedding subtree (measured: the
+        # nodes write goes from minutes to seconds at 500k turns)
+        return extract.nodes_table(self.turns).select("node_id", "parent", "turn_idx")
+
+    @cached_property
+    def _cites(self) -> DataFrame:
+        return graph.cites_edges(self.mentions)
+
+    @cached_property
     def triples(self) -> DataFrame:
-        return self._lazy("triples")
+        addendum_triples = self._addenda.select(
+            F.col("current_node").alias("subj"),
+            F.lit("addendum").alias("pred"),
+            F.col("node_addendum").alias("obj"),
+            "conv_id",
+            "turn_idx",
+        )
+        triples = (
+            _node_triples(self.turns)
+            .unionByName(_mention_triples(self.mentions))
+            .unionByName(_definition_triples(self.definitions, self._linked_incorp))
+            .unionByName(addendum_triples)
+        )
+        if self._alias_edges is not None:
+            labels = canonicalize.connected_components(self._alias_edges)
+            triples = triples.unionByName(canonicalize.alias_of_triples(labels))
+            if self._canonicalize_triples:
+                triples = canonicalize.rewrite_to_canonical(triples, labels)
+        return triples
 
-    @property
+    @cached_property
     def nodes(self) -> DataFrame:
-        return self._lazy("nodes")
+        # nodes enriched with the reference's per-node payloads: addendum
+        # (broadcast join — addenda ≪ nodes), the full per-node document
+        # text (NodeText.to_list_text, pydanticModels.py:290-296 — ordered
+        # content turns under the node, addendum peeled), BPE-ish token
+        # count (scrapeECFR.py:359-360,1003-1007) and the phase-3 hash
+        # embedding (3_process.py:18-36) — token/embedding expressions run
+        # over the FULL node text (falling back to the marker heading for
+        # childless nodes)
+        node_texts = extract.node_text_agg(self.turns, addenda=self._addenda)
+        full_text = F.coalesce(F.col("node_text"), F.col("text"))
+        nodes = (
+            extract.nodes_table(self.turns)
+            .join(
+                F.broadcast(self._addenda.select(
+                    F.col("current_node").alias("node_id"), "node_addendum"
+                )),
+                "node_id",
+                "left",
+            )
+            .join(node_texts, "node_id", "left")
+            .withColumn(
+                # ONE fused Arrow pass over the long full-text column for
+                # BOTH n_tokens and the embedding — NOT hash_embed_expr
+                # (the interpreted HOF re-evaluates its md5 subtree per
+                # output dim, 20x slower) and not a separate JVM
+                # split-to-array count (ships/allocates the text twice);
+                # see enrich.node_enrich_udf docstring
+                "_enr",
+                enrich.node_enrich_udf(dim=16)(full_text, F.col("name")),
+            )
+            .withColumn("n_tokens", F.col("_enr.n_tokens"))
+            .withColumn("embedding", F.col("_enr.embedding"))
+            # multi-vector retrieval payload (reference carries
+            # text/name/summary/hyde vectors per node, scrapeMI.py:79-83;
+            # summary here is the documented extractive stand-in)
+            .withColumn("name_embedding", F.col("_enr.name_embedding"))
+            .withColumn("summary", F.col("_enr.summary"))
+            .drop("_enr")
+        )
+        # phase-3 relationship columns onto the nodes rows (reference
+        # writes node_direct_children / node_siblings /
+        # node_incoming_references in the post-scrape update,
+        # CLAUDE.md:171-174, scrapeMI.py:85-88) — node_id-keyed joins over
+        # the nodes frame (≪ turns; AQE picks the join strategy)
+        return (
+            nodes.join(graph.children_agg(self._rel_src), "node_id", "left")
+            .join(graph.siblings_agg(self._rel_src), "node_id", "left")
+            .join(graph.incoming_references(self._cites), "node_id", "left")
+        )
 
-    @property
+    @cached_property
     def edges(self) -> DataFrame:
-        return self._lazy("edges")
+        return graph.hierarchy_edges(self._rel_src).unionByName(self._cites)
 
-    @property
+    @cached_property
     def applicable_defs(self) -> DataFrame:
-        return self._lazy("applicable_defs")
+        # definition-scope closure (reference fetch_definitions ancestor
+        # walk, pydanticModels.py:654-757): node → the terms that apply
+        return defscope.applicable_definitions(
+            self._rel_src, self.definitions, incorporated=self._linked_incorp
+        )
 
-    @property
+    @cached_property
     def rewritten(self) -> DataFrame:
-        return self._lazy("rewritten")
+        return _rewritten_turns(self.turns, self.mentions)
 
     def cleanup(self) -> None:
         """Delete the derived-frame spill directory. Call after the outputs
@@ -202,34 +313,6 @@ def _node_triples(derived: DataFrame) -> DataFrame:
     )
 
 
-def _addenda(derived: DataFrame) -> DataFrame:
-    """Last source/history trailer per node (reference extract_addendum,
-    scrapeECFR.py:867-992): pure groupBy + max_by on the per-conv ordinal —
-    one partial-aggregated exchange on current_node, no window."""
-    return (
-        derived.filter(
-            F.col("node_id").isNull() & F.col("clean_text").rlike(rules.ADDENDUM_PATTERN)
-        )
-        .groupBy("current_node")
-        .agg(
-            F.max_by(
-                F.struct(
-                    F.col("clean_text").alias("text"),
-                    F.col("conv_id").alias("conv_id"),
-                    F.col("turn_idx").alias("turn_idx"),
-                ),
-                F.col("ord"),
-            ).alias("a")
-        )
-        .select(
-            "current_node",
-            F.col("a.text").alias("node_addendum"),
-            F.col("a.conv_id").alias("conv_id"),
-            F.col("a.turn_idx").alias("turn_idx"),
-        )
-    )
-
-
 def _rewritten_turns(derived: DataFrame, linked: DataFrame) -> DataFrame:
     """Per-turn text with linked mentions replaced by ``[*entity_id*]``
     placeholders (reference scrapeECFR.py:1135-1146) — position-based
@@ -284,11 +367,11 @@ def _rewritten_turns(derived: DataFrame, linked: DataFrame) -> DataFrame:
 
 
 def link_incorporated(defs: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Link the citation inside 'as defined in <citation>' — first mention
-    of the incorporated_from text through the same candidate ladder."""
-    incorp = defs.filter(F.col("kind") == "incorporated").withColumn(
-        "raw_key",
-        F.try_element_at(extract.mentions_udf("incorporated_from"), F.lit(1))["raw_key"],
+    """Link the citation inside 'as defined in <citation>': the raw key of
+    its first mention (``incorporated_key``, taken by the pre-shuffle
+    payload kernel) through the same JVM candidate ladder."""
+    incorp = defs.filter(F.col("kind") == "incorporated").withColumnRenamed(
+        "incorporated_key", "raw_key"
     )
     return linking.link_mentions(incorp, entity_dict)
 
@@ -349,146 +432,10 @@ def run_pipeline(
     # schema must survive that
     derived = spark.read.schema(extract._DERIVED_SCHEMA).parquet(spill_dir)
 
-    # ---- lazy plans (built on first PipelineResult access) --------------
-    # Every output's logical plan is constructed on demand: driver-side
-    # plan building costs ~2 s of Py4J round-trips at 500k turns, and no
-    # consumer touches every output (the bench headline and streaming
-    # micro-batches read triples only; the checkpoint runner's nodes write
-    # never needs the rewritten-turns plan). Shared intermediates are
-    # memoized so all outputs agree. Lazy construction changes WHEN a plan
-    # is built, never what it computes.
-    shared: dict[str, DataFrame] = {}
-
-    def _memo(key: str, fn) -> DataFrame:
-        if key not in shared:
-            shared[key] = fn()
-        return shared[key]
-
-    def _linked() -> DataFrame:
-        return _memo(
-            "linked",
-            lambda: linking.link_mentions(
-                extract.extract_mentions(derived), entity_dict
-            ),
-        )
-
-    def _defs() -> DataFrame:
-        return _memo("defs", lambda: extract.extract_definitions(derived))
-
-    def _linked_incorp() -> DataFrame:
-        return _memo(
-            "linked_incorp", lambda: link_incorporated(_defs(), entity_dict)
-        )
-
-    def _addenda_f() -> DataFrame:
-        return _memo("addenda", lambda: _addenda(derived))
-
-    def _triples() -> DataFrame:
-        addendum_triples = _addenda_f().select(
-            F.col("current_node").alias("subj"),
-            F.lit("addendum").alias("pred"),
-            F.col("node_addendum").alias("obj"),
-            "conv_id",
-            "turn_idx",
-        )
-        triples = (
-            _node_triples(derived)
-            .unionByName(_mention_triples(_linked()))
-            .unionByName(_definition_triples(_defs(), _linked_incorp()))
-            .unionByName(addendum_triples)
-        )
-        if alias_edges is not None:
-            labels = canonicalize.connected_components(alias_edges)
-            triples = triples.unionByName(canonicalize.alias_of_triples(labels))
-            if canonicalize_triples:
-                triples = canonicalize.rewrite_to_canonical(triples, labels)
-        return triples
-
-    def _rel_src() -> DataFrame:
-        # cheap projection of the node rows: everything keyed off hierarchy
-        # shape (children/siblings/edges/defscope) reads THIS, not the
-        # enriched frame — otherwise each relationship join would
-        # re-evaluate the node_text / embedding subtree (measured: the
-        # nodes write goes from minutes to seconds at 500k turns)
-        return _memo(
-            "rel_src",
-            lambda: extract.nodes_table(derived).select(
-                "node_id", "parent", "turn_idx"
-            ),
-        )
-
-    def _cites() -> DataFrame:
-        return _memo("cites", lambda: graph.cites_edges(_linked()))
-
-    def _nodes() -> DataFrame:
-        # nodes enriched with the reference's per-node payloads: addendum
-        # (broadcast join — addenda ≪ nodes), the full per-node document
-        # text (NodeText.to_list_text, pydanticModels.py:290-296 — ordered
-        # content turns under the node, addendum peeled), BPE-ish token
-        # count (scrapeECFR.py:359-360,1003-1007) and the phase-3 hash
-        # embedding (3_process.py:18-36) — token/embedding expressions run
-        # over the FULL node text (falling back to the marker heading for
-        # childless nodes)
-        node_texts = extract.node_text_agg(derived, addenda=_addenda_f())
-        full_text = F.coalesce(F.col("node_text"), F.col("text"))
-        nodes = (
-            extract.nodes_table(derived)
-            .join(
-                F.broadcast(_addenda_f().select(
-                    F.col("current_node").alias("node_id"), "node_addendum"
-                )),
-                "node_id",
-                "left",
-            )
-            .join(node_texts, "node_id", "left")
-            .withColumn(
-                # ONE fused Arrow pass over the long full-text column for
-                # BOTH n_tokens and the embedding — NOT hash_embed_expr
-                # (the interpreted HOF re-evaluates its md5 subtree per
-                # output dim, 20x slower) and not a separate JVM
-                # split-to-array count (ships/allocates the text twice);
-                # see enrich.node_enrich_udf docstring
-                "_enr",
-                enrich.node_enrich_udf(dim=16)(full_text, F.col("name")),
-            )
-            .withColumn("n_tokens", F.col("_enr.n_tokens"))
-            .withColumn("embedding", F.col("_enr.embedding"))
-            # multi-vector retrieval payload (reference carries
-            # text/name/summary/hyde vectors per node, scrapeMI.py:79-83;
-            # summary here is the documented extractive stand-in)
-            .withColumn("name_embedding", F.col("_enr.name_embedding"))
-            .withColumn("summary", F.col("_enr.summary"))
-            .drop("_enr")
-        )
-        # phase-3 relationship columns onto the nodes rows (reference
-        # writes node_direct_children / node_siblings /
-        # node_incoming_references in the post-scrape update,
-        # CLAUDE.md:171-174, scrapeMI.py:85-88) — node_id-keyed joins over
-        # the nodes frame (≪ turns; AQE picks the join strategy)
-        return (
-            nodes.join(graph.children_agg(_rel_src()), "node_id", "left")
-            .join(graph.siblings_agg(_rel_src()), "node_id", "left")
-            .join(graph.incoming_references(_cites()), "node_id", "left")
-        )
-
-    def _edges() -> DataFrame:
-        return graph.hierarchy_edges(_rel_src()).unionByName(_cites())
-
-    def _applicable_defs() -> DataFrame:
-        # definition-scope closure (reference fetch_definitions ancestor
-        # walk, pydanticModels.py:654-757): node → the terms that apply
-        return defscope.applicable_definitions(
-            _rel_src(), _defs(), incorporated=_linked_incorp()
-        )
-
     return PipelineResult(
-        turns=derived,
-        mentions_fn=_linked,
-        definitions_fn=_defs,
-        triples_fn=_triples,
-        nodes_fn=_nodes,
-        edges_fn=_edges,
-        applicable_defs_fn=_applicable_defs,
-        rewritten_fn=lambda: _rewritten_turns(derived, _linked()),
+        derived=derived,
+        entity_dict=entity_dict,
+        alias_edges=alias_edges,
+        canonicalize_triples=canonicalize_triples,
         spill_dir=spill_dir,
     )

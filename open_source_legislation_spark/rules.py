@@ -258,6 +258,9 @@ def extract_mentions(text: str) -> list[dict]:
 # --------------------------------------------------------------------------
 
 
+_RE_PADDABLE = re.compile(r"[0-9]{1,2}")
+
+
 def candidate_keys(raw_key: str) -> list[tuple[int, str]]:
     """Ranked (priority, key) candidates; lower priority wins.
 
@@ -266,13 +269,17 @@ def candidate_keys(raw_key: str) -> list[tuple[int, str]]:
        pydanticModels.py:607-618);
     3. popped last level (reference pops trailing levels on miss,
        pydanticModels.py:595-605).
+
+    Only 1-2 ASCII digits count as a paddable number (``str.isdigit`` would
+    also take ``²`` or ``٣``), so the JVM twin in ``operators.linking`` can
+    share this spec exactly.
     """
     cands: list[tuple[int, str]] = [(1, raw_key)]
     head, sep, last = raw_key.rpartition("/")
     if sep and "=" in last:
         cls, num = last.split("=", 1)
         intpart = num.split(".", 1)[0]
-        if intpart.isdigit() and len(intpart) < 3:
+        if _RE_PADDABLE.fullmatch(intpart):
             padded = num.zfill(len(num) - len(intpart) + 3)
             cands.append((2, f"{head}/{cls}={padded}"))
         cands.append((3, head))

@@ -8,8 +8,10 @@ transcript rows processed with ``Trigger.AvailableNow`` (deterministic,
 terminating — the streaming analog of "process until no pending rows"),
 deduped within a watermark (late/duplicate arrivals — the streaming analog
 of ``dedup_version``), extracted per micro-batch via ``foreachBatch`` reusing
-the exact batch DAG, and appended to the triples sink. State lives in the
-stream checkpoint directory, so a killed stream resumes exactly once.
+the exact batch DAG, and written to the triples sink as one overwritten
+``batch_id=<id>`` directory per micro-batch. State lives in the stream
+checkpoint directory, and a batch replayed after a crash before its commit
+replaces its own output, so a killed stream resumes exactly once.
 """
 
 from __future__ import annotations
@@ -81,8 +83,13 @@ def incremental_extract(
         if batch_df.isEmpty():
             return
         res = run_pipeline(spark, batch_df, entity_dict)
-        res.triples.withColumn("batch_id", res.triples["turn_idx"] * 0 + batch_id) \
-            .write.mode("append").parquet(triples_dir)
+        # one overwritten dir per batch: a batch replayed after a crash
+        # between this write and the commit log replaces its own output
+        # instead of landing twice; reads recover ``batch_id`` by
+        # partition discovery
+        res.triples.write.mode("overwrite").parquet(
+            os.path.join(triples_dir, f"batch_id={batch_id}")
+        )
         res.cleanup()
 
     q = (

@@ -52,3 +52,43 @@ def test_no_cartesian_or_row_python_in_any_registered_plan(spark):
         if hits:
             bad[name] = hits
     assert not bad, f"scale anti-patterns in plans: {bad}"
+
+
+_PYTHON_NODES = {"ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas"}
+
+
+def _python_nodes(df) -> list[str]:
+    """Run ``df`` and name the Python-crossing nodes of its executed plan,
+    descending through the adaptive plan and its query stages."""
+    df.collect()
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        kind = p.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(p.plan())
+            continue
+        if p.nodeName() in _PYTHON_NODES:
+            found.append(p.nodeName())
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_kg_pipeline_has_no_python_after_the_spill(
+    spark, transcripts_df, entity_dict_df
+):
+    """The headline path crosses into Python only before the spill and in
+    the nodes enrichment: the triples plan is JVM-only and the nodes plan
+    runs exactly one Arrow UDF (``enrich.node_enrich_udf``)."""
+    from open_source_legislation_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, transcripts_df, entity_dict_df)
+    try:
+        assert _python_nodes(res.triples) == []
+        assert _python_nodes(res.nodes) == ["ArrowEvalPython"]
+    finally:
+        res.cleanup()

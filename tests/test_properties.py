@@ -137,3 +137,44 @@ def test_sharded_engine_property_equivalence(spark, seed):
         )
         res.cleanup()
     assert outs[0] == outs[1]
+
+
+# Edge cases every example carries; the generated keys add random mixes.
+_LADDER_FIXED = [
+    "a", "a=b", "a/b", "a/b=c=d", "a/b=", "a/", "/b=5", "a/b=5.1", "a/b=5.1.2",
+    "a/b=05", "a/b=123", "a/b=5a", "a/b=.5", "a/b=5\n", "a\n/b=5", "a/b=\n5",
+    "a/b=²", "a/b=٣", "a/b=𝟘", "a/b=①", "é/b=7", None,
+]
+_LADDER_CHARS = st.sampled_from(list("/=.09ab\n") + ["é", "²", "٣", "𝟘"])
+_ladder_key = st.one_of(
+    st.none(),
+    st.text(alphabet=_LADDER_CHARS, max_size=16),
+    st.builds(
+        lambda head, cls, num, tail: f"{head}/{cls}={num}{tail}",
+        st.text(alphabet=_LADDER_CHARS, max_size=8),
+        st.text(alphabet=st.sampled_from("ab\n"), max_size=3),
+        st.integers(0, 12_345).map(str) | st.sampled_from(["", "7", "07"]),
+        st.sampled_from(["", "a", ".2", ".2.3", "=x", "/", "\n", "²", "."]),
+    ),
+)
+
+
+@settings(
+    max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(keys=st.lists(_ladder_key, max_size=60))
+def test_jvm_ladder_matches_rules_spec(spark, keys):
+    """The JVM candidate ladder ``linking._candidate_keys`` equals the
+    ``rules.candidate_keys`` spec the oracle links with, row by row."""
+    from pyspark.sql import functions as F
+
+    from open_source_legislation_spark.operators import linking
+
+    keys = _LADDER_FIXED + keys
+    df = spark.createDataFrame(
+        list(enumerate(keys)), "i int, raw_key string"
+    ).select("i", linking._candidate_keys(F.col("raw_key")).alias("c"))
+    got = {r["i"]: (r["c"]["k1"], r["c"]["k2"], r["c"]["k3"]) for r in df.collect()}
+    for i, k in enumerate(keys):
+        rungs = dict(rules.candidate_keys(k)) if k is not None else {}
+        assert got[i] == (rungs.get(1), rungs.get(2), rungs.get(3)), repr(k)

@@ -68,6 +68,11 @@ def test_candidate_ladder():
     assert (1, "usc/title=5/section=5") in cands
     assert (2, "usc/title=5/section=005") in cands
     assert (3, "usc/title=5") in cands
+    # only 1-2 ASCII digits pad: superscript and Arabic-Indic digits pass
+    # str.isdigit() but get no rung 2 (the JVM ladder shares this spec)
+    assert rules.candidate_keys("a/b=5") == [(1, "a/b=5"), (2, "a/b=005"), (3, "a")]
+    assert rules.candidate_keys("a/b=²") == [(1, "a/b=²"), (3, "a")]
+    assert rules.candidate_keys("a/b=٣") == [(1, "a/b=٣"), (3, "a")]
 
 
 def test_extract_definitions_quoted():

@@ -1,6 +1,7 @@
 """Structured-Streaming incremental front-end: AvailableNow pass over landed
-files produces triples; a second pass over the same files is a no-op
-(exactly-once via the stream checkpoint)."""
+files produces triples; a second pass over the same files is a no-op, and
+a batch replayed after a lost commit does not land twice (exactly-once via
+the stream checkpoint and per-batch overwrite)."""
 
 import os
 
@@ -15,16 +16,30 @@ def test_available_now_incremental(spark, entity_dict_df, tmp_path_factory):
     spark.createDataFrame(t, schema=schemas.TRANSCRIPTS).write.mode(
         "overwrite"
     ).parquet(in_dir)
+    # no trailing watermark-only batch, so the last batch is the data batch
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(no_data, "false")
+    try:
+        incremental_extract(spark, in_dir, entity_dict_df, out_dir)
+        triples_dir = os.path.join(out_dir, "triples")
+        n1 = spark.read.parquet(triples_dir).count()
+        assert n1 > 0
 
-    incremental_extract(spark, in_dir, entity_dict_df, out_dir)
-    triples_dir = os.path.join(out_dir, "triples")
-    n1 = spark.read.parquet(triples_dir).count()
-    assert n1 > 0
+        # second AvailableNow pass: no new files → no new rows
+        incremental_extract(spark, in_dir, entity_dict_df, out_dir)
+        assert spark.read.parquet(triples_dir).count() == n1
 
-    # second AvailableNow pass: no new files → no new rows
-    incremental_extract(spark, in_dir, entity_dict_df, out_dir)
-    n2 = spark.read.parquet(triples_dir).count()
-    assert n2 == n1
+        # crash between the sink write and the commit log: the last batch
+        # is replayed on restart and must replace its output, not land twice
+        commits = os.path.join(out_dir, "_stream_checkpoint", "commits")
+        last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+        for name in (str(last), f".{last}.crc"):  # the entry and its checksum
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+        incremental_extract(spark, in_dir, entity_dict_df, out_dir)
+        assert spark.read.parquet(triples_dir).count() == n1
+    finally:
+        spark.conf.unset(no_data)
 
 
 def test_tumbling_window_agg_emits_only_watermark_closed_windows(
