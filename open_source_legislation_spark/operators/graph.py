@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
 from ._cache import persist_disk as _persist_disk
 
 
@@ -173,17 +172,15 @@ def pagerank_int(
     auto-disables: the plan is shallow and the pure lineage beats paying
     the DISK_ONLY materialization (measured +25-40% at iters=3); force
     persisting on short loops with a smaller ``persist_every``. The
-    persisted handles are handed to the caller on
-    the result as ``_osl_persists`` for release after consumption (the
-    :func:`triangle_counts` handle-handover pattern).
+    persisted handles are handed to the caller on the result as
+    ``_osl_persists`` for release after consumption, as in
+    :func:`label_propagation`, :func:`bfs_distances` and
+    ``sampling.pack_token_budget``.
 
     Output: ``(node, rank)`` with rank after ``iters`` iterations.
     """
     if persist_every is not None and persist_every < 1:
         raise ValueError("pagerank_int: persist_every must be >= 1 or None")
-    # Engage only when the loop is long enough to amortize the DISK_ONLY
-    # materialization (measured ~25-40% overhead at iters=3 on sf0.1);
-    # pass a smaller persist_every to force persisting on short loops.
     if persist_every is not None and iters <= persist_every:
         persist_every = None
     e = (
@@ -249,34 +246,23 @@ def pagerank_int(
     return ranks
 
 
-def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
-    """Per-node triangle participation over the undirected graph — the
-    standard degree-ordered (compact-forward) formulation that keeps the
-    join fan-out bounded on skewed graphs.
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle participation over the undirected graph: out-
+    neighbour set intersection (HERO, SIGMOD 2024) over the degree-ordered
+    orientation of compact-forward.
 
     1. canonicalize to undirected distinct edges (u < v, no self-loops);
-    2. orient every edge from its LOWER-(degree, id) endpoint to the
-       higher — a hub of degree d keeps at most its d higher-ranked
-       neighbors as out-edges, so the wedge join below fans out
-       O(Σ min(deg)²-ish) instead of O(Σ deg²): the classic bound that
-       makes triangle counting survive power-law skew;
-    3. wedges: oriented ⋈ oriented on the middle vertex;
-    4. close: wedge (a→b→c) survives iff oriented edge (a→c) exists —
-       an equi-join on BOTH endpoints, never a cross product;
-    5. explode the 3 corners and count per node (zero-triangle nodes are
-       kept via a left join back to the node universe, itself read from
-       the oriented edges — every non-isolated node sits on one).
+    2. orient every edge ``x → y`` from its LOWER-(degree, id) endpoint to
+       the higher — a hub keeps only its higher-ranked neighbours as
+       out-edges, so out-lists stay short under power-law skew;
+    3. pair every oriented edge with the out-lists ``out(x)`` and, by a
+       left join, ``out(y)`` (empty if y has none): ``c = out(x) ∩ out(y)``
+       is the third corner of exactly the triangles whose two lowest-ranked
+       corners are x and y, so each triangle is found once, with no wedges;
+    4. per node, sum ``|c|`` to x and to y and 1 to each element of c; every
+       node is an endpoint of an oriented edge, so zero-triangle nodes get 0.
 
-    The oriented edge list is consumed FOUR times (both wedge sides, the
-    closing probe, the node universe); without a cache each consumer
-    re-scans the input and re-runs the distinct + degree joins, so with
-    ``cache_oriented`` (default) it is persisted DISK_ONLY — O(|E|), the
-    same footprint class as the input. The cache is handed to the caller
-    on the result as ``_osl_persists`` for release after consumption —
-    the contract/bench harnesses unpersist it after collecting.
-
-    Every triangle is produced exactly once (its corners are totally
-    ordered by (degree, id)). Output: ``(node, n_triangles: bigint)``.
+    Nothing is cached or handed over. Output: ``(node, n_triangles: bigint)``.
     """
     und = (
         edges.select(
@@ -303,33 +289,23 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("x"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("y"),
     )
-    persists = []
-    if cache_oriented:
-        o = _persist_disk(o)
-        persists.append(o)
-    nodes = (
-        o.select(F.col("x").alias("node"))
-        .union(o.select(F.col("y").alias("node")))
-        .distinct()
+    adj = o.groupBy("x").agg(F.collect_list("y").alias("out"))
+    no_out = F.array().cast(adj.schema["out"].dataType)
+    c = F.array_intersect("out_x", F.coalesce("out_y", no_out)).alias("c")
+    # |c| to x and to y, 1 to each third corner in c
+    credits = F.expr(
+        "concat(array(struct(x AS node, size(c) AS n),"
+        " struct(y AS node, size(c) AS n)),"
+        " transform(c, z -> struct(z AS node, 1 AS n)))"
     )
-    wedges = (
-        o.select(F.col("x").alias("a"), F.col("y").alias("b"))
-        .join(o.select(F.col("x").alias("b"), F.col("y").alias("c")), "b")
-    )
-    tri = wedges.join(
-        o.select(F.col("x").alias("a"), F.col("y").alias("c")), ["a", "c"]
-    )
-    per_node = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+    return (
+        o.join(adj.withColumnRenamed("out", "out_x"), "x")
+        .join(adj.toDF("y", "out_y"), "y", "left")
+        .select("x", "y", c)
+        .select(F.inline(credits))
         .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
+        .agg(F.sum("n").alias("n_triangles"))
     )
-    out = nodes.join(per_node, "node", "left").select(
-        "node",
-        F.coalesce(F.col("n_triangles"), F.lit(0).cast("long")).alias("n_triangles"),
-    )
-    out._osl_persists = persists
-    return out
 
 
 def label_propagation(
@@ -375,9 +351,6 @@ def label_propagation(
     if persist_every is not None:
         sym = _persist_disk(sym)
         persists.append(sym)
-    # nodes is NOT persisted: unlike pagerank_int (where it re-enters the
-    # plan every iteration) it has exactly one consumer — the initial
-    # labels seed — and it reads from the already-persisted sym anyway.
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
     for it in range(iters):

@@ -875,11 +875,10 @@ def q_graph_pagerank(spark, sf_dir):
 
 def q_graph_triangles(spark, sf_dir):
     """Per-node triangle counts over a lineitem-derived undirected graph
-    (operators/graph.py triangle_counts): degree-ordered orientation so
-    the wedge join fans out on the LOW-degree endpoint — the composition
-    that survives power-law skew. The oracle enumerates triangles
-    directly over the canonical u<v edge set (each triangle once as
-    a<b<c)."""
+    (operators/graph.py triangle_counts): each degree-ordered edge x→y
+    finds its triangles as out(x) ∩ out(y) — no wedge rows, no cache. The
+    oracle enumerates triangles directly over the canonical u<v edge set
+    (each triangle once as a<b<c)."""
     from .operators import graph as graph_ops
 
     li = _t(spark, sf_dir, "lineitem")

@@ -1,10 +1,12 @@
 """Local stand-in for the driver's correctness gate: run each queries()
 entry on Spark and its oracle_sql() on DuckDB over the same sf dir, compare
-row count, column names, and an order-insensitive value hash."""
+row count, column names, and an order-insensitive value hash; each result
+line adds the wall time and the executed plan's Exchange / Python nodes."""
 
 from __future__ import annotations
 
 import sys
+import time
 
 import duckdb
 
@@ -49,6 +51,26 @@ def frame_summary(cols, rows):
     return sorted_cols, len(rows), h, lines
 
 
+def plan_facts(sdf) -> tuple[int, int]:
+    """(Exchange, Python) node counts of an executed plan, read through the
+    adaptive plan and its query stages; a reused exchange is not counted."""
+    exchanges = python = 0
+    stack = [sdf._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        if p.nodeName() == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+        elif p.nodeName().endswith("QueryStage"):
+            stack.append(p.plan())
+        exchanges += p.nodeName() in ("Exchange", "BroadcastExchange")
+        # every node that crosses into a Python worker lives in one package
+        cls = p.getClass().getName()
+        python += cls.startswith("org.apache.spark.sql.execution.python.")
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return exchanges, python
+
+
 def main(sf_dir: str, only: list[str]) -> int:
     import os
 
@@ -73,21 +95,26 @@ def main(sf_dir: str, only: list[str]) -> int:
             continue
         sdf = None
         try:
+            t0 = time.perf_counter()
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            wall = time.perf_counter() - t0
+            exchanges, python = plan_facts(sdf)
+            facts = f"{wall:.2f} s, {exchanges} exchanges, {python} python nodes"
         except Exception as e:  # noqa: BLE001
             print(f"[SPARK-ERR] {name}: {type(e).__name__}: {str(e)[:300]}")
             failures += 1
             continue
         finally:
-            # operators that cache an intermediate (triangle_counts'
-            # oriented edges) hand the persisted frames over on the result;
+            # operators that cache an intermediate hand the persisted frames
+            # over on the result (pagerank_int, label_propagation and
+            # bfs_distances past their short-loop cutoff, pack_token_budget);
             # release them so a full sweep doesn't accumulate caches
             for cached in getattr(sdf, "_osl_persists", []):
                 cached.unpersist()
         if name not in osql:
-            print(f"[ROWS-ONLY] {name}: {len(srows)} rows")
+            print(f"[ROWS-ONLY] {name}: {len(srows)} rows, {facts}")
             continue
         try:
             rel = con.sql(osql[name])
@@ -109,7 +136,7 @@ def main(sf_dir: str, only: list[str]) -> int:
             for line in sorted(dset - sset)[:3]:
                 print(f"   duck-only:  {line[:160]}")
         else:
-            print(f"[OK] {name}: {sn} rows")
+            print(f"[OK] {name}: {sn} rows, {facts}")
     spark.stop()
     return failures
 

@@ -114,24 +114,58 @@ def test_pagerank_int_exact_and_hub_ranked(spark):
     assert {r.node: r.rank for r in graph.pagerank_int(noisy, iters=3).collect()} == got
 
 
-def test_triangle_counts_match_bruteforce(spark):
-    from itertools import combinations
+def _random_edges():
     import random
+
+    rng = random.Random(7)
+    return {(rng.randrange(20), rng.randrange(20)) for _ in range(120)}
+
+
+_TRIANGLE_CASES = {
+    "random": (_random_edges(), "src long, dst long"),
+    # hub 100 joins every corner of the 5-clique 0..4 and ten leaves:
+    # degree 15, so every hub edge points into it and its out-list is empty
+    "hub_on_clique": (
+        {(a, b) for a in range(5) for b in range(a + 1, 5)}
+        | {(100, a) for a in range(5)}
+        | {(100, leaf) for leaf in range(200, 210)},
+        "src long, dst long",
+    ),
+    # self-loops, a duplicate and reversed edges on int columns
+    "int_noisy": (
+        [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1), (3, 3), (4, 4), (3, 4), (4, 1)],
+        "src int, dst int",
+    ),
+    # node 9's only edge is a self-loop, so it is absent
+    "self_loop_only": ([(1, 2), (2, 3), (1, 3), (9, 9)], "src long, dst long"),
+}
+
+
+def test_triangle_counts_match_bruteforce(spark):
+    """One test over every regime the orientation and the empty out-list
+    touch, each case named in its assertion messages."""
+    from itertools import combinations
 
     from open_source_legislation_spark.operators.graph import triangle_counts
 
-    rng = random.Random(7)
-    edges = {(rng.randrange(20), rng.randrange(20)) for _ in range(120)}
-    e = spark.createDataFrame(list(edges), "src long, dst long")
-    got = {r.node: r.n_triangles for r in triangle_counts(e).collect()}
-    und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
-    nodes = {x for p in und for x in p}
-    brute = {n: 0 for n in nodes}
-    for a, b, c in combinations(sorted(nodes), 3):
-        if (a, b) in und and (b, c) in und and (a, c) in und:
-            for x in (a, b, c):
-                brute[x] += 1
-    assert got == brute
+    for case, (edges, schema) in _TRIANGLE_CASES.items():
+        e = spark.createDataFrame(list(edges), schema)
+        persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+        tri = triangle_counts(e)
+        got = {r.node: r.n_triangles for r in tri.collect()}
+        # nothing cached, nothing handed over
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent, case
+        assert not hasattr(tri, "_osl_persists"), case
+        # node keeps the input's type (an empty out-list takes the adjacency's)
+        assert tri.dtypes == [("node", e.dtypes[0][1]), ("n_triangles", "bigint")], case
+        und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
+        nodes = {x for p in und for x in p}
+        brute = {n: 0 for n in nodes}
+        for a, b, c in combinations(sorted(nodes), 3):
+            if (a, b) in und and (b, c) in und and (a, c) in und:
+                for x in (a, b, c):
+                    brute[x] += 1
+        assert got == brute, case
 
 
 def test_label_propagation_matches_bruteforce(spark):
