@@ -152,11 +152,6 @@ def main() -> None:
         df = fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
-        # release operator-handed caches (pagerank_int, label_propagation
-        # and bfs_distances past their short-loop cutoff, pack_token_budget)
-        # so one query's block-manager footprint can't distort the next
-        for cached in getattr(df, "_osl_persists", []):
-            cached.unpersist()
 
     total = round(sum(timings.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

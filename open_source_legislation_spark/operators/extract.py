@@ -27,6 +27,7 @@ chunk-salted separately (:func:`node_text_agg`).
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -506,8 +507,6 @@ def derive_nodes_sharded(
     """
     import json
 
-    from ._cache import persist_disk
-
     # ONE aggregation pass decides everything driver-side: which
     # conversations are oversized AND how many rounds their longest needs.
     # (Re-deriving the groupBy for the broadcast frames / round count
@@ -538,7 +537,7 @@ def derive_nodes_sharded(
             _make_state_kernel(entry, emit_exit_state=True),
             schema=_DERIVED_SCHEMA,
         )
-        round_caches.append(persist_disk(raw))
+        round_caches.append(raw.persist(StorageLevel.DISK_ONLY))
         exits = {
             r["conv_id"]: json.loads(r["clean_text"])
             for r in raw.filter(F.col("node_id") == _SHARD_STATE)

@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._cache import persist_disk as _persist_disk
+# Iterations between lineage truncations (see _truncate_lineage); BFS
+# cuts twice as often (see bfs_distances).
+_TRUNCATE_EVERY = 8
+_BFS_TRUNCATE_EVERY = 4
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
@@ -30,10 +33,14 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     The trade-off: plan depth is bounded, but the blocks are stored
     unreplicated (MEMORY_AND_DISK) with no lineage behind them, so losing
     an executor that holds them fails the query instead of recomputing
-    the lost partitions. The blocks are not among the ``_osl_persists``
-    handles, and ``unpersist()`` on the returned frame does not release
-    them: they stay listed in ``SparkContext.getPersistentRDDs()`` after
-    it, and after a driver-side GC."""
+    the lost partitions. The caller holds no handle to them, and
+    ``unpersist()`` on the returned frame does not release them: Spark's
+    ContextCleaner does, once the frame is unreferenced and both a Python
+    ``gc`` and a JVM GC have collected it. Spark bounds that delay
+    nowhere: on 4 vCPUs, with both collectors run every 0.5 s after the
+    frame was dropped, the blocks left ``SparkContext.getPersistentRDDs()``
+    after 1.4-16.4 s; with one run of each they were still listed 30 s
+    later."""
     return df.localCheckpoint(eager=True)
 
 
@@ -139,7 +146,6 @@ def pagerank_int(
     iters: int = 3,
     base: int = 1_000_000,
     damping_ppm: int = 850_000,
-    persist_every: int | None = 8,
 ) -> DataFrame:
     """Node importance over the graph — fixed-iteration PageRank in EXACT
     integer arithmetic (ranks in micro-units):
@@ -162,46 +168,25 @@ def pagerank_int(
     one partial-aggregated groupBy(dst); ranks frame is one row per node.
     Duplicate edges and self-loops are removed up front.
 
-    Lineage control: the loop-invariant frames (``e``, ``outdeg``,
-    ``nodes``) are persisted DISK_ONLY for the loop's lifetime (each is
-    consumed every iteration — uncached, iteration *k* re-derives the
-    distinct + degree subtrees *k* times), and the evolving ``ranks``
-    frame is lineage-truncated every ``persist_every`` iterations (see
-    :func:`_truncate_lineage`; ``None`` disables both, restoring the pure
-    single-lineage plan). At ``iters <= persist_every`` the knob
-    auto-disables: the plan is shallow and the pure lineage beats paying
-    the DISK_ONLY materialization (measured +25-40% at iters=3); force
-    persisting on short loops with a smaller ``persist_every``. The
-    persisted handles are handed to the caller on the result as
-    ``_osl_persists`` for release after consumption, as in
-    :func:`label_propagation`, :func:`bfs_distances` and
-    ``sampling.pack_token_budget``.
+    Lineage control: the evolving ``ranks`` frame is lineage-truncated
+    every 8 iterations (see :func:`_truncate_lineage`), so a long loop's
+    plan stays bounded. Nothing is cached: a short loop (every production
+    caller runs 2-3 iterations) keeps one pure plan, and the result hands
+    its caller nothing to release.
 
     Output: ``(node, rank)`` with rank after ``iters`` iterations.
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("pagerank_int: persist_every must be >= 1 or None")
-    if persist_every is not None and iters <= persist_every:
-        persist_every = None
     e = (
         edges.select(F.col("src"), F.col("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    persists = []
-    if persist_every is not None:
-        e = _persist_disk(e)
-        persists.append(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    if persist_every is not None:
-        nodes = _persist_disk(nodes)
-        outdeg = _persist_disk(outdeg)
-        persists += [nodes, outdeg]
     ranks = nodes.withColumn("rank", F.lit(base).cast("long"))
     hold = (base - damping_ppm)
     for it in range(iters):
@@ -238,11 +223,8 @@ def pagerank_int(
             .cast("long")
             .alias("rank"),
         )
-        if persist_every is not None and (it + 1) % persist_every == 0 and (
-            it + 1
-        ) < iters:
+        if (it + 1) % _TRUNCATE_EVERY == 0 and it + 1 < iters:
             ranks = _truncate_lineage(ranks)
-    ranks._osl_persists = persists
     return ranks
 
 
@@ -308,9 +290,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = 2, persist_every: int | None = 8
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation, made fully
     deterministic: every node starts labeled with its own id; each
     iteration it adopts the most frequent label among its neighbors,
@@ -325,19 +305,12 @@ def label_propagation(
     ``max(struct(count, -label))`` so the pick is a second partial
     aggregate, NOT a sort window. Labels frame stays one row per node.
 
-    Lineage control (same contract as :func:`pagerank_int`, including
-    the short-loop auto-disable): ``sym`` is loop-invariant (probed
-    every iteration) and persisted DISK_ONLY — ``nodes`` is NOT, its
-    single consumer is the initial labels seed; the evolving ``labels``
-    frame is lineage-truncated every ``persist_every`` iterations;
-    handles handed over via ``_osl_persists``; ``None`` disables.
+    Lineage control (same contract as :func:`pagerank_int`): the
+    evolving ``labels`` frame is lineage-truncated every 8 iterations;
+    nothing is cached.
 
     Output: ``(node, label: bigint)`` after ``iters`` iterations.
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("label_propagation: persist_every must be >= 1 or None")
-    if persist_every is not None and iters <= persist_every:
-        persist_every = None  # short loop: pure plan wins (see pagerank_int)
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -347,10 +320,6 @@ def label_propagation(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    persists = []
-    if persist_every is not None:
-        sym = _persist_disk(sym)
-        persists.append(sym)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
     for it in range(iters):
@@ -367,11 +336,8 @@ def label_propagation(
             )
             .select("node", (-F.col("m.nl")).alias("label"))
         )
-        if persist_every is not None and (it + 1) % persist_every == 0 and (
-            it + 1
-        ) < iters:
+        if (it + 1) % _TRUNCATE_EVERY == 0 and it + 1 < iters:
             labels = _truncate_lineage(labels)
-    labels._osl_persists = persists
     return labels
 
 
@@ -379,7 +345,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    persist_every: int | None = 8,
 ) -> DataFrame:
     """Directed k-hop reachability: the minimum hop distance (≤
     ``max_hops``) from a seed set to every reachable node — the "what is
@@ -393,29 +358,21 @@ def bfs_distances(
     product. Deterministic by construction: distance is a pure min, no
     tie-breaks needed.
 
-    Lineage control (same contract as :func:`pagerank_int`): the edge
-    list is loop-invariant and persisted DISK_ONLY (it is probed every
-    hop); the evolving ``settled``/``frontier`` frames — ``settled`` is a
-    union CHAIN that otherwise deepens by one subtree per hop — are
-    lineage-truncated every ``persist_every`` hops; handles handed over
-    via ``_osl_persists``; ``None`` disables.
+    Lineage control (as in :func:`pagerank_int`, but every 4 hops): the
+    evolving ``settled``/``frontier`` frames are lineage-truncated, since
+    ``settled`` embeds ``frontier``, which embeds ``settled``, so the
+    plan tree grows ~2.4x per hop between cuts (at interval 8, a 12-hop
+    walk over the ``graph_bfs_khop`` edges at sf0.1 ran the JVM out of
+    heap at its first cut). Nothing is cached.
 
     ``sources``: DataFrame with a ``node`` column. Output: ``(node,
     dist: int)`` for every node within ``max_hops`` (seeds at 0).
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("bfs_distances: persist_every must be >= 1 or None")
-    if persist_every is not None and max_hops <= persist_every:
-        persist_every = None  # short walk: pure plan wins (see pagerank_int)
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    persists = []
-    if persist_every is not None:
-        e = _persist_disk(e)
-        persists.append(e)
     seeds = sources.select("node").distinct()
     settled = seeds.withColumn("dist", F.lit(0))
     frontier = seeds
@@ -430,9 +387,7 @@ def bfs_distances(
         )
         settled = settled.unionByName(new)
         frontier = new
-        if persist_every is not None and h % persist_every == 0 and h < max_hops:
+        if h % _BFS_TRUNCATE_EVERY == 0 and h < max_hops:
             settled = _truncate_lineage(settled)
             frontier = _truncate_lineage(frontier)
-    out = settled.select("node", F.col("dist").cast("int").alias("dist"))
-    out._osl_persists = persists
-    return out
+    return settled.select("node", F.col("dist").cast("int").alias("dist"))

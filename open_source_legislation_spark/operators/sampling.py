@@ -128,18 +128,17 @@ def pack_token_budget(
         return with_counts.select("doc_id", "source", "n_tokens", pack(offset))
     if chunks < 1:
         raise ValueError("pack_token_budget: chunks must be >= 1 or None")
-    from ._cache import persist_disk
-
     # Both phases consume the SAME chunk assignment. repartitionByRange
     # derives boundaries by sampling, which is not guaranteed to repeat
-    # across two independent evaluations of the subtree — so the chunked
-    # frame is persisted (handle handed over via ``_osl_persists``), not
-    # recomputed per branch.
+    # across two independent evaluations of the subtree — so both phases
+    # read one locally checkpointed RDD, not a recomputation per branch.
+    # Nothing is handed to the caller: Spark's ContextCleaner frees the
+    # blocks once the result is unreferenced.
     chunked = (
         with_counts.repartitionByRange(chunks, "source", "doc_id")
         .withColumn("_chunk", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    chunked = persist_disk(chunked)
     w_local = (
         Window.partitionBy("_chunk", "source")
         .orderBy("doc_id")
@@ -164,14 +163,12 @@ def pack_token_budget(
             ),
         )
     )
-    out = local.join(F.broadcast(bases), ["_chunk", "source"]).select(
+    return local.join(F.broadcast(bases), ["_chunk", "source"]).select(
         "doc_id",
         "source",
         "n_tokens",
         pack(F.col("_base_off") + F.col("_local_off")),
     )
-    out._osl_persists = [chunked]
-    return out
 
 
 def _normalize_stratum_key(k, dt, col_name: str):

@@ -93,7 +93,6 @@ def main(sf_dir: str, only: list[str]) -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        sdf = None
         try:
             t0 = time.perf_counter()
             sdf = fn(spark, sf_dir)
@@ -106,13 +105,6 @@ def main(sf_dir: str, only: list[str]) -> int:
             print(f"[SPARK-ERR] {name}: {type(e).__name__}: {str(e)[:300]}")
             failures += 1
             continue
-        finally:
-            # operators that cache an intermediate hand the persisted frames
-            # over on the result (pagerank_int, label_propagation and
-            # bfs_distances past their short-loop cutoff, pack_token_budget);
-            # release them so a full sweep doesn't accumulate caches
-            for cached in getattr(sdf, "_osl_persists", []):
-                cached.unpersist()
         if name not in osql:
             print(f"[ROWS-ONLY] {name}: {len(srows)} rows, {facts}")
             continue

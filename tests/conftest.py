@@ -19,6 +19,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def dataset_caches(spark):
+    """Returns a probe for the ids of the persistent RDDs that are not
+    locally checkpointed: the caches a result would leave its caller to
+    release (Spark's ContextCleaner frees local checkpoints on its own)."""
+
+    def ids():
+        return {
+            k
+            for k, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if not rdd.rdd().isLocallyCheckpointed()
+        }
+
+    return ids
+
+
 @pytest.fixture(scope="session")
 def transcripts_pd():
     return synth.make_transcripts(seed=42, n_turns_target=1200)

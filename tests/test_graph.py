@@ -168,8 +168,27 @@ def test_triangle_counts_match_bruteforce(spark):
         assert got == brute, case
 
 
-def test_label_propagation_matches_bruteforce(spark):
+def _lpa_brute(edges, iters):
     from collections import Counter
+
+    und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
+    adj: dict = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    lab = {n: n for n in adj}
+    for _ in range(iters):
+        lab = {
+            n: max(
+                Counter(lab[m] for m in adj[n]).items(),
+                key=lambda kv: (kv[1], -kv[0]),
+            )[0]
+            for n in adj
+        }
+    return lab
+
+
+def test_label_propagation_matches_bruteforce(spark):
     import random
 
     from open_source_legislation_spark.operators.graph import label_propagation
@@ -178,21 +197,7 @@ def test_label_propagation_matches_bruteforce(spark):
     edges = {(rng.randrange(15), rng.randrange(15)) for _ in range(40)}
     e = spark.createDataFrame(list(edges), "src long, dst long")
     got = {r.node: r.label for r in label_propagation(e, iters=2).collect()}
-    und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
-    adj: dict = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    lab = {n: n for n in adj}
-    for _ in range(2):
-        lab = {
-            n: max(
-                Counter(lab[m] for m in adj[n]).items(),
-                key=lambda kv: (kv[1], -kv[0]),
-            )[0]
-            for n in adj
-        }
-    assert got == lab
+    assert got == _lpa_brute(edges, 2)
 
 
 def test_graph_analytics_empty_edges(spark):
@@ -212,9 +217,28 @@ def test_graph_analytics_empty_edges(spark):
     assert label_propagation(e, iters=1).count() == 0
 
 
+def _bfs_brute(edges, hops, seeds=(0,)):
+    from collections import deque
+
+    adj: dict = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+    dist = {s: 0 for s in seeds}
+    q = deque((s, 0) for s in seeds)
+    while q:
+        n, d = q.popleft()
+        if d >= hops:
+            continue
+        for m in adj.get(n, ()):
+            if m not in dist:
+                dist[m] = d + 1
+                q.append((m, d + 1))
+    return dist
+
+
 def test_bfs_distances_match_bruteforce(spark):
     import random
-    from collections import deque
 
     from open_source_legislation_spark.operators.graph import bfs_distances
 
@@ -223,94 +247,59 @@ def test_bfs_distances_match_bruteforce(spark):
     e = spark.createDataFrame(list(edges), "src long, dst long")
     seeds = spark.createDataFrame([(0,), (1,)], "node long")
     got = {r.node: r.dist for r in bfs_distances(e, seeds, max_hops=3).collect()}
-    adj: dict = {}
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-    dist = {0: 0, 1: 0}
-    q = deque([(0, 0), (1, 0)])
-    while q:
-        n, d = q.popleft()
-        if d >= 3:
-            continue
-        for m in adj.get(n, ()):
-            if m not in dist:
-                dist[m] = d + 1
-                q.append((m, d + 1))
-    assert got == dist
+    assert got == _bfs_brute(edges, 3, seeds=(0, 1))
 
 
-def _ring_edges(spark, n=30):
-    return spark.createDataFrame(
-        [(i, (i + 1) % n) for i in range(n)] + [(i, (i + 7) % n) for i in range(n)],
-        "src long, dst long",
+def _pagerank_brute(edges, iters, base=1_000_000, damping=850_000):
+    e = {p for p in edges if p[0] != p[1]}
+    outdeg: dict = {}
+    for a, _ in e:
+        outdeg[a] = outdeg.get(a, 0) + 1
+    rank = {n: base for p in e for n in p}
+    for _ in range(iters):
+        incoming = dict.fromkeys(rank, 0)
+        for a, b in e:
+            incoming[b] += rank[a] // outdeg[a]
+        rank = {n: base - damping + damping * incoming[n] // base for n in rank}
+    return rank
+
+
+def _ring_edges(n=30):
+    """Two rings (+1, +7) with a few chords, so ranks and labels differ."""
+    return (
+        {(i, (i + 1) % n) for i in range(n)}
+        | {(i, (i + 7) % n) for i in range(n)}
+        | {(i, (i * i) % n) for i in range(0, n, 4)}
     )
 
 
-def _unpersist(df):
-    for h in getattr(df, "_osl_persists", []):
-        h.unpersist()
-
-
-def test_iterative_loops_lineage_bounded_at_high_iters(spark):
-    """The iters=25 regime: with the default persist_every the evolving
-    frame's plan is truncated every k iterations, so plan size stays
-    BOUNDED instead of stacking 25 join/agg subtrees (the iterative-
-    DataFrame failure mode at scale) — and the results are identical to
-    the pure single-lineage plan."""
-    e = _ring_edges(spark)
+def test_iterative_loops_lineage_bounded_at_high_iters(spark, dataset_caches):
+    """Long loops: each loop truncates its lineage at a fixed interval (8
+    iterations for PageRank and LPA, 4 hops for BFS), so at every length
+    the plan is no larger than the plan at the loop's own interval — and
+    the results match brute force. Nothing is cached and nothing is
+    handed to the caller: collecting adds no persistent RDD other than
+    the truncations' local checkpoints (freed by Spark's ContextCleaner)."""
+    edges = _ring_edges()
+    e = spark.createDataFrame(sorted(edges), "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "node long")
 
     def plan_len(df):
         return len(df._jdf.queryExecution().optimizedPlan().toString())
 
-    deep = graph.pagerank_int(e, iters=25, persist_every=None)
-    knob = graph.pagerank_int(e, iters=25, persist_every=5)
-    assert plan_len(knob) < plan_len(deep) / 2
-    assert sorted(map(tuple, knob.collect())) == sorted(map(tuple, deep.collect()))
-    _unpersist(knob)
-
-    deep_l = graph.label_propagation(e, iters=25, persist_every=None)
-    knob_l = graph.label_propagation(e, iters=25, persist_every=5)
-    assert plan_len(knob_l) < plan_len(deep_l) / 2
-    assert sorted(map(tuple, knob_l.collect())) == sorted(map(tuple, deep_l.collect()))
-    _unpersist(knob_l)
-
-    # BFS's un-truncated plan is the worst of the three: settled embeds
-    # frontier embeds settled, so the TREE (not DAG) size grows ~2.4^hops
-    # — at 12 hops even .toString() of the deep plan OOMs the JVM, which
-    # is the failure mode itself. Compare deep-vs-knob at 8 hops where
-    # the deep tree is still tractable, then pin the knob's correctness
-    # at 12 hops against plain brute force.
-    seeds = spark.createDataFrame([(0,)], "node long")
-    deep_b = graph.bfs_distances(e, seeds, max_hops=8, persist_every=None)
-    knob_b = graph.bfs_distances(e, seeds, max_hops=8, persist_every=3)
-    assert plan_len(knob_b) < plan_len(deep_b)
-    assert sorted(map(tuple, knob_b.collect())) == sorted(map(tuple, deep_b.collect()))
-    _unpersist(knob_b)
-
-    knob12 = graph.bfs_distances(e, seeds, max_hops=12, persist_every=4)
-    got12 = {r["node"]: r["dist"] for r in knob12.collect()}
-    _unpersist(knob12)
-    adj = {}
-    for r in e.collect():
-        adj.setdefault(r["src"], []).append(r["dst"])
-    dist, q = {0: 0}, [(0, 0)]
-    while q:
-        n, d = q.pop(0)
-        if d >= 12:
-            continue
-        for m in adj.get(n, []):
-            if m not in dist:
-                dist[m] = d + 1
-                q.append((m, d + 1))
-    assert got12 == dist
-
-
-def test_iterative_loops_persist_every_validation(spark):
-    e = _ring_edges(spark)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.pagerank_int(e, persist_every=0)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.label_propagation(e, persist_every=0)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.bfs_distances(e, e.select(F.col("src").alias("node")), persist_every=-1)
+    loops = {  # name: (run, truncation interval, lengths checked, brute force)
+        "pagerank": (lambda n: graph.pagerank_int(e, iters=n), 8, (25,), _pagerank_brute),
+        "lpa": (lambda n: graph.label_propagation(e, iters=n), 8, (25,), _lpa_brute),
+        "bfs": (lambda n: graph.bfs_distances(e, seeds, max_hops=n), 4, (6, 8, 12), _bfs_brute),
+    }
+    for name, (run, interval, lengths, brute) in loops.items():
+        cap = plan_len(run(interval))
+        for n in lengths:
+            case = f"{name} at {n}"
+            before = dataset_caches()
+            df = run(n)
+            assert plan_len(df) <= cap, case
+            got = {r[0]: r[1] for r in df.collect()}
+            assert dataset_caches() <= before, case
+            assert not hasattr(df, "_osl_persists"), case
+            assert got == brute(edges, n), case

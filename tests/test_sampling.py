@@ -158,10 +158,12 @@ def test_stratified_sample_broadcast_path_matches_when_chain(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_pack_budget_two_phase_matches_window_mode(spark):
+def test_pack_budget_two_phase_matches_window_mode(spark, dataset_caches):
     """chunks=P parallel prefix-sum mode ≡ the single-window mode, incl.
     one source far bigger than the others (the skew case the mode is
-    for) and P exceeding the natural parallelism."""
+    for) and P exceeding the natural parallelism. The chunked frame is
+    locally checkpointed, not cached: collecting leaves no Dataset cache
+    and the result hands its caller nothing to release."""
     rows = [
         (i, "big" if i < 900 else f"src_{i % 3}", f"w{i} " * ((i % 13) + 1))
         for i in range(1000)
@@ -171,10 +173,11 @@ def test_pack_budget_two_phase_matches_window_mode(spark):
         map(tuple, sampling.pack_token_budget(docs, budget=40).collect())
     )
     for p in (1, 4, 17):
+        before = dataset_caches()
         two = sampling.pack_token_budget(docs, budget=40, chunks=p)
         assert sorted(map(tuple, two.collect())) == base
-        for h in getattr(two, "_osl_persists", []):
-            h.unpersist()
+        assert dataset_caches() <= before, p
+        assert not hasattr(two, "_osl_persists"), p
     with pytest.raises(ValueError, match="chunks"):
         sampling.pack_token_budget(docs, budget=40, chunks=0)
 
