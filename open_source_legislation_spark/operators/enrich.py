@@ -6,21 +6,21 @@ embedding API with a thread pool, and writes vectors back (reference
 ``utilityFunctions.py:316-322``). Here:
 
 - the *pending-work predicate* is the checkpoint anti-join
-  (``plans/checkpoint.py``) or a plain null-filter;
+  (``plans/checkpoint.py``);
 - the *embedding call* is a deterministic feature-hashed bag-of-tokens
-  vector (no external API in this environment; the mapInPandas batching,
-  schema, and write-back shape are the real design — swap ``_embed_batch``
-  for an API client on a real deployment);
+  vector standing in for the external API. The nodes plan runs it in
+  :func:`node_enrich_udf`, an Arrow-batched pandas UDF; swap that UDF's
+  ``_embed`` for an API client on a real deployment;
 - parallelism comes from executors, not a thread pool.
 
-The vector is integer token-bucket counts L2-normalized then rounded, so a
-SQL oracle can reproduce it bit-for-bit (exposed as a comma-joined string
-for portable value comparison).
+The vector is integer token-bucket counts L2-normalized then
+floor-truncated, so a SQL oracle can reproduce it bit-for-bit (exposed as
+a comma-joined string for portable value comparison).
+:func:`hash_embed_expr` is the same embedding as a JVM column expression;
+it is the reference the Python kernel is tested against.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -78,43 +78,6 @@ def hash_embed_expr(text_col, dim: int = 16):
     )
 
 
-def hash_embed_udf(dim: int = 16):
-    """Arrow-batched scalar variant of ``hash_embed_expr`` — bit-identical
-    values (same md5 bucket, same sequential int-count norm, same
-    floor-truncation; equality pinned by tests/test_enrich.py).
-
-    Use THIS on long text columns: the expression form is an interpreted
-    higher-order function whose md5-bucket subtree Catalyst re-evaluates
-    once per output dimension (no cross-lambda CSE), i.e. O(dims × tokens)
-    interpreted evals per row — measured 68 s vs 3.5 s for the full-text
-    nodes output at 50k turns. Here token→bucket is memoized across the
-    worker's batches, so cost is O(unique tokens + rows × dims)."""
-    import hashlib
-    import math
-
-    cache: dict[str, int] = {}
-
-    def _bucket(tok: str) -> int:
-        b = cache.get(tok)
-        if b is None:
-            b = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % dim
-            cache[tok] = b
-        return b
-
-    def _one(t: str | None) -> list[float]:
-        counts = [0] * dim
-        for tok in _ascii_tokens(t):
-            counts[_bucket(tok)] += 1
-        norm = math.sqrt(sum(c * c for c in counts)) or 1.0
-        return [math.floor(c / norm * 10000) / 10000 for c in counts]
-
-    @F.pandas_udf(_EMBED_OUT)
-    def _embed(texts: pd.Series) -> pd.Series:
-        return texts.map(_one)
-
-    return _embed
-
-
 def quantize_embeddings(vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """(…, q8: array<int>, scale: double) — symmetric int8 quantization:
     q_i = floor(x_i / max|x| × 127), the standard ANN-index compression
@@ -157,25 +120,25 @@ def node_enrich_udf(dim: int = 16):
     payload (text/name/summary/hyde embeddings, scrapeMI.py:79-83); the
     summary-text and hyde LLM calls are external services, so ``summary``
     is a documented deterministic extractive stand-in (the first
-    ``_SUMMARY_TOKENS`` tokens) that exercises the real plumbing.
+    ``_SUMMARY_TOKENS`` tokens) that exercises the real plumbing. The
+    HyDE vector needs an LLM call per node, and any stand-in would be
+    fake, so it is left out.
 
     Semantics are identical to the unfused columns:
     - ``n_tokens`` = ``size(split(trim(lower(t)), '\\s+'))`` — note the
       JVM regex-split of an empty string yields ``[""]``, i.e. 1, which
       ``re.split`` reproduces; NULL text → NULL count;
-    - ``embedding`` = ``hash_embed_udf`` over ``coalesce(t, '')`` (same
-      md5 bucket, sequential int norm, floor-truncation);
+    - ``embedding`` = ``hash_embed_expr`` over ``coalesce(t, '')`` (same
+      md5 bucket, sequential int norm, floor-truncation), with token →
+      bucket memoized across the worker's batches: the expression form
+      re-evaluates its md5 subtree once per output dimension;
     - ``name_embedding`` = the same hash embedding over the (short) name
       column — nearly free, it rides the batch already in flight;
     - ``summary`` = first ``_SUMMARY_TOKENS`` non-empty lowered tokens
       joined by single spaces; NULL text → NULL."""
     import hashlib
     import math
-    import re
 
-    # re.ASCII: Java's \s is [ \t\n\x0B\f\r] only; Python's default \s also
-    # matches Unicode whitespace (\xa0 etc.) and would over-count
-    ws = re.compile(r"\s+", re.ASCII)
     cache: dict[str, int] = {}
 
     def _bucket(tok: str) -> int:
@@ -199,7 +162,7 @@ def node_enrich_udf(dim: int = 16):
         # empty-filtered tokens — identical to _ascii_tokens(t) by
         # construction (same regex, same strip/lower).
         # strip(' '): JVM trim removes only 0x20, not \n\t — match exactly.
-        parts = ws.split((t or "").strip(" ").lower())
+        parts = _WS_ASCII.split((t or "").strip(" ").lower())
         toks = [tok for tok in parts if tok]
         return {
             "n_tokens": None if t is None else len(parts),
@@ -213,70 +176,3 @@ def node_enrich_udf(dim: int = 16):
         return pd.DataFrame([_one(t, nm) for t, nm in zip(texts, names)])
 
     return _enrich
-
-
-def embed_pending(
-    df: DataFrame,
-    text_col: str = "text",
-    embedding_col: str = "embedding",
-    dim: int = 16,
-    batch_size: int = 1000,
-) -> DataFrame:
-    """Enrich rows whose ``embedding_col`` is null — the resume loop's work
-    predicate (``WHERE embedding IS NULL``, processingHelpers.py:59-65) —
-    via mapInPandas batches (the 1000-row batch analog, 3_process.py:14).
-
-    Returns the full frame with embeddings filled; already-embedded rows
-    pass through untouched (idempotent re-run).
-    """
-    out_fields = [f for f in df.schema.fields if f.name != embedding_col]
-    out_schema = T.StructType(
-        out_fields + [T.StructField(embedding_col, T.ArrayType(T.DoubleType()))]
-    )
-    pending = df.filter(F.col(embedding_col).isNull()).drop(embedding_col)
-    done = df.filter(F.col(embedding_col).isNotNull())
-
-    enriched = pending.withColumn(embedding_col, hash_embed_expr(F.col(text_col), dim))
-    _ = batch_size  # embedding is an expression here; a real API client
-    # would use mapInPandas with this batch size — shape kept for the swap
-    return done.select(out_schema.fieldNames()).unionByName(
-        enriched.select(out_schema.fieldNames())
-    )
-
-
-_EMBED_OUT = T.ArrayType(T.DoubleType())
-
-
-def embed_map_in_pandas(
-    df: DataFrame, text_col: str = "text", dim: int = 16
-) -> DataFrame:
-    """The mapInPandas variant — the exact shape an external-API embedding
-    stage uses (iterator of Arrow batches in, enriched batches out), with
-    the deterministic hash embedding standing in for the API call."""
-    import hashlib
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("embedding", _EMBED_OUT)]
-    )
-
-    def _embed_batch(texts: pd.Series) -> pd.Series:
-        import math
-
-        def one(t: str) -> list[float]:
-            counts = [0] * dim
-            for tok in _ascii_tokens(t):
-                h = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
-                counts[h % dim] += 1
-            norm = sum(c * c for c in counts) ** 0.5 or 1.0
-            # floor-truncation matches hash_embed_expr exactly
-            return [math.floor(c / norm * 10000) / 10000 for c in counts]
-
-        return texts.map(one)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["embedding"] = _embed_batch(pdf[text_col])
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)

@@ -83,18 +83,17 @@ def children_agg(nodes: DataFrame) -> DataFrame:
     )
 
 
-def siblings_agg(nodes: DataFrame) -> DataFrame:
+def siblings_agg(children: DataFrame) -> DataFrame:
     """node → ordered siblings (nodes sharing a parent, self removed —
     reference CLAUDE.md:535)."""
-    ch = children_agg(nodes)
-    return (
-        nodes.filter(F.col("parent").isNotNull())
-        .select("node_id", "parent")
-        .join(ch.withColumnRenamed("node_id", "parent"), "parent")
-        .select(
-            "node_id",
-            F.array_remove("direct_children", F.col("node_id")).alias("siblings"),
-        )
+    # ``children`` is the children_agg output: a node's siblings are its
+    # parent's children minus itself, so exploding each child list gives
+    # them with no second aggregate or join
+    return children.select(
+        F.explode("direct_children").alias("node_id"), "direct_children"
+    ).select(
+        "node_id",
+        F.array_remove("direct_children", F.col("node_id")).alias("siblings"),
     )
 
 
@@ -134,11 +133,6 @@ def counts_by_level(nodes: DataFrame) -> DataFrame:
     return nodes.groupBy("level_classifier").agg(F.count("*").alias("n")).orderBy(
         "level_classifier"
     )
-
-
-def counts_by_level_status(nodes: DataFrame) -> DataFrame:
-    """Validation cube (SURVEY §2.5 note: per-level × per-status counts)."""
-    return nodes.cube("level_classifier", "status").agg(F.count("*").alias("n"))
 
 
 def pagerank_int(

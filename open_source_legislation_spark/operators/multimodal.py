@@ -9,16 +9,18 @@ plumbing (schema, partitioning, Arrow batch shape). Two codec tiers:
   24-bit BMP → top-down RGB values (undoing BGR byte order, bottom-up
   row storage, and 4-byte row padding) and PCM16 mono WAV → samples
   (walking RIFF chunks, not assuming the canonical 44-byte layout).
-- compressed formats (JPEG/MP3/H.264 …) need libraries this container
-  lacks, so ``decode_media`` raises ``NotImplementedError`` unless the
-  payload uses the deterministic FAKE codec produced by
-  :func:`synth_media_from_documents`.
+  Compressed formats (JPEG/MP3/H.264 …) need codec libraries the package
+  does not depend on, so they raise ``NotImplementedError``.
+- the deterministic FAKE codec produced by
+  :func:`synth_media_from_documents`, which only the metadata and
+  layout operators read (:func:`extract_metadata`, :func:`frame_sample`,
+  :func:`resize_plan`); nothing decodes it.
 
 The FAKE codec is a 16-byte header::
 
     b"FAKE" | media_type[0:4] | width:uint32le | height:uint32le
 
-followed by the raw utf-8 "pixel" bytes. It exists so the full pipeline —
+followed by the raw utf-8 "pixel" bytes. It exists so the plumbing —
 binary column in parquet, header parse, resize bookkeeping, frame sampling —
 is real and testable end-to-end without external codecs.
 """
@@ -133,40 +135,6 @@ def extract_metadata(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(parse, schema=META_SCHEMA)
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """Decode payload → content text. Real codecs (PIL/ffmpeg/soundfile) are
-    NOT available in this container; only the FAKE codec is implemented, and
-    any other payload raises ``NotImplementedError`` — clearly-marked stub,
-    the Spark-side plumbing (schema, Arrow batching) is the real design."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("decoded_text", T.StringType()),
-        ]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def one(b) -> str:
-                if b is None:
-                    return None
-                b = bytes(b)
-                if b[:4] != _HEADER:
-                    raise NotImplementedError(
-                        "real media codecs are not available in this "
-                        "environment; only the deterministic FAKE codec "
-                        "is decodable"
-                    )
-                return b[_HEADER_LEN:].decode("utf-8")
-
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "decoded_text": pdf["content"].map(one)}
-            )
-
-    return media.mapInPandas(decode, schema=out_schema)
 
 
 def _bmp_bytes(doc_id: int, w: int, h: int) -> bytes:
@@ -327,10 +295,10 @@ def _decode_wav(b: bytes) -> tuple[int, list[int]]:
 
 def decode_media_real(media: DataFrame) -> DataFrame:
     """Decode REAL uncompressed payloads — 24-bit BMP → top-down RGB
-    values, PCM16 mono WAV → samples — in the same ``mapInPandas`` slot
-    as :func:`decode_media`. Compressed/other codecs still raise
-    ``NotImplementedError`` (the libraries aren't in this container);
-    the FAKE codec stays with :func:`decode_media`.
+    values, PCM16 mono WAV → samples — in one ``mapInPandas`` pass. Any
+    other payload, compressed codecs and the FAKE codec included, raises
+    ``NotImplementedError`` (compressed codecs need libraries the package
+    does not depend on).
 
     Output: ``(doc_id, kind, width, height, sample_rate, values)`` —
     images carry (width, height, NULL rate), audio (NULL dims, rate)."""

@@ -5,6 +5,8 @@
 - IVF-partitioned top-k: search only the query's coarse partition (here the
   `label` column stands in for the IVF cell assignment) — the scale path:
   partition pruning turns an all-pairs scan into a per-cell scan;
+- IVF index build (``ivf_build``): deterministic Lloyd k-means that
+  computes such a cell per vector;
 - LSH sign-projection bucketing for ANN without precomputed cells.
 
 All arithmetic is double-precision sequential (zip_with + aggregate) so the
@@ -195,31 +197,6 @@ def ivf_build(
 
     train.unpersist()
     return base.mapInPandas(assigner(cents), schema=out_schema), cents
-
-
-def topk_cosine_ivf_built(
-    embeddings: DataFrame, query_vec_id: int = 0, k_cells: int = 8, top_k: int = 10
-) -> DataFrame:
-    """IVF top-k over a freshly BUILT index (vs ``topk_cosine_ivf``, which
-    trusts a precomputed ``label`` cell): probe only the query's cell."""
-    assigned, _cents = ivf_build(embeddings, k=k_cells, iters=2)
-    q = assigned.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("cell").alias("qcell"), F.col("embedding").alias("qe")
-    )
-    return (
-        assigned.join(F.broadcast(q), F.col("cell") == F.col("qcell"))
-        .filter(F.col("vec_id") != query_vec_id)
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qe"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qe"))),
-                3,
-            ).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), "vec_id")
-        .limit(top_k)
-    )
 
 
 def lsh_planes(n_planes: int, dim: int) -> list[list[float]]:

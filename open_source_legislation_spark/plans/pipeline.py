@@ -135,13 +135,17 @@ class PipelineResult:
         )
 
     @cached_property
+    def _node_rows(self) -> DataFrame:
+        return extract.nodes_table(self.turns)
+
+    @cached_property
     def _rel_src(self) -> DataFrame:
         # cheap projection of the node rows: everything keyed off hierarchy
         # shape (children/siblings/edges/defscope) reads THIS, not the
         # enriched frame — otherwise each relationship join would
         # re-evaluate the node_text / embedding subtree (measured: the
         # nodes write goes from minutes to seconds at 500k turns)
-        return extract.nodes_table(self.turns).select("node_id", "parent", "turn_idx")
+        return self._node_rows.select("node_id", "parent", "turn_idx")
 
     @cached_property
     def _cites(self) -> DataFrame:
@@ -182,7 +186,7 @@ class PipelineResult:
         node_texts = extract.node_text_agg(self.turns, addenda=self._addenda)
         full_text = F.coalesce(F.col("node_text"), F.col("text"))
         nodes = (
-            extract.nodes_table(self.turns)
+            self._node_rows
             .join(
                 F.broadcast(self._addenda.select(
                     F.col("current_node").alias("node_id"), "node_addendum"
@@ -215,9 +219,10 @@ class PipelineResult:
         # node_incoming_references in the post-scrape update,
         # CLAUDE.md:171-174, scrapeMI.py:85-88) — node_id-keyed joins over
         # the nodes frame (≪ turns; AQE picks the join strategy)
+        children = graph.children_agg(self._rel_src)
         return (
-            nodes.join(graph.children_agg(self._rel_src), "node_id", "left")
-            .join(graph.siblings_agg(self._rel_src), "node_id", "left")
+            nodes.join(children, "node_id", "left")
+            .join(graph.siblings_agg(children), "node_id", "left")
             .join(graph.incoming_references(self._cites), "node_id", "left")
         )
 

@@ -299,8 +299,9 @@ def q_window_running(spark, sf_dir):
 
 
 def q_agg_cube_level_status(spark, sf_dir):
-    """SURVEY §2.5 grouping-sets note — per-level × per-status validation
-    cube (counts_by_level_status analog)."""
+    """SURVEY §2.5 grouping-sets note — the per-level × per-status
+    validation cube (``cube(level_classifier, status)`` over the nodes
+    table), here over orders by status × priority."""
     o = _t(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("n"))
 

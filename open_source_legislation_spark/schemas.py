@@ -1,9 +1,10 @@
-"""Explicit StructType schemas for every table in the pipeline.
+"""Explicit StructType schemas for the pipeline's input tables.
 
 The reference validates shapes with Pydantic models (reference
-``src/utils/pydanticModels.py:408-467``); we validate with explicit Spark
-schemas — never inference — plus predicate checks materialized as a
-violations DataFrame (see ``plans.pipeline.invariants``).
+``src/utils/pydanticModels.py:408-467``); we read inputs with explicit
+Spark schemas — never inference. The output invariants live in
+``operators/graph.py``: the orphan and null-parent checks return a
+violations DataFrame, and ``counts_by_level`` the sanity distribution.
 """
 
 from __future__ import annotations
@@ -41,90 +42,5 @@ ALIAS_EDGES = T.StructType(
         T.StructField("src", T.StringType(), False),
         T.StructField("dst", T.StringType(), False),
         T.StructField("reason", T.StringType(), True),
-    ]
-)
-
-# One extracted citation/link mention, pre-linking
-# (reference Reference/ReferenceHub, pydanticModels.py:169-189).
-MENTION = T.StructType(
-    [
-        T.StructField("mention_text", T.StringType(), False),
-        T.StructField("corpus", T.StringType(), True),
-        T.StructField("raw_key", T.StringType(), True),
-        T.StructField("start", T.IntegerType(), True),
-    ]
-)
-
-# One extracted definition (reference Definition, pydanticModels.py:138-152).
-DEFINITION = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("definition", T.StringType(), True),
-        T.StructField("kind", T.StringType(), True),  # quoted|emphasized|incorporated
-        T.StructField("incorporated_from", T.StringType(), True),
-    ]
-)
-
-# Output triples (FIXTURES.md §4 golden schema).
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), True),
-        T.StructField("conv_id", T.StringType(), True),
-        T.StructField("turn_idx", T.IntegerType(), True),
-    ]
-)
-
-# Graph tables — mirror the reference node table (reference CLAUDE.md:514-536,
-# scrapeMI.py:67-90) with hierarchy encoded as edges. Of the reference's four
-# per-node vectors (scrapeMI.py:79-83: text, name, summary, HyDE), the
-# enriched-nodes branch carries text + name embeddings and an extractive
-# summary stand-in (plans/pipeline.py multi_embed); the fourth — a
-# hypothetical-document (HyDE) embedding — requires an LLM call per node and
-# any sandbox stand-in would be fake, so it is deliberately out of scope.
-NODES = T.StructType(
-    [
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("node_type", T.StringType(), False),  # structure|content
-        T.StructField("level_classifier", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("parent", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),  # valid|reserved|repealed|renumbered
-        T.StructField("conv_id", T.StringType(), True),
-        T.StructField("turn_idx", T.IntegerType(), True),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("rel", T.StringType(), False),  # child_of|cites|alias_of|defined_in_scope
-    ]
-)
-
-# Resume & lineage (FIXTURES.md §5) — the Spark analog of the reference's
-# in-table resume state (null embedding = pending, processingHelpers.py:59-65).
-CHECKPOINT_MANIFEST = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), True),
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
-
-METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), True),
     ]
 )

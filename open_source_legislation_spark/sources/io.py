@@ -3,9 +3,9 @@
 The reference's sources are HTTP/HTML/XML/JSON acquisition plus a Postgres
 row sink (SURVEY §2.1); our engine takes *landed* tables as input and writes
 analytic tables. Iceberg is the design target (``writeTo(...).append()``,
-MERGE INTO for the upsert sink); the sandbox has no Iceberg runtime jar, so
-``table_format()`` falls back to parquet with identical schemas and
-partitioning — the swap is isolated here (SURVEY §7.4.5).
+MERGE INTO for the upsert sink); the package ships no Iceberg runtime, so
+every sink here writes parquet with the schemas and partitioning an
+Iceberg table would get — the swap is isolated here (SURVEY §7.4.5).
 """
 
 from __future__ import annotations
@@ -15,13 +15,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
-
-
-def table_format(spark: SparkSession) -> str:
-    """'iceberg' when the runtime + catalog are configured, else 'parquet'."""
-    if spark.conf.get("spark.sql.catalog.kg", None):
-        return "iceberg"
-    return "parquet"
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:

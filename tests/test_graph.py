@@ -40,9 +40,24 @@ def test_children_are_ordered_and_complete(result):
 
 
 def test_siblings_exclude_self(result):
-    sib = graph.siblings_agg(result.nodes)
+    sib = graph.siblings_agg(graph.children_agg(result.nodes))
     bad = sib.filter(F.array_contains("siblings", F.col("node_id"))).count()
     assert bad == 0
+    # brute force: same parent, self removed, ordered by (turn_idx, node_id)
+    rows = result.nodes.select("node_id", "parent", "turn_idx").collect()
+    by_parent = {}
+    for r in rows:
+        if r["parent"] is not None:
+            o = -1 if r["turn_idx"] is None else r["turn_idx"]
+            by_parent.setdefault(r["parent"], []).append((o, r["node_id"]))
+    expected = {
+        r["node_id"]: [n for _, n in sorted(by_parent[r["parent"]]) if n != r["node_id"]]
+        for r in rows
+        if r["parent"] is not None
+    }
+    got = {r["node_id"]: list(r["siblings"]) for r in sib.collect()}
+    assert got == expected
+    assert any(got.values()), "fixture has no node with a sibling"
 
 
 def test_edges_rel_vocabulary(result):

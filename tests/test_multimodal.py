@@ -1,9 +1,9 @@
 """Multimodal binary-column plumbing (operators/multimodal.py).
 
-The codec is the deterministic FAKE codec (real image/audio libs are not in
-this container); what is under test is the Spark-side design: binary column
-construction JVM-side, typed-header parse via mapInPandas Arrow batches,
-strided frame sampling with JVM slicing, and the decode round-trip.
+The payloads use the deterministic FAKE codec; what is under test is the
+Spark-side design: binary column construction JVM-side, typed-header parse
+via mapInPandas Arrow batches, strided frame sampling with JVM slicing, and
+the real decoder's refusal of a codec it cannot decode.
 """
 
 from __future__ import annotations
@@ -51,20 +51,13 @@ def test_metadata_header_roundtrip(docs, media):
         assert m["height"] == d["doc_id"] % 32 + 1
 
 
-def test_decode_roundtrip(docs, media):
-    decoded = multimodal.decode_media(media)
-    got = {r["doc_id"]: r["decoded_text"] for r in decoded.collect()}
-    for d in docs.collect():
-        assert got[d["doc_id"]] == d["text"]
-
-
 def test_decode_unknown_codec_raises(spark):
     bad = spark.createDataFrame(
         [(99, "image", bytearray(b"JPEGnotfake"), {})],
         schema=multimodal.MEDIA_SCHEMA,
     )
-    with pytest.raises(Exception, match="NotImplementedError|FAKE"):
-        multimodal.decode_media(bad).collect()
+    with pytest.raises(Exception, match="NotImplementedError"):
+        multimodal.decode_media_real(bad).collect()
 
 
 def test_frame_sample_strided(media):
