@@ -65,7 +65,6 @@ def ngram_jaccard_pairs(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded 3.
     """
     sh = shingles(docs, n)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     doc_freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     rare = sh.join(
         doc_freq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle"
@@ -81,102 +80,14 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b_sh = sh.select(F.col("doc_id").alias("_doc_b2"), F.col("shingle").alias("shingle_b"))
-    inter = (
-        cands.join(a_sh, "doc_a")
-        .join(
-            b_sh,
-            (F.col("doc_b") == F.col("_doc_b2")) & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 3),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verified_jaccard(cands, sh, threshold)
 
 
-# deterministic affine permutation constants for MinHash (public textbook
-# scheme: h_i(x) = (a_i * x + b_i) mod p, p = 2^31 - 1 prime)
-_MH_P = 2147483647
-
-
-def _mh_params(num_perm: int) -> list[tuple[int, int]]:
-    # fixed, seedless, reproducible in SQL literals
-    return [(2 * i + 1, 7919 * (i + 1) % _MH_P) for i in range(num_perm)]
-
-
-def minhash_signatures(docs: DataFrame, n: int = 3, num_perm: int = 16) -> DataFrame:
-    """(doc_id, sig: array<bigint>[num_perm]) MinHash signatures."""
-    sh = shingles(docs, n).withColumn("h", _h64(F.col("shingle")))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_mh_params(num_perm))
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id", F.array(*[f"mh{i}" for i in range(num_perm)]).alias("sig")
-    )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    num_perm: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """MinHash+LSH near-dup candidates, verified by true Jaccard.
-
-    band → bucket-join on the band signature (docs colliding in ≥1 band
-    become candidates) → verify with exact shingle Jaccard ≥ threshold,
-    computed ONLY for candidate pairs (shingles joined through the candidate
-    list, never the all-pairs co-occurrence join — that would defeat the
-    LSH pruning). The band join is the scale path: shuffle volume is
-    #docs × #bands, never quadratic. Output: (doc_a, doc_b, jaccard).
-    """
-    rows_per_band = num_perm // bands
-    sig = minhash_signatures(docs, n, num_perm)
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col("sig")[bi * rows_per_band + r].cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    l, r = banded.alias("l"), banded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh = shingles(docs, n)
+def _verified_jaccard(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """True shingle Jaccard of each candidate pair ``(doc_a, doc_b)``, over
+    the full shingle sets ``sh`` joined through the candidate list (never
+    the all-pairs co-occurrence join). Output: (doc_a, doc_b, jaccard) with
+    jaccard rounded 3 and ≥ threshold."""
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b_sh = sh.select(
@@ -208,6 +119,83 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
+
+
+# deterministic affine permutation constants for MinHash (public textbook
+# scheme: h_i(x) = (a_i * x + b_i) mod p, p = 2^31 - 1 prime)
+_MH_P = 2147483647
+
+
+def _mh_params(num_perm: int) -> list[tuple[int, int]]:
+    # fixed, seedless, reproducible in SQL literals
+    return [(2 * i + 1, 7919 * (i + 1) % _MH_P) for i in range(num_perm)]
+
+
+def minhash_signatures(sh: DataFrame, num_perm: int = 16) -> DataFrame:
+    """(doc_id, sig: array<bigint>[num_perm]) MinHash signatures of the
+    ``(doc_id, shingle)`` frame ``sh``."""
+    sh = sh.withColumn("h", _h64(F.col("shingle")))
+    aggs = [
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P)).alias(f"mh{i}")
+        for i, (a, b) in enumerate(_mh_params(num_perm))
+    ]
+    sig = sh.groupBy("doc_id").agg(*aggs)
+    return sig.select(
+        "doc_id", F.array(*[f"mh{i}" for i in range(num_perm)]).alias("sig")
+    )
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    n: int = 3,
+    num_perm: int = 16,
+    bands: int = 4,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """MinHash+LSH near-dup candidates, verified by true Jaccard.
+
+    band → bucket-join on the band signature (docs colliding in ≥1 band
+    become candidates) → verify with exact shingle Jaccard ≥ threshold,
+    computed ONLY for candidate pairs (shingles joined through the candidate
+    list, never the all-pairs co-occurrence join — that would defeat the
+    LSH pruning). The band join is the scale path: shuffle volume is
+    #docs × #bands, never quadratic. Output: (doc_a, doc_b, jaccard).
+    """
+    rows_per_band = num_perm // bands
+    sh = shingles(docs, n)
+    sig = minhash_signatures(sh, num_perm)
+    banded = sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(bi).alias("band"),
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.col("sig")[bi * rows_per_band + r].cast("string")
+                                for r in range(rows_per_band)
+                            ],
+                        ).alias("bucket"),
+                    )
+                    for bi in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    l, r = banded.alias("l"), banded.alias("r")
+    cands = (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    return _verified_jaccard(cands, sh, threshold)
 
 
 def near_dup_clusters(

@@ -13,8 +13,7 @@ as one derive engine, :func:`derive_nodes_stream`:
   JVM-only;
 - a vectorized ``mapInArrow`` state pass over the ``hash(conv_id)``-
   partitioned, sorted turns does dedup/ordinals/parent-stack/scope fills
-  at ~µs/row (:func:`derive_nodes_sharded` splits a pathologically long
-  conversation across tasks with stitched boundary state).
+  at ~µs/row.
 
 The pure-Python oracle (``oracle.py``) is the independent reference the
 engine is tested against (tests/test_engines_equivalent.py).
@@ -26,8 +25,9 @@ chunk-salted separately (:func:`node_text_agg`).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -171,11 +171,8 @@ def _ffill_object(a: "np.ndarray") -> "np.ndarray":
     return a[idx]
 
 
-_SHARD_STATE = "__SHARD_STATE__"
-
-
 def _prepped_payload(transcripts: DataFrame, num_partitions: int | None) -> DataFrame:
-    """Shared prologue of the streaming engines: ``payload UDF (pre-shuffle,
+    """Prologue of :func:`derive_nodes_stream`: ``payload UDF (pre-shuffle,
     balanced) → repartition(hash(conv_id)) → sortWithinPartitions(conv_id,
     turn_idx, ts, md5(text))`` → project the Arrow-hop columns.
 
@@ -208,219 +205,126 @@ def _prepped_payload(transcripts: DataFrame, num_partitions: int | None) -> Data
     )
 
 
-def _make_state_kernel(
-    entry_states: dict | None = None, emit_exit_state: bool = False
-):
-    """Build the sorted-partition state kernel (see
-    :func:`derive_nodes_stream` for semantics).
-
-    ``entry_states`` seeds a conversation's boundary state at its first row
-    in the partition — the conv-sharding stitch: ``{conv_id: {"turn", "ord",
-    "current", "defs", "stack", "counts"}}`` carried from the previous
-    ``(conv_id, turn_range)`` shard. ``emit_exit_state`` appends one
-    sentinel row per conversation (``node_id == _SHARD_STATE``, state JSON
-    in ``clean_text``) so the driver loop can collect the exit states that
-    seed the next shard.
-    """
-    import json
-    from collections.abc import Iterator
-
+def _state_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The sorted-partition state pass (see :func:`derive_nodes_stream` for
+    semantics)."""
     import numpy as np
     import pyarrow as pa
 
-    entry_states = entry_states or {}
+    ranks = rules.LEVEL_RANKS
+    # state carried across Arrow batches within a partition
+    carry_conv: str | None = None
+    carry_turn = -1
+    carry_ord = 0
+    carry_current: str | None = None
+    carry_defs = False
+    stack: list[tuple[int, str]] = []
+    id_counts: dict[str, int] = {}
+    stack_conv: str | None = None
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ranks = rules.LEVEL_RANKS
-        # state carried across Arrow batches within a partition
-        carry_conv: str | None = None
-        carry_turn = -1
-        carry_ord = 0
-        carry_current: str | None = None
-        carry_defs = False
-        stack: list[tuple[int, str]] = []
-        id_counts: dict[str, int] = {}
-        stack_conv: str | None = None
-        # exit-state bookkeeping (sharded mode only)
-        exit_meta: dict[str, dict] = {}
-        stack_snap: dict[str, tuple[list, dict]] = {}
-        ext_type = None
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ext_type = batch.schema.field("extractions").type
-            names = batch.schema.names
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        names = batch.schema.names
+        col = {n: batch.column(i) for i, n in enumerate(names)}
+        conv = np.asarray(col["conv_id"].to_pylist(), dtype=object)
+        turn = col["turn_idx"].to_numpy(zero_copy_only=False)
+        # first-writer-wins dedup: equal-turn runs keep only the first
+        prev_conv = np.concatenate(([carry_conv], conv[:-1]))
+        prev_turn = np.concatenate(([carry_turn], turn[:-1]))
+        keep = (conv != prev_conv) | (turn != prev_turn)
+        if not keep.all():
+            batch = batch.filter(pa.array(keep))
             col = {n: batch.column(i) for i, n in enumerate(names)}
-            conv = np.asarray(col["conv_id"].to_pylist(), dtype=object)
-            turn = col["turn_idx"].to_numpy(zero_copy_only=False)
-            # first-writer-wins dedup: equal-turn runs keep only the first
-            # (a duplicated turn never straddles shards: equal turn_idx →
-            # equal turn-range bucket)
-            prev_conv = np.concatenate(([carry_conv], conv[:-1]))
-            prev_turn = np.concatenate(([carry_turn], turn[:-1]))
-            keep = (conv != prev_conv) | (turn != prev_turn)
-            if not keep.all():
-                batch = batch.filter(pa.array(keep))
-                col = {n: batch.column(i) for i, n in enumerate(names)}
-                conv = conv[keep]
-                turn = turn[keep]
-            m = len(conv)
-            if m == 0:
-                continue
+            conv = conv[keep]
+            turn = turn[keep]
+        m = len(conv)
+        if m == 0:
+            continue
 
-            start = conv != np.concatenate(([carry_conv], conv[:-1]))
-            pos = np.arange(m)
-            # stable ordinal: restart at conv starts, else continue carry;
-            # a seeded conv's ordinals continue from the previous shard
-            last_start = np.maximum.accumulate(np.where(start, pos, -1))
-            base = np.zeros(m, dtype=np.int64)
-            if entry_states:
-                for i in np.flatnonzero(start):
-                    e = entry_states.get(conv[i])
-                    if e is not None:
-                        base[i] = e["ord"]
-            safe_ls = np.maximum(last_start, 0)
-            ords = np.where(
-                last_start >= 0,
-                pos - safe_ls + 1 + base[safe_ls],
-                pos + carry_ord + 1,
-            )
+        start = conv != np.concatenate(([carry_conv], conv[:-1]))
+        pos = np.arange(m)
+        # stable ordinal: restart at conv starts, else continue carry
+        last_start = np.maximum.accumulate(np.where(start, pos, -1))
+        ords = np.where(
+            last_start >= 0, pos - last_start + 1, pos + carry_ord + 1
+        )
 
-            cls = np.asarray(col["classifier"].to_pylist(), dtype=object)
-            num = np.asarray(col["number"].to_pylist(), dtype=object)
-            nam = np.asarray(col["name"].to_pylist(), dtype=object)
-            hier_mask = cls != None  # noqa: E711
+        cls = np.asarray(col["classifier"].to_pylist(), dtype=object)
+        num = np.asarray(col["number"].to_pylist(), dtype=object)
+        nam = np.asarray(col["name"].to_pylist(), dtype=object)
+        hier_mask = cls != None  # noqa: E711
 
-            node_id = np.full(m, None, dtype=object)
-            raw_id = np.full(m, None, dtype=object)
-            parent = np.full(m, None, dtype=object)
-            status = np.full(m, None, dtype=object)
-            current = np.full(m, None, dtype=object)
-            defs_v = np.full(m, None, dtype=object)
+        node_id = np.full(m, None, dtype=object)
+        raw_id = np.full(m, None, dtype=object)
+        parent = np.full(m, None, dtype=object)
+        status = np.full(m, None, dtype=object)
+        current = np.full(m, None, dtype=object)
+        defs_v = np.full(m, None, dtype=object)
 
-            # sequential stack walk over hierarchy rows only
-            for i in np.flatnonzero(hier_mask):
-                c = conv[i]
-                if c != stack_conv:
-                    if emit_exit_state and stack_conv is not None:
-                        stack_snap[stack_conv] = (list(stack), dict(id_counts))
-                    seed = entry_states.get(c)
-                    if seed is not None:
-                        stack = [(int(r_), s_) for r_, s_ in seed["stack"]]
-                        id_counts = dict(seed["counts"])
-                    else:
-                        stack = []
-                        id_counts = {}
-                    stack_conv = c
-                rank = ranks[cls[i]]
-                while stack and stack[-1][0] >= rank:
-                    stack.pop()
-                par = stack[-1][1] if stack else "conv=" + c
-                r = f"{par}/{cls[i]}={num[i]}"
-                k = id_counts[r] = id_counts.get(r, 0) + 1
-                nid = r if k == 1 else f"{r}-v_{k}"
-                stack.append((rank, nid))
-                node_id[i] = nid
-                raw_id[i] = r
-                parent[i] = par
-                status[i] = rules.node_status(nam[i])
-                current[i] = nid
+        # sequential stack walk over hierarchy rows only
+        for i in np.flatnonzero(hier_mask):
+            c = conv[i]
+            if c != stack_conv:
+                stack = []
+                id_counts = {}
+                stack_conv = c
+            rank = ranks[cls[i]]
+            while stack and stack[-1][0] >= rank:
+                stack.pop()
+            par = stack[-1][1] if stack else "conv=" + c
+            r = f"{par}/{cls[i]}={num[i]}"
+            k = id_counts[r] = id_counts.get(r, 0) + 1
+            nid = r if k == 1 else f"{r}-v_{k}"
+            stack.append((rank, nid))
+            node_id[i] = nid
+            raw_id[i] = r
+            parent[i] = par
+            status[i] = rules.node_status(nam[i])
+            current[i] = nid
 
-            # definitions scope: headers open it, hierarchy nodes close it,
-            # conv starts reset it (or continue the previous shard's scope)
-            defs_v[hier_mask] = False
-            hdr = col["defs_header"].to_numpy(zero_copy_only=False).astype(bool)
-            defs_v[hdr & ~hier_mask] = True
-            for i in np.flatnonzero(start & (defs_v == None)):  # noqa: E711
-                e = entry_states.get(conv[i])
-                defs_v[i] = bool(e["defs"]) if e is not None else False
-            # current-node scope: conv starts seed the root id (or the
-            # previous shard's open node)
-            for i in np.flatnonzero(start & (current == None)):  # noqa: E711
-                e = entry_states.get(conv[i])
-                current[i] = (
-                    e["current"] if e is not None else "conv=" + conv[i]
-                )
-            # batch-boundary continuation seeds
-            if not start[0]:
-                if current[0] is None:
-                    current[0] = carry_current
-                if defs_v[0] is None:
-                    defs_v[0] = carry_defs
-            current = _ffill_object(current)
-            defs_filled = _ffill_object(defs_v)
+        # definitions scope: headers open it, hierarchy nodes close it,
+        # conv starts reset it
+        defs_v[hier_mask] = False
+        hdr = col["defs_header"].to_numpy(zero_copy_only=False).astype(bool)
+        defs_v[hdr & ~hier_mask] = True
+        defs_v[start & (defs_v == None)] = False  # noqa: E711
+        # current-node scope: conv starts seed the root id
+        for i in np.flatnonzero(start & (current == None)):  # noqa: E711
+            current[i] = "conv=" + conv[i]
+        # batch-boundary continuation seeds
+        if not start[0]:
+            if current[0] is None:
+                current[0] = carry_current
+            if defs_v[0] is None:
+                defs_v[0] = carry_defs
+        current = _ffill_object(current)
+        defs_filled = _ffill_object(defs_v)
 
-            carry_conv = conv[-1]
-            carry_turn = turn[-1]
-            carry_ord = int(ords[-1])
-            carry_current = current[-1]
-            carry_defs = bool(defs_filled[-1])
+        carry_conv = conv[-1]
+        carry_turn = turn[-1]
+        carry_ord = int(ords[-1])
+        carry_current = current[-1]
+        carry_defs = bool(defs_filled[-1])
 
-            if emit_exit_state:
-                # one run end per conversation per batch — few rows
-                end_mask = np.append(start[1:], True)
-                for j in np.flatnonzero(end_mask):
-                    exit_meta[conv[j]] = {
-                        "turn": int(turn[j]),
-                        "ord": int(ords[j]),
-                        "current": current[j],
-                        "defs": bool(defs_filled[j]),
-                    }
-
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["conv_id"],
-                    col["turn_idx"],
-                    pa.array(ords.astype("int32")),
-                    col["clean_text"],
-                    col["classifier"],
-                    col["name"],
-                    pa.array(node_id, type=pa.string()),
-                    pa.array(raw_id, type=pa.string()),
-                    pa.array(parent, type=pa.string()),
-                    pa.array(status, type=pa.string()),
-                    pa.array(current, type=pa.string()),
-                    pa.array(defs_filled, type=pa.bool_()),
-                    col["extractions"],
-                ],
-                names=[f.name for f in _DERIVED_SCHEMA.fields],
-            )
-
-        if emit_exit_state and exit_meta:
-            if stack_conv is not None:
-                stack_snap[stack_conv] = (list(stack), dict(id_counts))
-            cids, payloads = [], []
-            for c, meta in exit_meta.items():
-                snap = stack_snap.get(c)
-                if snap is None:
-                    e = entry_states.get(c)
-                    snap = (e["stack"], e["counts"]) if e is not None else ([], {})
-                payloads.append(
-                    json.dumps({**meta, "stack": snap[0], "counts": snap[1]})
-                )
-                cids.append(c)
-            n = len(cids)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cids, type=pa.string()),
-                    pa.array([-1] * n, type=pa.int32()),
-                    pa.array([-1] * n, type=pa.int32()),
-                    pa.array(payloads, type=pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.array([_SHARD_STATE] * n, type=pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.nulls(n, pa.string()),
-                    pa.nulls(n, pa.bool_()),
-                    pa.nulls(n, ext_type),
-                ],
-                names=[f.name for f in _DERIVED_SCHEMA.fields],
-            )
-
-    return kernel
+        yield pa.RecordBatch.from_arrays(
+            [
+                col["conv_id"],
+                col["turn_idx"],
+                pa.array(ords.astype("int32")),
+                col["clean_text"],
+                col["classifier"],
+                col["name"],
+                pa.array(node_id, type=pa.string()),
+                pa.array(raw_id, type=pa.string()),
+                pa.array(parent, type=pa.string()),
+                pa.array(status, type=pa.string()),
+                pa.array(current, type=pa.string()),
+                pa.array(defs_filled, type=pa.bool_()),
+                col["extractions"],
+            ],
+            names=[f.name for f in _DERIVED_SCHEMA.fields],
+        )
 
 
 def _emphasized_fixup(out: DataFrame) -> DataFrame:
@@ -449,7 +353,7 @@ def derive_nodes_stream(
     """Streaming derive — the scale path.
 
     ``payload UDF (pre-shuffle, balanced) → repartition(hash(conv_id)) →
-    sortWithinPartitions(conv_id, turn_idx, ts, md5(text)) → mapInPandas(state
+    sortWithinPartitions(conv_id, turn_idx, ts, md5(text)) → mapInArrow(state
     kernel)``: ONE exchange, ONE JVM sort, ONE balanced Arrow pass plus a
     near-free sequential pass. The state kernel walks each sorted partition
     with a running parent stack (the reference's per-document cursor,
@@ -462,102 +366,11 @@ def derive_nodes_stream(
     depth) memory and ~µs/row time.
 
     Equality with the pure-Python oracle on adversarial inputs (duplicates,
-    hot skew, dirty text) is a test invariant. For a conversation too long
-    even for the ~µs/row sequential pass in one task,
-    :func:`derive_nodes_sharded` splits it across tasks on turn ranges with
-    stitched boundary state.
+    hot skew, dirty text) is a test invariant.
     """
     df = _prepped_payload(transcripts, num_partitions)
-    out = df.mapInArrow(_make_state_kernel(), schema=_DERIVED_SCHEMA)
+    out = df.mapInArrow(_state_kernel, schema=_DERIVED_SCHEMA)
     return _emphasized_fixup(out)
-
-
-def derive_nodes_sharded(
-    transcripts: DataFrame,
-    shard_turns: int = 1_000_000,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Skew escape hatch: :func:`derive_nodes_stream`, but a conversation
-    whose turn index reaches ``shard_turns`` is split into ``(conv_id,
-    turn_range)`` shards processed by DIFFERENT tasks, with the boundary
-    state (parent stack, id version counts, open node, defs scope, last
-    turn/ordinal) stitched across shards.
-
-    The per-turn state recurrence is inherently sequential, so the shards
-    of one conversation run in successive ROUNDS: round *s* derives every
-    oversized conversation's turns in ``[s·B, (s+1)·B)`` in parallel,
-    seeded with round *s−1*'s exit states (collected via ``_SHARD_STATE``
-    sentinel rows); normal-sized conversations take the single-pass kernel
-    untouched. Driver state is tiny per conversation — stack ≤ hierarchy
-    depth, id counts ≤ distinct hierarchy ids seen (hierarchy rows ≪
-    turns) — and only PATHOLOGICAL conversations (>10⁹ turns at the
-    default knob; here lowered only in tests) ever enter the loop, so the
-    round count stays single-digit. Output is bit-identical to the
-    unsharded engine (pinned by tests/test_engines_equivalent.py).
-
-    A duplicated turn_idx never straddles shards (equal index → equal
-    bucket), so first-writer-wins dedup is shard-local.
-
-    Returns ``(derived, round_caches)``: each round is persisted DISK_ONLY
-    (its exit-state collect and the final union must see the SAME pass —
-    ids depend on walk state), and those caches back ``derived``'s plan.
-    The caller owns them: unpersist each once ``derived`` is materialized
-    elsewhere (``run_pipeline`` does so right after its parquet spill).
-    The list is empty when no conversation reaches ``shard_turns``.
-    """
-    import json
-
-    # ONE aggregation pass decides everything driver-side: which
-    # conversations are oversized AND how many rounds their longest needs.
-    # (Re-deriving the groupBy for the broadcast frames / round count
-    # would re-scan the full input up to four times — the collected rows
-    # are already on the driver, so the join sides are built from them.)
-    mx = transcripts.groupBy("conv_id").agg(F.max("turn_idx").alias("_mx"))
-    big_rows = mx.filter(F.col("_mx") >= shard_turns).collect()
-    big_ids = [r.conv_id for r in big_rows]
-    if not big_ids:
-        return derive_nodes_stream(transcripts, num_partitions), []
-
-    big = transcripts.sparkSession.createDataFrame(
-        [(c,) for c in big_ids], schema="conv_id string"
-    )
-    small = transcripts.join(F.broadcast(big), "conv_id", "left_anti")
-    bigt = transcripts.join(F.broadcast(big), "conv_id", "inner")
-    parts = [derive_nodes_stream(small, num_partitions)]
-    round_caches = []
-
-    n_rounds = max(int(r._mx) for r in big_rows) // shard_turns + 1
-    entry: dict[str, dict] = {}
-    for s in range(n_rounds):
-        shard = bigt.filter(
-            (F.col("turn_idx") >= s * shard_turns)
-            & (F.col("turn_idx") < (s + 1) * shard_turns)
-        )
-        raw = _prepped_payload(shard, num_partitions).mapInArrow(
-            _make_state_kernel(entry, emit_exit_state=True),
-            schema=_DERIVED_SCHEMA,
-        )
-        round_caches.append(raw.persist(StorageLevel.DISK_ONLY))
-        exits = {
-            r["conv_id"]: json.loads(r["clean_text"])
-            for r in raw.filter(F.col("node_id") == _SHARD_STATE)
-            .select("conv_id", "clean_text")
-            .collect()
-        }
-        # a conv absent from this turn range keeps its prior entry state
-        entry = {**entry, **exits}
-        parts.append(
-            _emphasized_fixup(
-                raw.filter(
-                    F.col("node_id").isNull() | (F.col("node_id") != _SHARD_STATE)
-                )
-            )
-        )
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out, round_caches
 
 
 def conv_root_col(conv_id: Column) -> Column:

@@ -59,15 +59,11 @@ class CheckpointedRunner:
         out_dir: str,
         run_id: str,
         num_buckets: int = 8,
-        max_conv_turns: int | None = None,
     ) -> None:
         self.spark = spark
         self.out_dir = out_dir
         self.run_id = run_id
         self.num_buckets = num_buckets
-        # skew escape hatch, forwarded to run_pipeline: conversations past
-        # this turn count are derived in (conv_id, turn_range) shards
-        self.max_conv_turns = max_conv_turns
         os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(out_dir, METRICS_DIR), exist_ok=True)
 
@@ -311,9 +307,7 @@ class CheckpointedRunner:
         # (the analog of Iceberg partition pruning on bucket(B, conv_id))
         part = self.spark.read.parquet(part_path)
         rows_in = self._parquet_rows(part_path)
-        res = run_pipeline(
-            self.spark, part, entity_dict, max_conv_turns=self.max_conv_turns
-        )
+        res = run_pipeline(self.spark, part, entity_dict)
         tri_path = os.path.join(self.out_dir, "triples", f"bucket={b}")
         nodes_path = os.path.join(self.out_dir, "nodes", f"bucket={b}")
         # overwrite per-bucket dirs → retries of a half-written bucket

@@ -37,8 +37,9 @@ from ..operators import (
 )
 
 
-# Live derived-spill directories awaiting exit-time removal. ONE atexit
-# callback drains the set (registering shutil.rmtree per dir would grow
+# Live scratch directories (derived spills and the contract queries'
+# ``_run_tmpdir`` dirs) awaiting exit-time removal. ONE atexit callback
+# drains the set (registering shutil.rmtree per dir would grow
 # the atexit registry by one dead entry per pipeline invocation in a
 # long-lived process — atexit.unregister removes by FUNCTION, so per-dir
 # entries cannot be retired individually). cleanup() discards its dir
@@ -388,16 +389,12 @@ def run_pipeline(
     alias_edges: DataFrame | None = None,
     num_partitions: int | None = None,
     canonicalize_triples: bool = False,
-    max_conv_turns: int | None = None,
 ) -> PipelineResult:
     """Build the KG outputs of ``transcripts`` as one DataFrame DAG.
 
     The derive stage is :func:`extract.derive_nodes_stream`: one exchange,
     one JVM sort, one pre-shuffle Arrow payload pass and one ``mapInArrow``
-    state pass. ``max_conv_turns`` is the skew escape hatch: a conversation
-    whose turn index reaches it is derived in ``(conv_id, turn_range)``
-    shards across tasks with stitched boundary state
-    (:func:`extract.derive_nodes_sharded`).
+    state pass.
 
     The multiply-consumed derived frame is written to a columnar parquet
     spill and re-read, so each downstream branch PRUNES the columns it
@@ -410,15 +407,7 @@ def run_pipeline(
     """
     import tempfile
 
-    round_caches: list[DataFrame] = []
-    if max_conv_turns is not None:
-        derived, round_caches = extract.derive_nodes_sharded(
-            transcripts, shard_turns=max_conv_turns, num_partitions=num_partitions
-        )
-    else:
-        derived = extract.derive_nodes_stream(
-            transcripts, num_partitions=num_partitions
-        )
+    derived = extract.derive_nodes_stream(transcripts, num_partitions=num_partitions)
     spill_dir = tempfile.mkdtemp(prefix="osl_derived_")
     # exit-time backstop for callers that can only consume the outputs
     # LAZILY and never reach cleanup() (contract queries return a
@@ -430,9 +419,6 @@ def run_pipeline(
     # dead callbacks.
     _register_spill_dir(spill_dir)
     derived.write.mode("overwrite").parquet(spill_dir)
-    # the spill copy is durable: the sharded rounds' caches are not needed
-    for cached in round_caches:
-        cached.unpersist()
     # explicit schema: an empty input writes no part files, and the
     # schema must survive that
     derived = spark.read.schema(extract._DERIVED_SCHEMA).parquet(spill_dir)

@@ -33,14 +33,14 @@ def _run_tmpdir(prefix: str) -> str:
     """Per-run scratch dir (concurrent contract runs must not clobber each
     other), removed at interpreter exit. Eager removal is impossible: the
     returned DataFrame reads the dir lazily AFTER the query callable
-    returns — the driver collects it — so cleanup hooks on exit instead of
-    leaking one dir per sweep."""
-    import atexit
-    import shutil
+    returns — its caller collects it — so the dir joins the pipeline's
+    spill-dir registry, whose one exit callback removes it."""
     import tempfile
 
+    from .plans.pipeline import _register_spill_dir
+
     d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    _register_spill_dir(d)
     return d
 
 

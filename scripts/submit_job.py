@@ -52,14 +52,6 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         help="abort after N buckets (kill-and-resume testing)",
     )
-    p.add_argument(
-        "--max-conv-turns",
-        type=int,
-        default=None,
-        help="skew escape hatch: conversations past this turn count are "
-        "derived in (conv_id, turn_range) shards across tasks with "
-        "stitched boundary state (design point ~1e9)",
-    )
     args = p.parse_args(argv)
 
     # imports deferred until after spark-submit has placed --py-files on the
@@ -86,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         out_dir=args.out,
         run_id=args.run_id,
         num_buckets=args.buckets,
-        max_conv_turns=args.max_conv_turns,
     )
     t0 = time.time()
     processed = runner.run(transcripts, entity_dict, fail_after=args.fail_after)

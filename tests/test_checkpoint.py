@@ -99,24 +99,6 @@ def test_metrics_ledger(spark, transcripts_df, entity_dict_df, tmp_path_factory)
     assert runner.completed_buckets() == {0, 1}
 
 
-def test_runner_sharded_knob_identical_output(
-    spark, transcripts_df, entity_dict_df, tmp_path_factory
-):
-    """The spark-submit-exposed skew knob (max_conv_turns) must not change
-    the committed tables — sharded derive inside buckets is bit-identical."""
-    plain = str(tmp_path_factory.mktemp("ckpt_plain"))
-    shard = str(tmp_path_factory.mktemp("ckpt_shard"))
-    CheckpointedRunner(spark, plain, run_id="p", num_buckets=2).run(
-        transcripts_df, entity_dict_df
-    )
-    CheckpointedRunner(
-        spark, shard, run_id="s", num_buckets=2, max_conv_turns=60
-    ).run(transcripts_df, entity_dict_df)
-    a = _triples_set(CheckpointedRunner(spark, plain, run_id="p", num_buckets=2))
-    b = _triples_set(CheckpointedRunner(spark, shard, run_id="s", num_buckets=2))
-    assert a == b and a
-
-
 def test_fingerprint_not_blind_to_duplicate_pairs(spark):
     """SUM-combined fingerprint: swapping one duplicated row PAIR for a
     different duplicated pair must change the fingerprint (an XOR combine

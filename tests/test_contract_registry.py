@@ -8,7 +8,8 @@ mid-dict. These tests make that class of drift a CI failure:
   annotation (no silently-unverifiable entries);
 - every key that still lacks a green driver row sits inside the checked
   window;
-- the oracle dict has no orphan entries.
+- the oracle dict has no orphan entries;
+- the queries' scratch dirs share one exit-time cleanup.
 """
 
 from __future__ import annotations
@@ -87,3 +88,22 @@ def test_no_oracle_output_column_is_hugeint():
     assert not hazards, (
         f"hazard-typed oracle outputs (driver float64 trap): {hazards}"
     )
+
+
+def test_run_tmpdir_shares_one_exit_callback():
+    """Scratch dirs of the contract queries join the pipeline's spill-dir
+    registry: three dirs add at most one atexit callback, and each dir
+    stays on disk (and registered) until the exit-time removal."""
+    import atexit
+    import os
+
+    from open_source_legislation_spark.plans.pipeline import _LIVE_SPILL_DIRS
+    from open_source_legislation_spark.queries import _run_tmpdir
+
+    before = atexit._ncallbacks()
+    dirs = [_run_tmpdir("osl_test_tmpdir_") for _ in range(3)]
+    assert atexit._ncallbacks() - before <= 1
+    assert len(set(dirs)) == 3
+    for d in dirs:
+        assert os.path.isdir(d)
+        assert d in _LIVE_SPILL_DIRS
