@@ -100,20 +100,3 @@ def alias_of_triples(labels: DataFrame) -> DataFrame:
         F.lit(None).cast("int").alias("turn_idx"),
     )
 
-
-def rewrite_to_canonical(
-    df: DataFrame, labels: DataFrame, cols: tuple[str, ...] = ("subj", "obj")
-) -> DataFrame:
-    """Rewrite id columns to their canonical labels (broadcast left joins —
-    the alias map is small relative to the triple stream)."""
-    out = df
-    for c in cols:
-        lbl = labels.select(
-            F.col("member").alias(f"_m_{c}"), F.col("canonical").alias(f"_c_{c}")
-        )
-        out = (
-            out.join(F.broadcast(lbl), out[c] == F.col(f"_m_{c}"), "left")
-            .withColumn(c, F.coalesce(F.col(f"_c_{c}"), F.col(c)))
-            .drop(f"_m_{c}", f"_c_{c}")
-        )
-    return out

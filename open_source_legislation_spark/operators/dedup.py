@@ -22,11 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text_analysis import _ngrams, _tokens
-
-# portable hash: same value in DuckDB via CAST('0x'||substr(md5(s),1,8) AS BIGINT)
-def _h64(col):
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+from .similarity import _dot, _norm
+from .text_analysis import _h64, _ngrams, _tokens
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -282,22 +279,11 @@ def embedding_near_dup_bruteforce(
     b = embeddings.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-    )
+    ea, eb = F.col("ea"), F.col("eb")
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", F.round(dot / (norm(F.col("ea")) * norm(F.col("eb"))), 3))
+        .withColumn("cos", F.round(_dot(ea, eb) / (_norm(ea) * _norm(eb)), 3))
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", "cos")
     )

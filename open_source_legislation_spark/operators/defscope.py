@@ -1,7 +1,7 @@
 """Definition-scope closure — which definitions apply to each node.
 
 Re-expresses the reference's ``fetch_definitions`` ancestor walk
-(``pydanticModels.py:654-757``): for a node, walk up to ``max_depth``
+(``pydanticModels.py:654-757``): for a node, walk up to ``_MAX_DEPTH``
 ancestor levels (the reference's ``counter < 10`` loop, popping one id
 level per step), collect each scope's definition dictionary, and let the
 CLOSEST scope win per term. Within one scope the reference builds the
@@ -21,19 +21,21 @@ incorporated term visible in the closure. One deliberate delta: the
 conversation root participates as a scope (it is a real node here,
 unlike the reference's corpus sentinel which terminates the walk).
 
-Scale shape (100 TB): the ancestor explode is a bounded ``×max_depth``
+Scale shape (100 TB): the ancestor explode is a bounded ``×_MAX_DEPTH``
 JVM-side fanout of the (small) nodes frame; the per-scope definition
 dictionary is the corpus's defined-terms table — orders of magnitude
-smaller than turns and broadcast by default (set
-``broadcast_defs=False`` to fall back to a shuffle hash join on
-``scope`` when the dictionary outgrows the driver; AQE handles skew).
-The only wide exchange is the final per-(node, term) argmax.
+smaller than turns, and broadcast. The only wide exchange is the final
+per-(node, term) argmax.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# ancestor levels examined per node, the node's own scope included
+# (the reference walks at most 10, pydanticModels.py:689)
+_MAX_DEPTH = 10
 
 
 def _local_dict(defs: DataFrame) -> DataFrame:
@@ -64,8 +66,6 @@ def applicable_definitions(
     nodes: DataFrame,
     defs: DataFrame,
     incorporated: DataFrame | None = None,
-    max_depth: int = 10,
-    broadcast_defs: bool = True,
 ) -> DataFrame:
     """``node_id → applicable terms`` closure.
 
@@ -78,8 +78,6 @@ def applicable_definitions(
     incorporated: linked incorporated definitions (``current_node, term,
         turn_idx, entity_id, incorporated_from`` — the
         ``link_incorporated`` output); None disables the hub merge.
-    max_depth: ancestor levels examined per node, the node's own scope
-        included (reference walks at most 10, ``pydanticModels.py:689``).
 
     Returns one row per (node, applicable term): ``node_id, term,
     definition, def_scope, src ('local'|'incorporated'), hub, depth``.
@@ -125,7 +123,7 @@ def applicable_definitions(
 
     parts = F.split("node_id", "/")
     n = F.size(parts)
-    lo = F.greatest(F.lit(1), n - F.lit(max_depth - 1))
+    lo = F.greatest(F.lit(1), n - F.lit(_MAX_DEPTH - 1))
     prefixes = F.transform(
         F.sequence(lo, n),
         lambda i: F.struct(
@@ -138,9 +136,7 @@ def applicable_definitions(
         .select("node_id", F.explode(prefixes).alias("p"))
         .select("node_id", F.col("p.depth").alias("depth"), F.col("p.scope").alias("scope"))
     )
-    joined = exploded.join(
-        F.broadcast(entries) if broadcast_defs else entries, "scope"
-    )
+    joined = exploded.join(F.broadcast(entries), "scope")
     # Precedence (mirrors the reference's walk): an entry with a resolved
     # definition always beats an unresolved pointer (the reference merges a
     # hub key only when the hub HAS it, pydanticModels.py:737-741, and

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .text_analysis import _h64, _tokens
 
 import re as _re
 
@@ -42,11 +43,6 @@ def _ascii_tokens(t: str | None) -> list[str]:
     return [x for x in _WS_ASCII.split((t or "").strip(" ").lower()) if x]
 
 
-def _h64(col):
-    # portable: CAST(('0x'||substr(md5(s),1,8)) AS BIGINT) in DuckDB
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
 def hash_embed_expr(text_col, dim: int = 16):
     """Deterministic hash embedding as a pure column expression:
     token → md5-bucket count vector → L2 normalize → round(4).
@@ -54,9 +50,7 @@ def hash_embed_expr(text_col, dim: int = 16):
     JVM-side (codegen), no Python — the "embedding model" stand-in the
     similarity/dedup operators can consume directly.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(text_col)), r"\s+"), lambda t: F.length(t) > 0
-    )
+    toks = F.filter(_tokens(text_col), lambda t: F.length(t) > 0)
     buckets = F.transform(toks, lambda t: F.pmod(_h64(t), F.lit(dim)))
     counts = F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),

@@ -434,12 +434,11 @@ def nodes_table(derived: DataFrame) -> DataFrame:
     return node_rows.unionByName(roots)
 
 
-def node_text_agg(
-    derived: DataFrame,
-    addenda: DataFrame | None = None,
-    chunk_size: int = 1024,
-    sep: str = "\n",
-) -> DataFrame:
+# ord span of one phase-1 chunk in node_text_agg's two-phase aggregation
+_TEXT_CHUNK = 1024
+
+
+def node_text_agg(derived: DataFrame, addenda: DataFrame) -> DataFrame:
     """Per-node ordered document text (reference ``NodeText`` — the ordered
     array of ALL paragraphs under a section, pydanticModels.py:203-366,
     serialized via ``to_list_text()`` :290-296).
@@ -448,7 +447,7 @@ def node_text_agg(
     turn peeled as the node's addendum is EXCLUDED (the reference removes
     the trailing source paragraph from the node body before storing it,
     extract_addendum scrapeECFR.py:867-992). Two-phase chunk-salted
-    aggregation (phase 1 on ``(node, ord div chunk_size)``, phase 2
+    aggregation (phase 1 on ``(node, ord div _TEXT_CHUNK)``, phase 2
     stitches the ordered chunks — SURVEY §7.4.1) bounds per-reduce-task
     state on hot nodes at 10^12-turn scale; ``ord`` is
     unique within a node's conversation, so chunk ranges align with text
@@ -461,21 +460,20 @@ def node_text_agg(
     content = derived.filter(F.col("node_id").isNull()).select(
         "current_node", "ord", "turn_idx", "clean_text"
     )
-    if addenda is not None:
-        # (current_node, turn_idx) identifies the peeled turn: node ids are
-        # conv-prefixed and deduped turns have unique turn_idx per conv
-        peel = addenda.select(
-            F.col("current_node").alias("_an"), F.col("turn_idx").alias("_at")
-        )
-        content = content.join(
-            F.broadcast(peel),
-            (F.col("current_node") == F.col("_an"))
-            & (F.col("turn_idx") == F.col("_at")),
-            "left_anti",
-        )
+    # (current_node, turn_idx) identifies the peeled turn: node ids are
+    # conv-prefixed and deduped turns have unique turn_idx per conv
+    peel = addenda.select(
+        F.col("current_node").alias("_an"), F.col("turn_idx").alias("_at")
+    )
+    content = content.join(
+        F.broadcast(peel),
+        (F.col("current_node") == F.col("_an"))
+        & (F.col("turn_idx") == F.col("_at")),
+        "left_anti",
+    )
     content = content.select("current_node", "ord", "clean_text")
     chunked = (
-        content.withColumn("chunk", (F.col("ord") / F.lit(chunk_size)).cast("long"))
+        content.withColumn("chunk", (F.col("ord") / F.lit(_TEXT_CHUNK)).cast("long"))
         .groupBy("current_node", "chunk")
         .agg(
             F.array_sort(
@@ -495,7 +493,7 @@ def node_text_agg(
     return stitched.select(
         F.col("current_node").alias("node_id"),
         texts.alias("node_text_list"),
-        F.concat_ws(sep, texts).alias("node_text"),
+        F.concat_ws("\n", texts).alias("node_text"),
         F.size("parts").alias("n_paragraphs"),
     )
 

@@ -66,6 +66,10 @@ def alias_index(entity_dict: DataFrame) -> DataFrame:
     return exploded.groupBy("alias_key").agg(F.min("entity_id").alias("entity_id"))
 
 
+# alias-index size estimate past which "auto" linking shuffles
+_BROADCAST_MAX_BYTES = 1 << 30
+
+
 def _estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's compile-time size estimate (what Spark's own
     autoBroadcastJoinThreshold consults) — no job, no action."""
@@ -153,7 +157,6 @@ def link_mentions(
     mentions: DataFrame,
     entity_dict: DataFrame,
     strategy: str = "auto",
-    broadcast_max_bytes: int = 1 << 30,
 ) -> DataFrame:
     """Attach ``entity_id`` (nullable) + ``link_priority`` to each mention.
 
@@ -164,7 +167,7 @@ def link_mentions(
     ``strategy``: ``"broadcast"`` forces the three-rung broadcast ladder;
     ``"shuffle"`` forces the melted sort-merge fallback; ``"auto"``
     (default) broadcasts unless Catalyst's size estimate for the alias
-    index exceeds ``broadcast_max_bytes`` (~1 GB — past that a broadcast
+    index exceeds ``_BROADCAST_MAX_BYTES`` (1 GB — past that a broadcast
     pins the whole dictionary into every executor and the driver).
     """
     if strategy not in ("auto", "broadcast", "shuffle"):
@@ -180,7 +183,7 @@ def link_mentions(
         # The shuffle path is merely slower for a small dictionary; the
         # broadcast path is fatal for a huge one.
         strategy = (
-            "broadcast" if est is not None and est <= broadcast_max_bytes else "shuffle"
+            "broadcast" if est is not None and est <= _BROADCAST_MAX_BYTES else "shuffle"
         )
     if strategy == "broadcast":
         return _link_broadcast(out, idx)

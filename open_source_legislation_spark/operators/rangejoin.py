@@ -61,6 +61,39 @@ def _last_bucket_excl(c: Column, width: int) -> Column:
     return -_floor_bucket(-c, width) - 1
 
 
+def _explode_buckets(
+    df: DataFrame, lo: str, hi: str, width: int, max_width: int | None, what: str
+) -> DataFrame:
+    """``df`` with one row per bucket id its ``[lo, hi)`` covers, in
+    ``_bucket``; empty intervals drop out. An interval wider than
+    ``max_width`` raises ``<what> wider than max_interval_width=...``."""
+    # empty intervals ([lo, lo)) match nothing; dropping them also keeps
+    # sequence() ascending (Spark generates a DESCENDING sequence when
+    # start > stop, which would fabricate buckets)
+    df = df.filter(F.col(hi) > F.col(lo))
+    lo_bucket = _floor_bucket(F.col(lo), width)
+    if max_width is not None:
+        # lazy in-plan guard: the assert raises AT EXECUTION on the first
+        # too-wide interval instead of paying an eager full scan of
+        # the input at plan-construction time (an entire extra input
+        # pass at scale). Folded into the bucket expression (NULL + 0 when
+        # the assert passes) so column pruning cannot drop it.
+        lo_bucket = lo_bucket + F.coalesce(
+            F.assert_true(
+                (F.col(hi) - F.col(lo)) <= max_width,
+                F.lit(
+                    f"{what} wider than max_interval_width={max_width}; "
+                    f"split it upstream"
+                ),
+            ).cast("long"),
+            F.lit(0),
+        )
+    return df.withColumn(
+        "_bucket",
+        F.explode(F.sequence(lo_bucket, _last_bucket_excl(F.col(hi), width))),
+    )
+
+
 def range_join_points(
     intervals: DataFrame,
     points: DataFrame,
@@ -80,36 +113,9 @@ def range_join_points(
 
     Output: all columns of ``intervals`` + all columns of ``points``.
     """
-    # empty intervals ([lo, lo)) match nothing; dropping them also keeps
-    # sequence() ascending (Spark generates a DESCENDING sequence when
-    # start > stop, which would fabricate buckets)
-    intervals = intervals.filter(F.col(hi_col) > F.col(lo_col))
-    lo_bucket = _floor_bucket(F.col(lo_col), bucket_width)
-    if max_interval_width is not None:
-        # lazy in-plan guard: assert_true raises AT EXECUTION on the first
-        # too-wide interval instead of paying an eager full scan of
-        # `intervals` at plan-construction time (an entire extra input
-        # pass at scale). Folded into the bucket expression (NULL + 0 when
-        # the assert passes) so column pruning cannot drop it.
-        lo_bucket = lo_bucket + F.coalesce(
-            F.assert_true(
-                (F.col(hi_col) - F.col(lo_col)) <= max_interval_width,
-                F.lit(
-                    f"range_join_points: interval wider than "
-                    f"max_interval_width={max_interval_width}; split it "
-                    f"upstream"
-                ),
-            ).cast("long"),
-            F.lit(0),
-        )
-    iv = intervals.withColumn(
-        "_bucket",
-        F.explode(
-            F.sequence(
-                lo_bucket,
-                _last_bucket_excl(F.col(hi_col), bucket_width),
-            )
-        ),
+    iv = _explode_buckets(
+        intervals, lo_col, hi_col, bucket_width, max_interval_width,
+        "range_join_points: interval",
     )
     pt = points.withColumn("_bucket", _floor_bucket(F.col(x_col), bucket_width))
     return (
@@ -253,36 +259,14 @@ def interval_overlap_join(
             f"reserved for the operator's internal bucket columns"
         )
 
-    def buckets(df: DataFrame, lo: str, hi: str, side: str) -> DataFrame:
-        df = df.filter(F.col(hi) > F.col(lo))
-        lo_bucket = _floor_bucket(F.col(lo), bucket_width)
-        if max_interval_width is not None:
-            # lazy in-plan explode guard, folded into the used expression
-            # so column pruning cannot drop it (see range_join_points)
-            lo_bucket = lo_bucket + F.coalesce(
-                F.assert_true(
-                    (F.col(hi) - F.col(lo)) <= max_interval_width,
-                    F.lit(
-                        f"interval_overlap_join: {side} interval wider "
-                        f"than max_interval_width={max_interval_width}; "
-                        f"split it upstream"
-                    ),
-                ).cast("long"),
-                F.lit(0),
-            )
-        return df.withColumn(
-            "_bucket",
-            F.explode(
-                F.sequence(
-                    lo_bucket, _last_bucket_excl(F.col(hi), bucket_width)
-                )
-            ),
-        )
-
-    lb = buckets(left, left_lo, left_hi, "left")
-    rb = buckets(right, right_lo, right_hi, "right").withColumnRenamed(
-        "_bucket", "_bucket_r"
+    lb = _explode_buckets(
+        left, left_lo, left_hi, bucket_width, max_interval_width,
+        "interval_overlap_join: left interval",
     )
+    rb = _explode_buckets(
+        right, right_lo, right_hi, bucket_width, max_interval_width,
+        "interval_overlap_join: right interval",
+    ).withColumnRenamed("_bucket", "_bucket_r")
     canonical = _floor_bucket(
         F.greatest(F.col(left_lo), F.col(right_lo)), bucket_width
     )

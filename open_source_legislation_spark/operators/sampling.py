@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text_analysis import _tokens
+from .text_analysis import _h64, _tokens
 
 
 def split_assign(
@@ -204,12 +204,15 @@ def _normalize_stratum_key(k, dt, col_name: str):
     return k  # other types (date, decimal, ...): pass through as given
 
 
+# strata past which the rate lookup is a broadcast join, not a when chain
+_WHEN_CHAIN_MAX = 16
+
+
 def stratified_sample(
     docs: DataFrame,
     stratum_col: str,
     rates_bps: dict,
     default_bps: int = 0,
-    when_chain_max: int = 16,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling — the mixture-weighting step
     of a pretraining data recipe (e.g. keep 100% of one source, 5% of
@@ -222,7 +225,7 @@ def stratified_sample(
     composes with resume (a re-run keeps the same rows). No shuffle on
     the corpus side either way the rate is attached (see below).
 
-    Rate lookup scales with the mixture: up to ``when_chain_max``
+    Rate lookup scales with the mixture: up to ``_WHEN_CHAIN_MAX``
     strata the rate is a literal ``when`` chain (pure codegen, zero
     exchanges); past that a nested expression tree gets pathological
     (10k-deep trees stall Catalyst), so the rates become a broadcast
@@ -240,11 +243,7 @@ def stratified_sample(
     corpus rows) raises ValueError — a mixture-config error surfaces at
     build time, never as a silently wrong sample.
     """
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 10000
-    )
+    bucket = _h64(F.col("doc_id").cast("string")) % 10000
     stratum_dt = docs.schema[stratum_col].dataType
     norm = {
         _normalize_stratum_key(k, stratum_dt, stratum_col): int(v)
@@ -256,7 +255,7 @@ def stratified_sample(
             f"normalization to column '{stratum_col}' type {stratum_dt} — "
             f"a colliding key would duplicate corpus rows"
         )
-    if len(norm) <= when_chain_max:
+    if len(norm) <= _WHEN_CHAIN_MAX:
         rate = F.lit(int(default_bps))
         for k, v in sorted(norm.items()):
             rate = F.when(F.col(stratum_col) == F.lit(k), v).otherwise(rate)

@@ -18,6 +18,11 @@ def _tokens(text_col):
     return F.split(F.trim(F.lower(text_col)), r"\s+")
 
 
+# portable hash: same value in DuckDB via CAST('0x'||substr(md5(s),1,8) AS BIGINT)
+def _h64(col):
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+
+
 def _ngrams(w, n: int):
     """Token n-gram array over a token-array column — the ONE Spark-side
     construction shared by ``dedup.shingles`` and ``repetition_scores``
@@ -215,7 +220,7 @@ def tfidf_score_int(
     """
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
+        F.explode(_tokens(F.col("text"))).alias("tok"),
     ).filter(F.col("tok").isin([t.lower() for t in query_tokens]))
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("_tf"))
     dfc = tf.groupBy("tok").agg(F.count("*").alias("_df"))

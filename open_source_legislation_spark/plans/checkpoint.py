@@ -282,7 +282,7 @@ class CheckpointedRunner:
     def _run_bucket(self, entity_dict: DataFrame, b: int) -> BucketStats:
         """One bucket end-to-end. rows_out comes from the committed parquet
         footers (no re-read scan); mention stats are ONE aggregate over the
-        cached derived frame; rows_in comes from the bucket partition's own
+        derived-frame parquet spill; rows_in comes from the bucket partition's own
         footers (metadata-only, zero Spark jobs)."""
         t0 = time.time()
         # per-bucket scheduler pool: with FAIR mode, concurrent bucket jobs

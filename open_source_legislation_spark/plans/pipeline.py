@@ -82,13 +82,11 @@ class PipelineResult:
         derived: DataFrame,
         entity_dict: DataFrame,
         alias_edges: DataFrame | None,
-        canonicalize_triples: bool,
         spill_dir: str,
     ) -> None:
         self.turns = derived
         self._entity_dict = entity_dict
         self._alias_edges = alias_edges
-        self._canonicalize_triples = canonicalize_triples
         self.spill_dir = spill_dir
 
     @cached_property
@@ -170,8 +168,6 @@ class PipelineResult:
         if self._alias_edges is not None:
             labels = canonicalize.connected_components(self._alias_edges)
             triples = triples.unionByName(canonicalize.alias_of_triples(labels))
-            if self._canonicalize_triples:
-                triples = canonicalize.rewrite_to_canonical(triples, labels)
         return triples
 
     @cached_property
@@ -184,7 +180,7 @@ class PipelineResult:
         # embedding (3_process.py:18-36) — token/embedding expressions run
         # over the FULL node text (falling back to the marker heading for
         # childless nodes)
-        node_texts = extract.node_text_agg(self.turns, addenda=self._addenda)
+        node_texts = extract.node_text_agg(self.turns, self._addenda)
         full_text = F.coalesce(F.col("node_text"), F.col("text"))
         nodes = (
             self._node_rows
@@ -270,8 +266,8 @@ def _triple_struct(subj, pred: str, obj):
 
 def _definition_triples(defs: DataFrame, linked_incorp: DataFrame) -> DataFrame:
     """2-3 triples per plain definition, emitted by ONE explode pass over
-    the defs stream (three separate union branches would re-scan the cached
-    derived frame + re-explode defs once per branch)."""
+    the defs stream (three separate union branches would re-scan the
+    derived-frame parquet spill + re-explode defs once per branch)."""
     plain = defs.filter(F.col("kind") != "incorporated")
     base = F.array(
         _triple_struct(F.col("term_id"), "defined_as", F.col("definition")),
@@ -307,7 +303,7 @@ def _node_triples(derived: DataFrame) -> DataFrame:
     """child_of (+ alias_of for versioned duplicates — reference
     duplicated_from_node_id tag, scrapingHelpers.py:94-98) in ONE pass over
     the node rows: a conditional array explode instead of two union
-    branches that would each re-scan the cached derived frame."""
+    branches that would each re-scan the derived-frame parquet spill."""
     nodes = derived.filter(F.col("node_id").isNotNull())
     child = _triple_struct(F.col("node_id"), "child_of", F.col("node_parent"))
     alias = _triple_struct(F.col("node_id"), "alias_of", F.col("node_raw_id"))
@@ -388,7 +384,6 @@ def run_pipeline(
     entity_dict: DataFrame,
     alias_edges: DataFrame | None = None,
     num_partitions: int | None = None,
-    canonicalize_triples: bool = False,
 ) -> PipelineResult:
     """Build the KG outputs of ``transcripts`` as one DataFrame DAG.
 
@@ -427,6 +422,5 @@ def run_pipeline(
         derived=derived,
         entity_dict=entity_dict,
         alias_edges=alias_edges,
-        canonicalize_triples=canonicalize_triples,
         spill_dir=spill_dir,
     )

@@ -611,7 +611,8 @@ def q_window_session(spark, sf_dir):
     # Integer-cents payload; the three-round driver red on this query was
     # NOT the payload — it was the oracle's uncast windowed sum(new_sess)
     # (DuckDB HUGEINT → float64 under the driver's pandas conversion).
-    # scripts/audit_oracle_types.py now guards every oracle against that.
+    # test_no_oracle_output_column_is_hugeint now guards every oracle
+    # against that.
     return sess.groupBy("user_id", "session_no").agg(
         F.count("*").alias("n_events"),
         F.round(F.sum(F.col("value").cast("decimal(18,6)")) * 100, 0)
@@ -1862,13 +1863,6 @@ def q_join_defs_closure(spark, sf_dir):
 # ORACLE_SQL entry — pinned by tests/test_contract_registry.py.
 ROWS_ONLY: set[str] = set()
 
-# DuckDB output types whose pandas conversion diverges from the Spark-side
-# dtype in the driver environment (HUGEINT/DECIMAL render as float64, so a
-# Spark BIGINT `3` hashes against an oracle `3.000000`). Single source of
-# truth for scripts/audit_oracle_types.py and
-# tests/test_contract_registry.py — the two copies drifted once already.
-ORACLE_TYPE_HAZARDS: tuple[str, ...] = ("HUGEINT", "UHUGEINT", "DECIMAL")
-
 # The driver's correctness gate checks exactly this many leading dict
 # entries per round.
 DRIVER_WINDOW = 50
@@ -1896,8 +1890,8 @@ NEVER_DRIVER_VERIFIED: list[str] = [
 #      yield its refresh slot to a brand-new contract row when its
 #      semantics are trivial and pytest-pinned (set_except did, for
 #      stream_dedup — its r1/r2 greens + the EXCEPT pytest stand);
-#   3. TOUCHED block — r4-green queries whose operators changed this round
-#      (sampling rewrite, graph lineage knob) re-earn a fresh row;
+#   3. TOUCHED block — r4-green queries whose operators changed in round 5
+#      (the sampling rewrite) re-earn a fresh row;
 #   4. ROTATED block (position >50) — queries whose standing driver rows
 #      (r4 for most, r1/r2 for the noted exception) are their history.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -1953,16 +1947,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_exact": q_dedup_exact,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    # -- r4-green queries whose operators this round's code touched --------
+    # -- r4-green queries whose operators round 5 touched (sampling) -------
     "smp_stratified": q_smp_stratified,
     "smp_pack_budget_sharded": q_smp_pack_budget_sharded,
     # -- rotated (position >50): r4-green driver rows stand as history -----
     # (set_except yields its refresh slot to the new stream_dedup row; its
     # r1/r2 greens + the EXCEPT pytest stand.)
     "set_except": q_set_except,
-    # (the graph trio also took the lineage knob, but it auto-disables at
-    # their registered iteration counts — plan unchanged — and the
-    # iters=25 equivalence pytest covers the knob; the window holds 50.)
     "smp_pack_budget": q_smp_pack_budget,
     "graph_pagerank": q_graph_pagerank,
     "graph_label_prop": q_graph_label_prop,

@@ -7,11 +7,18 @@ optional streaming front-end SURVEY §2.11 sketches: a file-source stream of
 transcript rows processed with ``Trigger.AvailableNow`` (deterministic,
 terminating — the streaming analog of "process until no pending rows"),
 deduped within a watermark (late/duplicate arrivals — the streaming analog
-of ``dedup_version``), extracted per micro-batch via ``foreachBatch`` reusing
-the exact batch DAG, and written to the triples sink as one overwritten
-``batch_id=<id>`` directory per micro-batch. State lives in the stream
-checkpoint directory, and a batch replayed after a crash before its commit
-replaces its own output, so a killed stream resumes exactly once.
+of ``dedup_version``), extracted per micro-batch via ``foreachBatch`` by
+``run_pipeline`` over that micro-batch's rows alone, and written to the
+triples sink as one overwritten ``batch_id=<id>`` directory per
+micro-batch. Stream progress lives in the stream checkpoint directory, and
+a batch replayed after a crash before its commit replaces its own output
+instead of landing twice.
+
+Each micro-batch is derived on its own: the state pass (parent stack,
+``ord``, definition scope, turn dedup) restarts at every batch. So the
+triples equal the batch build only when every conversation's turns arrive
+in one micro-batch; a conversation split across batches yields wrong
+parents and scopes (ROADMAP open item 1).
 """
 
 from __future__ import annotations
@@ -65,9 +72,11 @@ def incremental_extract(
 ) -> None:
     """Run one AvailableNow pass: new transcript parquet files → triples.
 
-    ``dropDuplicates`` under a watermark bounds dedup state (exact
-    (conv_id, turn_idx) replays within the watermark are dropped — later
-    replays are handled by the batch dedup window downstream).
+    ``dropDuplicates`` under a watermark bounds dedup state. A
+    (conv_id, turn_idx, ts) replay is dropped: as a duplicate while its
+    key is in state, and as late data once the watermark (max ``ts`` seen
+    minus ``watermark``) has passed its ``ts``, which is also when the
+    key leaves state. Any other row that late is dropped too.
     """
     stream = (
         spark.readStream.schema(schemas.TRANSCRIPTS)

@@ -1,7 +1,12 @@
 """Local stand-in for the driver's correctness gate: run each queries()
 entry on Spark and its oracle_sql() on DuckDB over the same sf dir, compare
 row count, column names, and an order-insensitive value hash; each result
-line adds the wall time and the executed plan's Exchange / Python nodes."""
+line adds the wall time and the executed plan's Exchange / Python nodes.
+
+The hash compares FORMATTED values, so an int column on one engine and a
+float column on the other agree on it (``3`` vs ``3.0``) yet diverge
+once converted through pandas; a query whose values agree but
+whose column type classes differ is reported as ``[TYPE]``."""
 
 from __future__ import annotations
 
@@ -24,6 +29,27 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+_INT_TYPES = {
+    "TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "HUGEINT",
+    "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "UHUGEINT",
+}
+
+
+def type_class(t) -> str:
+    """int / float / ts / bool / other class of a Spark ``simpleString``
+    or a DuckDB type name."""
+    t = str(t).upper()
+    if t in _INT_TYPES:
+        return "int"
+    if t in ("FLOAT", "DOUBLE", "REAL") or t.startswith("DECIMAL"):
+        return "float"
+    if t.startswith("TIMESTAMP"):
+        return "ts"
+    if t == "BOOLEAN":
+        return "bool"
+    return "other"
 
 
 def norm_cell(v):
@@ -111,6 +137,7 @@ def main(sf_dir: str, only: list[str]) -> int:
         try:
             rel = con.sql(osql[name])
             dcols = rel.columns
+            dtypes = dict(zip(dcols, rel.types))
             drows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"[DUCK-ERR]  {name}: {type(e).__name__}: {str(e)[:300]}")
@@ -118,15 +145,23 @@ def main(sf_dir: str, only: list[str]) -> int:
             continue
         sc, sn, sh, sl = frame_summary(scols, srows)
         dc, dn, dh, dl = frame_summary(dcols, drows)
-        status = "OK" if (sc == dc and sn == dn and sh == dh) else "MISMATCH"
-        if status == "MISMATCH":
+        if (sc, sn, sh) != (dc, dn, dh):
             failures += 1
-            print(f"[{status}] {name}: spark({sn} rows, {sc}) duck({dn} rows, {dc})")
+            print(f"[MISMATCH] {name}: spark({sn} rows, {sc}) duck({dn} rows, {dc})")
             sset, dset = set(sl), set(dl)
             for line in sorted(sset - dset)[:3]:
                 print(f"   spark-only: {line[:160]}")
             for line in sorted(dset - sset)[:3]:
                 print(f"   duck-only:  {line[:160]}")
+            continue
+        bad = [
+            f"{f.name}: spark {f.dataType.simpleString()} vs duck {dtypes[f.name]}"
+            for f in sdf.schema.fields
+            if type_class(f.dataType.simpleString()) != type_class(dtypes[f.name])
+        ]
+        if bad:
+            failures += 1
+            print(f"[TYPE] {name}: {bad}")
         else:
             print(f"[OK] {name}: {sn} rows, {facts}")
     spark.stop()

@@ -51,16 +51,3 @@ def test_alias_of_triples_exclude_canonical(spark, alias_edges_df):
     assert triples.filter("subj = obj").count() == 0
     assert triples.count() == labels.count() - labels.select("canonical").distinct().count()
 
-
-def test_rewrite_to_canonical(spark):
-    edges = spark.createDataFrame([("b", "a", "x")], "src string, dst string, reason string")
-    labels = canonicalize.connected_components(edges)
-    df = spark.createDataFrame(
-        [("b", "cites", "z"), ("z", "cites", "b")],
-        "subj string, pred string, obj string",
-    )
-    out = {
-        (r["subj"], r["obj"])
-        for r in canonicalize.rewrite_to_canonical(df, labels).collect()
-    }
-    assert out == {("a", "z"), ("z", "a")}

@@ -50,21 +50,21 @@ def test_unverified_queries_sit_inside_driver_window():
     )
 
 
+# DuckDB output types whose pandas conversion diverges from the Spark-side
+# dtype (HUGEINT/DECIMAL render as float64)
+ORACLE_TYPE_HAZARDS = ("HUGEINT", "UHUGEINT", "DECIMAL")
+
+
 def test_no_oracle_output_column_is_hugeint():
     """DuckDB ``sum()`` over integers yields HUGEINT; the driver's pandas
     conversion renders HUGEINT as float64, so a Spark BIGINT ``3`` and an
     oracle ``3.000000`` hash-mismatch *only in the driver environment*
     (the sole cause of window_session's three-round red). DECIMAL is the
     same hazard class. Every oracle output column must DESCRIBE to a
-    non-hazard type; the hazard list is shared with
-    scripts/audit_oracle_types.py (ORACLE_TYPE_HAZARDS) so the two guards
-    cannot drift."""
+    non-hazard type."""
     import duckdb
 
-    from open_source_legislation_spark.queries import (
-        ORACLE_TYPE_HAZARDS,
-        resolve_oracle_sql,
-    )
+    from open_source_legislation_spark.queries import resolve_oracle_sql
 
     con = duckdb.connect()
     sf_dir = "/root/testdata/sf0.001"

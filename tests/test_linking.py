@@ -104,9 +104,14 @@ def test_shuffle_fallback_plan_has_no_broadcast_of_index(spark, entity_dict_df):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_auto_strategy_switches_on_size_estimate(spark, entity_dict_df):
-    """Forcing a tiny broadcast budget must route auto → the shuffle
-    fallback, with identical output."""
+def test_auto_strategy_switches_on_size_estimate(
+    spark, entity_dict_df, monkeypatch
+):
+    """An alias index estimated past the broadcast budget must route
+    auto → the shuffle fallback, with identical output."""
+    monkeypatch.setattr(
+        linking, "_estimated_bytes", lambda df: linking._BROADCAST_MAX_BYTES + 1
+    )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -114,7 +119,6 @@ def test_auto_strategy_switches_on_size_estimate(spark, entity_dict_df):
             _mentions(spark, _LADDER_KEYS),
             entity_dict_df,
             strategy="auto",
-            broadcast_max_bytes=1,
         )
         plan = forced._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan

@@ -58,10 +58,12 @@ def test_ord_is_dense_per_conv(derived):
     assert bad == 0
 
 
-def test_reassemble_documents_order(derived):
+def test_reassemble_documents_order(derived, monkeypatch):
     """Chunked (skew-safe) per-node text reassembly equals a direct ordered
     collect — chunk boundaries must not disturb turn order."""
-    docs = extract.node_text_agg(derived, chunk_size=7)
+    monkeypatch.setattr(extract, "_TEXT_CHUNK", 7)
+    no_addenda = derived.select("current_node", "turn_idx").limit(0)
+    docs = extract.node_text_agg(derived, no_addenda)
     content = derived.filter(F.col("node_id").isNull())
     direct = content.groupBy(F.col("current_node").alias("node_id")).agg(
         F.transform(

@@ -16,6 +16,13 @@ import pytest
 from open_source_legislation_spark.operators import sampling, text_analysis
 
 
+def _padded(rates: dict) -> dict:
+    """``rates`` plus enough strata no row has (negative ints) to push
+    stratified_sample past its when-chain size onto the broadcast join."""
+    pad = {-1 - i: 0 for i in range(sampling._WHEN_CHAIN_MAX)}
+    return {**rates, **pad}
+
+
 @pytest.fixture(scope="module")
 def docs_df(spark):
     rows = [
@@ -132,9 +139,9 @@ def test_stratified_sample_rates_and_determinism(spark):
 
 def test_stratified_sample_broadcast_path_matches_when_chain(spark):
     """10 000 strata — the regime where the old nested-when expression
-    tree was pathological. The broadcast-join path (auto past
-    when_chain_max) must agree row-for-row with the when-chain path
-    forced on the same data, and with the md5-bucket reference."""
+    tree was pathological. The broadcast-join path must agree with the
+    md5-bucket reference, and row-for-row with the when-chain path on a
+    small dict (padded with empty strata to reach the broadcast join)."""
     rows = [(i, f"s_{i % 10_000}") for i in range(5000)]
     docs = spark.createDataFrame(rows, "doc_id long, stratum string")
     rates = {f"s_{i}": (i * 7) % 10_001 for i in range(10_000)}
@@ -152,9 +159,7 @@ def test_stratified_sample_broadcast_path_matches_when_chain(spark):
     small_rates = {f"s_{i}": rates[f"s_{i}"] for i in range(5)}
     small_docs = docs.filter(docs.stratum.isin(list(small_rates)))
     a = sampling.stratified_sample(small_docs, "stratum", small_rates)
-    b = sampling.stratified_sample(
-        small_docs, "stratum", small_rates, when_chain_max=0
-    )
+    b = sampling.stratified_sample(small_docs, "stratum", _padded(small_rates))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -215,8 +220,7 @@ def test_stratified_sample_native_typed_strata_both_paths(spark):
     )
     rates = {2020: 10000, 2021: 0}
     a = sampling.stratified_sample(docs, "yr", rates, default_bps=0)
-    b = sampling.stratified_sample(docs, "yr", rates, default_bps=0,
-                                   when_chain_max=0)
+    b = sampling.stratified_sample(docs, "yr", _padded(rates), default_bps=0)
     got = sorted(map(tuple, a.collect()))
     assert got == sorted(map(tuple, b.collect()))
     assert {yr for _, yr in got} == {2020}
@@ -225,8 +229,7 @@ def test_stratified_sample_native_typed_strata_both_paths(spark):
     # double column, int keys: native equality still matches
     ddocs = docs.select("doc_id", docs.yr.cast("double").alias("yr"))
     da = sampling.stratified_sample(ddocs, "yr", rates, default_bps=0)
-    db = sampling.stratified_sample(ddocs, "yr", rates, default_bps=0,
-                                    when_chain_max=0)
+    db = sampling.stratified_sample(ddocs, "yr", _padded(rates), default_bps=0)
     assert sorted(map(tuple, da.collect())) == sorted(map(tuple, db.collect()))
     assert {yr for _, yr in da.collect()} == {2020.0}
 
@@ -240,10 +243,8 @@ def test_stratified_sample_string_column_int_keys_no_crash(spark):
         [(i, v) for i, v in enumerate(["2020", "unknown", "02020", "2020"])],
         "doc_id long, yr string",
     )
-    for wcm in (16, 0):  # when-chain and broadcast paths
-        out = sampling.stratified_sample(
-            docs, "yr", {2020: 10000}, default_bps=0, when_chain_max=wcm
-        )
+    for rates in ({2020: 10000}, _padded({2020: 10000})):  # both paths
+        out = sampling.stratified_sample(docs, "yr", rates, default_bps=0)
         assert {r.yr for r in out.collect()} == {"2020"}
 
 
@@ -263,8 +264,6 @@ def test_stratified_sample_rejects_lossy_and_colliding_keys(spark):
     with pytest.raises(ValueError, match="collide"):
         sampling.stratified_sample(sdocs, "yr", {2020: 10000, "2020": 5000})
     # lossless float keys are fine, both paths
-    for wcm in (16, 0):
-        out = sampling.stratified_sample(
-            docs, "yr", {2020.0: 10000}, when_chain_max=wcm
-        )
+    for rates in ({2020.0: 10000}, _padded({2020.0: 10000})):
+        out = sampling.stratified_sample(docs, "yr", rates)
         assert out.count() == 1

@@ -1,11 +1,13 @@
 """Structured-Streaming incremental front-end: AvailableNow pass over landed
-files produces triples; a second pass over the same files is a no-op, and
-a batch replayed after a lost commit does not land twice (exactly-once via
-the stream checkpoint and per-batch overwrite)."""
+files produces the batch build's triples when every conversation lands in
+one micro-batch; a second pass over the same files is a no-op, and a batch
+replayed after a lost commit does not land twice (exactly-once via the
+stream checkpoint and per-batch overwrite)."""
 
 import os
 
 from open_source_legislation_spark import schemas, synth
+from open_source_legislation_spark.plans.pipeline import run_pipeline
 from open_source_legislation_spark.streaming.incremental import incremental_extract
 
 
@@ -24,6 +26,17 @@ def test_available_now_incremental(spark, entity_dict_df, tmp_path_factory):
         triples_dir = os.path.join(out_dir, "triples")
         n1 = spark.read.parquet(triples_dir).count()
         assert n1 > 0
+
+        # one micro-batch holds every conversation: the batch build's rows
+        cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
+        streamed = spark.read.parquet(triples_dir).select(cols)
+        res = run_pipeline(spark, spark.read.parquet(in_dir), entity_dict_df)
+        try:
+            batch = res.triples.select(cols)
+            assert streamed.exceptAll(batch).count() == 0
+            assert batch.exceptAll(streamed).count() == 0
+        finally:
+            res.cleanup()
 
         # second AvailableNow pass: no new files → no new rows
         incremental_extract(spark, in_dir, entity_dict_df, out_dir)
