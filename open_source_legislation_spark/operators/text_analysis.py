@@ -248,9 +248,10 @@ def boilerplate_strip(
 
     Scale shape: the exploded line stream is evaluated exactly twice —
     once into the (line → n_distinct_docs) boilerplate aggregate
-    (partial-aggregated map-side; at corpus scale key the exchange on
-    ``md5(line)`` — same partitioning, 16-byte keys) and once into the
-    tagged stream — and the kept/removed outputs come from ONE
+    (partial-aggregated map-side) and once into the tagged stream. Both
+    the aggregate's exchange and the join back are keyed on the raw
+    ``line`` string, so a long line is shuffled and hashed at full length.
+    The kept/removed outputs come from ONE
     conditional aggregate over the tagged stream (``collect_list`` skips
     the NULL-ed boilerplate entries), not per-branch re-explodes. The
     boilerplate set joins back with a PLAIN hash join, not a broadcast —

@@ -34,6 +34,21 @@ _DEFAULTS = {
     "spark.scheduler.mode": "FAIR",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.sql.session.timeZone": "UTC",
+    # Generated-class cache (Spark's default is 100). One kg build generates
+    # ~100 distinct classes; a cold process running one build, the seven
+    # kgbench contract_mix queries and a 4-bucket checkpointed build
+    # compiles 222. At 100 each warm build re-compiled 42-71 evicted classes
+    # with Janino and the JIT compiled them again. 1000 holds that working
+    # set with headroom.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # The cache is keyed on the generated source. By default a whole-stage
+    # class is named after its codegen stage id, which AQE assigns in the
+    # order stages finish, so the same stage under another id missed the
+    # cache (0-10 compiles per rebuild). Unnamed, a rebuild compiles 0.
+    "spark.sql.codegen.useIdInClassName": "false",
+    # PySpark 4 captures the Python call site on every wrapped DataFrame
+    # call (~0.4 s of driver time per build); errors lose that context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

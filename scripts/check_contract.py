@@ -1,7 +1,9 @@
 """Local stand-in for the driver's correctness gate: run each queries()
 entry on Spark and its oracle_sql() on DuckDB over the same sf dir, compare
 row count, column names, and an order-insensitive value hash; each result
-line adds the wall time and the executed plan's Exchange / Python nodes.
+line adds the wall time, the executed plan's Exchange / Python nodes and
+the Janino compilations the build and collect made (0 when every generated
+class came from the session's codegen cache).
 
 The hash compares FORMATTED values, so an int column on one engine and a
 float column on the other agree on it (``3`` vs ``3.0``) yet diverge
@@ -97,6 +99,13 @@ def plan_facts(sdf) -> tuple[int, int]:
     return exchanges, python
 
 
+def compilations(spark) -> int:
+    """Janino compilations so far in the driver JVM; a codegen cache hit
+    adds none."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
 def main(sf_dir: str, only: list[str]) -> int:
     import os
 
@@ -120,13 +129,16 @@ def main(sf_dir: str, only: list[str]) -> int:
         if only and name not in only:
             continue
         try:
-            t0 = time.perf_counter()
+            c0, t0 = compilations(spark), time.perf_counter()
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            wall = time.perf_counter() - t0
+            wall, compiles = time.perf_counter() - t0, compilations(spark) - c0
             exchanges, python = plan_facts(sdf)
-            facts = f"{wall:.2f} s, {exchanges} exchanges, {python} python nodes"
+            facts = (
+                f"{wall:.2f} s, {exchanges} exchanges, {python} python nodes, "
+                f"{compiles} compiles"
+            )
         except Exception as e:  # noqa: BLE001
             print(f"[SPARK-ERR] {name}: {type(e).__name__}: {str(e)[:300]}")
             failures += 1

@@ -92,3 +92,32 @@ def test_kg_pipeline_has_no_python_after_the_spill(
         assert _python_nodes(res.nodes) == ["ArrowEvalPython"]
     finally:
         res.cleanup()
+
+
+def test_repeated_kg_build_compiles_no_new_code(spark, transcripts_df, entity_dict_df):
+    """A rebuild in the same session hits the codegen cache, so the second
+    build compiles none. Two session defaults make that hold: the cache
+    holds a whole build's generated classes (with Spark's default of 100
+    entries the ~100 classes of one build evict each other and every
+    rebuild re-compiles dozens), and class names leave out the codegen
+    stage id (AQE numbers stages in the order they finish, so a renamed
+    copy of a cached class would miss)."""
+    from open_source_legislation_spark.plans.pipeline import run_pipeline
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    # Janino compilations in this JVM; a codegen cache hit adds none
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def build() -> int:
+        before = compiles.getCount()
+        res = run_pipeline(spark, transcripts_df, entity_dict_df)
+        try:
+            for df in (res.triples, res.nodes):
+                df.write.format("noop").mode("overwrite").save()
+        finally:
+            res.cleanup()
+        return compiles.getCount() - before
+
+    build()
+    assert build() == 0
