@@ -5,15 +5,19 @@ embedding IS NULL ... LIMIT batch`` loops until no pending rows, tagging
 failures instead of retrying forever (reference ``3_process.py:18-36``,
 ``processingHelpers.py:55-76``). The Spark analog:
 
-- work is split into ``num_buckets`` deterministic conversation buckets
+- input rows land in ``num_buckets`` deterministic conversation buckets
   (``pmod(hash(conv_id), B)`` — Murmur3, stable across runs/executors);
-- each bucket is processed independently and written to its own parquet
-  partition directory with ``mode=overwrite`` (idempotent retries);
+- :meth:`CheckpointedRunner.run_buckets` re-derives each given bucket from
+  all of its landed rows and writes it to its own parquet partition
+  directory with ``mode=overwrite`` (idempotent retries);
 - a manifest row ``(run_id, stage, partition_id, status, rows_in, rows_out,
-  committed_at)`` is appended after each bucket commit — the lineage ledger;
-- resume = anti-join against the manifest's succeeded buckets: a killed run
-  re-executes only unfinished buckets and converges to the identical final
-  tables (tested by kill-and-resume).
+  committed_at)`` is appended after each bucket commit — the lineage ledger.
+
+A batch build lands its input once and runs the buckets not yet in the
+manifest, so a killed run re-executes only unfinished buckets and converges
+to the identical final tables (tested by kill-and-resume). The streaming
+front-end lands each micro-batch and runs the buckets it touched
+(``streaming/incremental.py``).
 
 On a real cluster the same structure maps to Iceberg snapshot-per-bucket
 commits; parquet directories are the sandbox stand-in (SURVEY §7.4.5).
@@ -21,6 +25,7 @@ commits; parquet directories are the sandbox stand-in (SURVEY §7.4.5).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -128,12 +133,10 @@ class CheckpointedRunner:
     # -- execution ---------------------------------------------------------
     @staticmethod
     def _parquet_rows(path: str) -> int:
-        """Row count from the written parquet FOOTERS (pyarrow metadata
-        read — zero Spark jobs, zero data bytes): the write-side metric
-        the round-1 re-read count() action was paying a full scan for.
-        (``Observation`` was tried first and delivers empty metric rows
-        under multi-threaded job submission in this PySpark build, so the
-        committed files themselves are the source of truth.)"""
+        """Row count from the written parquet FOOTERS: a metadata read, no
+        Spark job. (``Observation`` delivers empty metric rows under
+        multi-threaded job submission in this PySpark build, so the
+        committed files are the source of truth.)"""
         import pyarrow.parquet as pq
 
         total = 0
@@ -149,19 +152,17 @@ class CheckpointedRunner:
 
     def _materialize_input(self, transcripts: DataFrame) -> None:
         """Write the input ONCE, hash-partitioned into per-bucket
-        directories, so each bucket run reads exactly its own partition
-        instead of filter-scanning the full input B times (round-2 verdict
-        #8). On a real deployment this is the transcripts table's Iceberg
-        ``bucket(B, conv_id)`` partition spec (SCALE.md) and costs nothing
-        per run; here one ``repartition(B, _bucket)`` write stands in.
-        A completed write (Spark's ``_SUCCESS`` marker) is REUSED on
-        resume — but only after validating the sidecar ``_input_meta.json``
-        (bucket count + input row fingerprint): a resume with a different
-        ``num_buckets``, or an out_dir re-pointed at different input, would
-        otherwise silently commit empty buckets — data loss
-        indistinguishable from genuinely empty hash buckets. A reuse whose
-        meta sidecar is missing (crash between the parquet write and the
-        meta rename) is re-materialized, not trusted."""
+        directories, so each bucket run reads exactly its own partition (on
+        a real deployment, the transcripts table's Iceberg ``bucket(B,
+        conv_id)`` partition spec, SCALE.md). A completed write (Spark's
+        ``_SUCCESS`` marker) is REUSED on resume — but only after validating
+        the sidecar ``_input_meta.json`` (bucket count + input row
+        fingerprint): a resume with a different ``num_buckets``, or an
+        out_dir re-pointed at different input, would otherwise silently
+        commit empty buckets — data loss indistinguishable from genuinely
+        empty hash buckets. A reuse whose meta sidecar is missing (crash
+        between the parquet write and the meta rename) is re-materialized,
+        not trusted."""
         path = self._input_path()
         meta_path = os.path.join(path, "_input_meta.json")
         if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
@@ -280,10 +281,9 @@ class CheckpointedRunner:
         }
 
     def _run_bucket(self, entity_dict: DataFrame, b: int) -> BucketStats:
-        """One bucket end-to-end. rows_out comes from the committed parquet
-        footers (no re-read scan); mention stats are ONE aggregate over the
-        derived-frame parquet spill; rows_in comes from the bucket partition's own
-        footers (metadata-only, zero Spark jobs)."""
+        """Re-derive one bucket from all its landed rows. rows_in and
+        rows_out come from parquet footers (no Spark job); mention stats are
+        ONE aggregate over the derived-frame parquet spill."""
         t0 = time.time()
         # per-bucket scheduler pool: with FAIR mode, concurrent bucket jobs
         # share executors instead of queueing behind each other. Thread-local
@@ -327,6 +327,25 @@ class CheckpointedRunner:
             wall_ms=(time.time() - t0) * 1000.0,
         )
 
+    def land(self, batch_df: DataFrame, batch_id: int) -> list[int]:
+        """Land one micro-batch under ``_bucket=b/_batch=<batch_id>`` and
+        return the buckets it touched, read from the directory listing. The
+        dynamic partition overwrite replaces only this batch's directories,
+        so a replayed batch lands once."""
+        path = self._input_path()
+        bucket = bucket_col(F.col("conv_id"), self.num_buckets)
+        (
+            batch_df.withColumns({"_bucket": bucket, "_batch": F.lit(batch_id)})
+            .repartition(self.num_buckets, "_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket", "_batch")
+            .parquet(path)
+        )
+        pattern = os.path.join(glob.escape(path), "_bucket=*", f"_batch={batch_id}")
+        landed = glob.glob(pattern)
+        return sorted(int(os.path.dirname(d).rsplit("=", 1)[1]) for d in landed)
+
     def run(
         self,
         transcripts: DataFrame,
@@ -334,7 +353,21 @@ class CheckpointedRunner:
         fail_after: int | None = None,
         max_concurrency: int = 4,
     ) -> int:
-        """Process all unfinished buckets; returns #buckets processed.
+        """Land ``transcripts`` and process all unfinished buckets; returns
+        #buckets processed."""
+        done = self.completed_buckets()
+        self._materialize_input(transcripts)
+        todo = [b for b in range(self.num_buckets) if b not in done]
+        return self.run_buckets(entity_dict, todo, fail_after, max_concurrency)
+
+    def run_buckets(
+        self,
+        entity_dict: DataFrame,
+        buckets: list[int],
+        fail_after: int | None = None,
+        max_concurrency: int = 4,
+    ) -> int:
+        """Re-derive and commit ``buckets``; returns #buckets processed.
 
         Buckets run as CONCURRENT Spark jobs (thread pool + FAIR scheduler
         pools) so a small bucket never waits behind a big one; the manifest
@@ -345,12 +378,6 @@ class CheckpointedRunner:
         """
         import threading
         from concurrent.futures import ThreadPoolExecutor
-
-        done = self.completed_buckets()
-        self._materialize_input(transcripts)
-        todo = [b for b in range(self.num_buckets) if b not in done]
-        if fail_after is not None:
-            max_concurrency = 1
 
         lock = threading.Lock()
         processed = 0
@@ -364,12 +391,12 @@ class CheckpointedRunner:
                 if fail_after is not None and processed >= fail_after:
                     raise RuntimeError(f"injected failure after {processed} buckets")
 
-        if max_concurrency <= 1:
-            for b in todo:
+        if fail_after is not None or max_concurrency <= 1:
+            for b in buckets:
                 one(b)
         else:
             with ThreadPoolExecutor(max_workers=max_concurrency) as ex:
-                futures = [ex.submit(one, b) for b in todo]
+                futures = [ex.submit(one, b) for b in buckets]
                 for f in futures:
                     f.result()  # propagate the first failure
         return processed

@@ -69,12 +69,12 @@ class PipelineResult:
     every other output's logical plan is built on first attribute access
     and cached — plan construction costs ~2 s of driver-side Py4J
     round-trips at 500k turns, and no consumer touches every output (the
-    bench headline and streaming micro-batches read only ``triples``; the
-    checkpoint runner's nodes write never needs ``rewritten``). The shared
-    intermediates (linked incorporated definitions, addenda, the node
-    projection and the cites edges) are cached the same way, so all outputs
-    agree. Lazy construction changes WHEN a plan is built, never what it
-    computes."""
+    bench headline reads only ``triples``; the checkpoint runner, which
+    streaming micro-batches also run, writes ``triples`` and ``nodes`` and
+    never needs ``rewritten``). The shared intermediates (linked
+    incorporated definitions, addenda, the node projection and the cites
+    edges) are cached the same way, so all outputs agree. Lazy construction
+    changes WHEN a plan is built, never what it computes."""
 
     def __init__(
         self,

@@ -1,24 +1,20 @@
 """Incremental ingestion — Structured Streaming front-end.
 
-The reference is pure batch; its incremental behavior is the poll-until-
-empty resume loop (reference ``3_process.py:22-29``), which our batch
-checkpoint runner reproduces (``plans/checkpoint.py``). This module adds the
-optional streaming front-end SURVEY §2.11 sketches: a file-source stream of
-transcript rows processed with ``Trigger.AvailableNow`` (deterministic,
-terminating — the streaming analog of "process until no pending rows"),
-deduped within a watermark (late/duplicate arrivals — the streaming analog
-of ``dedup_version``), extracted per micro-batch via ``foreachBatch`` by
-``run_pipeline`` over that micro-batch's rows alone, and written to the
-triples sink as one overwritten ``batch_id=<id>`` directory per
-micro-batch. Stream progress lives in the stream checkpoint directory, and
-a batch replayed after a crash before its commit replaces its own output
-instead of landing twice.
+The reference's incremental behavior is the poll-until-empty resume loop
+(reference ``3_process.py:22-29``). Here a file-source stream of transcript
+rows runs under ``Trigger.AvailableNow`` (deterministic, terminating — the
+streaming analog of "process until no pending rows", SURVEY §2.11).
 
-Each micro-batch is derived on its own: the state pass (parent stack,
-``ord``, definition scope, turn dedup) restarts at every batch. So the
-triples equal the batch build only when every conversation's turns arrive
-in one micro-batch; a conversation split across batches yields wrong
-parents and scopes (ROADMAP open item 1).
+Streaming and the batch checkpoint build share one engine,
+:class:`CheckpointedRunner`: each micro-batch lands its rows in the
+runner's conversation buckets, and the runner re-derives every bucket the
+batch touched from all rows landed in it, overwriting that bucket's
+``triples`` and ``nodes`` partitions. So the outputs equal the batch build
+over every row landed so far, in any arrival order: a late turn, a late
+parent heading or a repeated ``(conv_id, turn_idx, ts)`` key resolves as
+it does in the batch build. A batch replayed after a crash before its
+stream commit rewrites only its own landing directories and the same
+buckets, so a replay is idempotent.
 """
 
 from __future__ import annotations
@@ -29,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..plans.pipeline import run_pipeline
+from ..plans.checkpoint import CheckpointedRunner
 
 
 def tumbling_window_agg(
@@ -68,42 +64,19 @@ def incremental_extract(
     input_dir: str,
     entity_dict: DataFrame,
     out_dir: str,
-    watermark: str = "10 minutes",
 ) -> None:
-    """Run one AvailableNow pass: new transcript parquet files → triples.
-
-    ``dropDuplicates`` under a watermark bounds dedup state. A
-    (conv_id, turn_idx, ts) replay is dropped: as a duplicate while its
-    key is in state, and as late data once the watermark (max ``ts`` seen
-    minus ``watermark``) has passed its ``ts``, which is also when the
-    key leaves state. Any other row that late is dropped too.
-    """
-    stream = (
-        spark.readStream.schema(schemas.TRANSCRIPTS)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-        .dropDuplicates(["conv_id", "turn_idx", "ts"])
-    )
-
-    triples_dir = os.path.join(out_dir, "triples")
-    ckpt_dir = os.path.join(out_dir, "_stream_checkpoint")
+    """Run one AvailableNow pass: land the new transcript files of
+    ``input_dir`` and re-derive the buckets they touch into ``out_dir``."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = run_pipeline(spark, batch_df, entity_dict)
-        # one overwritten dir per batch: a batch replayed after a crash
-        # between this write and the commit log replaces its own output
-        # instead of landing twice; reads recover ``batch_id`` by
-        # partition discovery
-        res.triples.write.mode("overwrite").parquet(
-            os.path.join(triples_dir, f"batch_id={batch_id}")
-        )
-        res.cleanup()
+        runner = CheckpointedRunner(spark, out_dir, run_id=f"batch-{batch_id}")
+        runner.run_buckets(entity_dict, runner.land(batch_df, batch_id))
 
     q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
+        spark.readStream.schema(schemas.TRANSCRIPTS)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )

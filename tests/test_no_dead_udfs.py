@@ -57,7 +57,7 @@ _KEEP = {
     "id_current_level": "Python twin of the current-level rule that SURVEY.md names",
     "precision_recall": "P/R against the oracle, called by the verify recipe",
     "make_alias_edges": "synthetic alias-graph generator of the canonicalize fixture",
-    "incremental_extract": "streaming front end, open ROADMAP item 1",
+    "incremental_extract": "streaming front end, run by test_streaming",
 }
 
 

@@ -1,14 +1,83 @@
-"""Structured-Streaming incremental front-end: AvailableNow pass over landed
-files produces the batch build's triples when every conversation lands in
-one micro-batch; a second pass over the same files is a no-op, and a batch
-replayed after a lost commit does not land twice (exactly-once via the
-stream checkpoint and per-batch overwrite)."""
+"""Structured-Streaming incremental front-end: every AvailableNow pass
+lands its rows and re-derives the conversation buckets they touch, so the
+outputs equal the batch build over every row landed so far, however the
+rows are split across passes; a second pass over the same files is a
+no-op, and a batch replayed after a lost commit does not land twice."""
 
+import hashlib
 import os
 
+import pytest
+
 from open_source_legislation_spark import schemas, synth
+from open_source_legislation_spark.plans.checkpoint import CheckpointedRunner
 from open_source_legislation_spark.plans.pipeline import run_pipeline
 from open_source_legislation_spark.streaming.incremental import incremental_extract
+
+_HOT = "conv-hot-0"
+# "Title 21. ..." at turn 3 parents "Section 1.1" at turn 4
+_PARENT_TURN = 3
+
+
+def _two_pass(t):
+    """Each conversation's first half, then the rest."""
+    by_conv = t.groupby("conv_id")["turn_idx"]
+    first = by_conv.rank(method="first") <= by_conv.transform("size") // 2
+    return [t[first], t[~first]]
+
+
+def _late_parent_heading(t):
+    late = (t["conv_id"] == _HOT) & (t["turn_idx"] == _PARENT_TURN)
+    return [t[~late], t[late]]
+
+
+def _same_key_other_text(t):
+    """A replay of the parent heading's (conv_id, turn_idx, ts) with other
+    heading text that sorts first by md5(text): the batch build keeps it."""
+    row = t[(t["conv_id"] == _HOT) & (t["turn_idx"] == _PARENT_TURN)].copy()
+    old = row["text"].iloc[0]
+    new = old.replace("Title 21.", "Title 22.")
+    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()  # noqa: E731
+    assert new != old and md5(new) < md5(old)
+    row["text"] = new
+    return [t, row]
+
+
+@pytest.mark.parametrize(
+    "split", [_two_pass, _late_parent_heading, _same_key_other_text],
+    ids=["two_pass", "late_parent_heading", "same_key_other_text"],
+)
+def test_passes_equal_batch_build(spark, entity_dict_df, tmp_path_factory, split):
+    """Rows split across AvailableNow passes: the streamed triples equal
+    ``run_pipeline`` over all rows and the streamed nodes equal a
+    ``CheckpointedRunner`` build over them."""
+    in_dir = str(tmp_path_factory.mktemp("split_in"))
+    out_dir = str(tmp_path_factory.mktemp("split_out"))
+    for rows in split(synth.make_transcripts(seed=3, n_turns_target=300)):
+        spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS).write.mode(
+            "append"
+        ).parquet(in_dir)
+        incremental_extract(spark, in_dir, entity_dict_df, out_dir)
+
+    def same(a, b):
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+
+    landed = spark.read.parquet(in_dir)
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
+    res = run_pipeline(spark, landed, entity_dict_df)
+    try:
+        same(
+            spark.read.parquet(os.path.join(out_dir, "triples")).select(cols),
+            res.triples.select(cols),
+        )
+    finally:
+        res.cleanup()
+    ref = CheckpointedRunner(
+        spark, str(tmp_path_factory.mktemp("split_ref")), run_id="ref"
+    )
+    ref.run(landed, entity_dict_df)
+    same(spark.read.parquet(os.path.join(out_dir, "nodes")), ref.nodes())
 
 
 def test_available_now_incremental(spark, entity_dict_df, tmp_path_factory):
