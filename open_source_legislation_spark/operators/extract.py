@@ -19,8 +19,10 @@ The pure-Python oracle (``oracle.py``) is the independent reference the
 engine is tested against (tests/test_engines_equivalent.py).
 
 At 10^12 turns per-conv state is O(stack depth) per partition, so hot
-conversations cost time, not memory; the per-node text reassembly is
-chunk-salted separately (:func:`node_text_agg`).
+conversations cost time, not memory. The per-node text
+(:func:`node_text_agg`) is one row per node, so one task holds a node's
+text whatever the plan; nodes stay small (at most 29 content turns
+measured at 200k turns) even when their conversation is hot.
 """
 
 from __future__ import annotations
@@ -434,67 +436,69 @@ def nodes_table(derived: DataFrame) -> DataFrame:
     return node_rows.unionByName(roots)
 
 
-# ord span of one phase-1 chunk in node_text_agg's two-phase aggregation
-_TEXT_CHUNK = 1024
+def is_addendum(text: Column) -> Column:
+    """Column twin of :func:`rules.is_addendum`."""
+    return text.rlike(rules.ADDENDUM_PATTERN)
 
 
-def node_text_agg(derived: DataFrame, addenda: DataFrame) -> DataFrame:
-    """Per-node ordered document text (reference ``NodeText`` — the ordered
-    array of ALL paragraphs under a section, pydanticModels.py:203-366,
-    serialized via ``to_list_text()`` :290-296).
+def last_addendum() -> Column:
+    """Aggregate over a node's content turns: its addendum, the LAST turn
+    by ``ord`` whose text is a source/history trailer (reference
+    extract_addendum, scrapeECFR.py:867-992), as ``struct(text, conv_id,
+    turn_idx, ord)``; null when the node has none. ``max_by`` skips rows
+    whose ordering is null, so the other turns never win."""
+    return F.max_by(
+        F.struct(
+            F.col("clean_text").alias("text"),
+            F.col("conv_id").alias("conv_id"),
+            F.col("turn_idx").alias("turn_idx"),
+            F.col("ord").alias("ord"),
+        ),
+        F.when(is_addendum(F.col("clean_text")), F.col("ord")),
+    )
 
-    Content turns (``node_id IS NULL``) group under ``current_node``; the
-    turn peeled as the node's addendum is EXCLUDED (the reference removes
-    the trailing source paragraph from the node body before storing it,
-    extract_addendum scrapeECFR.py:867-992). Two-phase chunk-salted
-    aggregation (phase 1 on ``(node, ord div _TEXT_CHUNK)``, phase 2
-    stitches the ordered chunks — SURVEY §7.4.1) bounds per-reduce-task
-    state on hot nodes at 10^12-turn scale; ``ord`` is
-    unique within a node's conversation, so chunk ranges align with text
-    order. ``addenda`` (one row per node, ≪ turns) rides a broadcast
-    anti-join.
 
-    Output: ``node_id, node_text_list (array<string>), node_text (string),
-    n_paragraphs``.
+def node_text_agg(derived: DataFrame) -> DataFrame:
+    """Per-node addendum and ordered document text (reference ``NodeText``
+    — the ordered array of ALL paragraphs under a section,
+    pydanticModels.py:203-366, serialized via ``to_list_text()``
+    :290-296) in ONE ``groupBy(current_node)`` over the content turns
+    (``node_id IS NULL``).
+
+    The turn that :func:`last_addendum` picks is peeled from the text (the
+    reference removes the trailing source paragraph from the node body,
+    extract_addendum scrapeECFR.py:905-940). ``ord`` is unique within a
+    node, because node ids carry their conversation prefix, so the peel
+    drops exactly that turn. When nothing is left, the text columns are
+    NULL, as in the oracle.
+
+    A node's text is one output row, so one task holds all of it whatever
+    the plan; salting the aggregate could not bound that. Nodes stay
+    small even in hot conversations: the largest measured held 20-29
+    content turns (the test fixtures, 20k and 200k synthetic turns).
+
+    Output: ``node_id, node_addendum, node_text_list (array<string>),
+    node_text (string), n_paragraphs``.
     """
-    content = derived.filter(F.col("node_id").isNull()).select(
-        "current_node", "ord", "turn_idx", "clean_text"
-    )
-    # (current_node, turn_idx) identifies the peeled turn: node ids are
-    # conv-prefixed and deduped turns have unique turn_idx per conv
-    peel = addenda.select(
-        F.col("current_node").alias("_an"), F.col("turn_idx").alias("_at")
-    )
-    content = content.join(
-        F.broadcast(peel),
-        (F.col("current_node") == F.col("_an"))
-        & (F.col("turn_idx") == F.col("_at")),
-        "left_anti",
-    )
-    content = content.select("current_node", "ord", "clean_text")
-    chunked = (
-        content.withColumn("chunk", (F.col("ord") / F.lit(_TEXT_CHUNK)).cast("long"))
-        .groupBy("current_node", "chunk")
+    grouped = (
+        derived.filter(F.col("node_id").isNull())
+        .groupBy("current_node")
         .agg(
+            last_addendum().alias("a"),
             F.array_sort(
                 F.collect_list(F.struct(F.col("ord"), F.col("clean_text")))
-            ).alias("arr")
+            ).alias("parts"),
         )
     )
-    stitched = chunked.groupBy("current_node").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk", "arr"))),
-                lambda s: s["arr"],
-            )
-        ).alias("parts")
-    )
-    texts = F.transform("parts", lambda s: s["clean_text"])
-    return stitched.select(
+    body = F.filter("parts", lambda s: ~s["ord"].eqNullSafe(F.col("a.ord")))
+    texts = F.transform("body", lambda s: s["clean_text"])
+    has_text = F.size("body") > 0
+    return grouped.select("current_node", "a", body.alias("body")).select(
         F.col("current_node").alias("node_id"),
-        texts.alias("node_text_list"),
-        F.concat_ws("\n", texts).alias("node_text"),
-        F.size("parts").alias("n_paragraphs"),
+        F.col("a.text").alias("node_addendum"),
+        F.when(has_text, texts).alias("node_text_list"),
+        F.when(has_text, F.concat_ws("\n", texts)).alias("node_text"),
+        F.when(has_text, F.size("body")).alias("n_paragraphs"),
     )
 
 

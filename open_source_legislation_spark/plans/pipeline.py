@@ -5,7 +5,7 @@ One declarative DataFrame plan per the SURVEY §3.2 lifecycle:
     scan(transcripts) → payload Arrow kernel (clean + marker + mention/
     definition extraction) → repartition(hash(conv_id)) → sort →
     mapInArrow state pass (dedup, ordinals, hierarchy nodes, scopes) →
-    parquet spill → explode → broadcast candidate-ladder join →
+    parquet spill → explode → candidate-ladder join →
     alias CC loop → triples/nodes/edges materialization.
 
 Python runs only before the spill (the two Arrow kernels) and in the
@@ -26,7 +26,6 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import rules
 from ..operators import (
     canonicalize,
     defscope,
@@ -72,9 +71,13 @@ class PipelineResult:
     bench headline reads only ``triples``; the checkpoint runner, which
     streaming micro-batches also run, writes ``triples`` and ``nodes`` and
     never needs ``rewritten``). The shared intermediates (linked
-    incorporated definitions, addenda, the node projection and the cites
-    edges) are cached the same way, so all outputs agree. Lazy construction
-    changes WHEN a plan is built, never what it computes."""
+    incorporated definitions, the node projection and the cites edges)
+    are cached the same way, so all outputs agree. The addendum rule has
+    one definition (:func:`extract.last_addendum`): ``nodes`` takes a
+    node's addendum and its peeled text from one aggregate over all of
+    its content turns, while the addendum triples aggregate only the
+    trailer turns. Lazy construction changes WHEN a plan is built, never
+    what it computes."""
 
     def __init__(
         self,
@@ -105,26 +108,15 @@ class PipelineResult:
 
     @cached_property
     def _addenda(self) -> DataFrame:
-        """Last source/history trailer per node (reference
-        extract_addendum, scrapeECFR.py:867-992): pure groupBy + max_by on
-        the per-conv ordinal — one partial-aggregated exchange on
-        current_node, no window."""
+        """Last source/history trailer per node, for the addendum triples:
+        :func:`extract.last_addendum` over the trailer turns alone, so the
+        triples plan never collects node text."""
         return (
             self.turns.filter(
-                F.col("node_id").isNull()
-                & F.col("clean_text").rlike(rules.ADDENDUM_PATTERN)
+                F.col("node_id").isNull() & extract.is_addendum(F.col("clean_text"))
             )
             .groupBy("current_node")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col("clean_text").alias("text"),
-                        F.col("conv_id").alias("conv_id"),
-                        F.col("turn_idx").alias("turn_idx"),
-                    ),
-                    F.col("ord"),
-                ).alias("a")
-            )
+            .agg(extract.last_addendum().alias("a"))
             .select(
                 "current_node",
                 F.col("a.text").alias("node_addendum"),
@@ -173,25 +165,18 @@ class PipelineResult:
     @cached_property
     def nodes(self) -> DataFrame:
         # nodes enriched with the reference's per-node payloads: addendum
-        # (broadcast join — addenda ≪ nodes), the full per-node document
-        # text (NodeText.to_list_text, pydanticModels.py:290-296 — ordered
-        # content turns under the node, addendum peeled), BPE-ish token
-        # count (scrapeECFR.py:359-360,1003-1007) and the phase-3 hash
-        # embedding (3_process.py:18-36) — token/embedding expressions run
-        # over the FULL node text (falling back to the marker heading for
-        # childless nodes)
-        node_texts = extract.node_text_agg(self.turns, self._addenda)
+        # and the full per-node document text (NodeText.to_list_text,
+        # pydanticModels.py:290-296 — ordered content turns under the
+        # node, addendum peeled), both from ONE aggregate over the content
+        # turns (extract.node_text_agg), then BPE-ish token count
+        # (scrapeECFR.py:359-360,1003-1007) and the phase-3 hash embedding
+        # (3_process.py:18-36) — token/embedding expressions run over the
+        # FULL node text (falling back to the marker heading for childless
+        # nodes and nodes whose only content turn is the addendum)
         full_text = F.coalesce(F.col("node_text"), F.col("text"))
         nodes = (
             self._node_rows
-            .join(
-                F.broadcast(self._addenda.select(
-                    F.col("current_node").alias("node_id"), "node_addendum"
-                )),
-                "node_id",
-                "left",
-            )
-            .join(node_texts, "node_id", "left")
+            .join(extract.node_text_agg(self.turns), "node_id", "left")
             .withColumn(
                 # ONE fused Arrow pass over the long full-text column for
                 # BOTH n_tokens and the embedding — NOT hash_embed_expr

@@ -111,7 +111,8 @@ def q_join_entity_link(spark, sf_dir):
 
 def q_join_entity_link_ladder(spark, sf_dir):
     """The REAL linking candidate ladder (operators/linking.py
-    link_mentions) on its dictionary-outgrows-broadcast SHUFFLE fallback:
+    link_mentions), one left equi-join per rung whose strategy Spark's
+    join selection picks (the nation-sized dictionary broadcasts):
     exact → zero-padded → popped-level backoff
     (rules.candidate_keys, reference analyze_partial_link
     pydanticModels.py:555-636) over synthetic mentions from orders against
@@ -144,7 +145,7 @@ def q_join_entity_link_ladder(spark, sf_dir):
             F.concat(F.lit("corp/title="), (nk + 25).cast("string")),
         ).alias("aliases"),
     )
-    out = linking.link_mentions(mentions, ed, strategy="shuffle")
+    out = linking.link_mentions(mentions, ed)
     return out.select("o_orderkey", "raw_key", "entity_id", "link_priority")
 
 

@@ -12,8 +12,9 @@ same tag-don't-retry policy). The Spark-native re-expression:
   partitions, not a driver-side thread pool, and a 10^9-URL crawl is just
   a bigger work-list table;
 - the output keeps ONE row per input row: ``status='ok'`` with content,
+  ``status='truncated'`` with the first ``max_bytes`` of a longer body,
   or ``status='failed'`` with the error string and the attempt count —
-  misses become metrics, never silent drops;
+  misses and cut bodies become metrics, never silent drops;
 - deterministic: given the same URL set and filesystem state, the output
   is identical (ordering is carried by the input row, not arrival time).
 
@@ -52,7 +53,8 @@ def fetch_with_retry(
 
     ``max_retries`` counts retries AFTER the first attempt (the reference's
     ``retries=3`` budget); backoff doubles per retry. Content is decoded
-    UTF-8 (errors replaced) and capped at ``max_bytes``.
+    UTF-8 (errors replaced) and capped at ``max_bytes``; a longer body
+    keeps its first ``max_bytes`` and is tagged ``status='truncated'``.
     """
 
     def gen(batches):
@@ -65,13 +67,16 @@ def fetch_with_retry(
             rows = []
             for url in pdf[url_col]:
                 attempts = 0
+                status = "failed"
                 content = None
                 error = None
                 while True:
                     attempts += 1
                     try:
                         with urllib.request.urlopen(url, timeout=timeout_s) as r:
-                            content = r.read(max_bytes).decode("utf-8", "replace")
+                            body = r.read(max_bytes + 1)
+                        content = body[:max_bytes].decode("utf-8", "replace")
+                        status = "truncated" if len(body) > max_bytes else "ok"
                         error = None
                         break
                     except Exception as e:  # noqa: BLE001 — tag, don't crash
@@ -82,7 +87,7 @@ def fetch_with_retry(
                 rows.append(
                     {
                         "url": url,
-                        "status": "ok" if error is None else "failed",
+                        "status": status,
                         "attempts": attempts,
                         "content": content,
                         "error": error,

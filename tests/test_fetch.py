@@ -45,6 +45,26 @@ def test_fetch_ok_and_failed_tagged(spark, tmp_path):
     assert "Error" in bad.error or "error" in bad.error
 
 
+def test_fetch_over_max_bytes_is_tagged_truncated(spark, tmp_path):
+    """A body longer than ``max_bytes`` keeps its first ``max_bytes`` and
+    is tagged ``truncated``, never reported ``ok``; a body of exactly
+    ``max_bytes`` is whole."""
+    long_doc = tmp_path / "long.html"
+    long_doc.write_text("0123456789")
+    exact = tmp_path / "exact.html"
+    exact.write_text("01234")
+    out = {
+        r.url: r
+        for r in fetch.fetch_with_retry(
+            _urls_df(spark, [long_doc.as_uri(), exact.as_uri()]), max_bytes=5
+        ).collect()
+    }
+    cut = out[long_doc.as_uri()]
+    assert (cut.status, cut.content, cut.error) == ("truncated", "01234", None)
+    whole = out[exact.as_uri()]
+    assert (whole.status, whole.content) == ("ok", "01234")
+
+
 def test_fetch_retry_succeeds_after_transient_failure(spark, tmp_path):
     """A file that appears between attempts: the retry loop must pick it up
     (the reference's whole reason for backoff)."""

@@ -1,5 +1,8 @@
 """Entity-linking candidate ladder (exact / zero-pad / popped-level) —
-SURVEY §2.3 join_entity_link as ranked broadcast equi-joins."""
+SURVEY §2.3 join_entity_link as ranked equi-joins (broadcast while the
+index fits Spark's auto-broadcast threshold)."""
+
+import contextlib
 
 from pyspark.sql import functions as F
 
@@ -65,68 +68,52 @@ _LADDER_KEYS = [
 ]
 
 
-def test_shuffle_fallback_matches_broadcast(spark, entity_dict_df):
-    """The dictionary-outgrows-broadcast fallback (melted ladder + one
-    shuffle hash join + best-priority regroup) must produce EXACTLY the
-    broadcast ladder's output, misses included."""
+@contextlib.contextmanager
+def _no_auto_broadcast(spark):
+    """Spark's auto-broadcast off, as for an alias index estimated past
+    ``spark.sql.autoBroadcastJoinThreshold``."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
-    def rows(strategy):
+
+def test_shuffle_fallback_matches_broadcast(spark, entity_dict_df):
+    """With auto-broadcast off, Spark's join selection sort-merges the
+    rungs; the output must equal the broadcast ladder's EXACTLY, misses
+    included."""
+
+    def rows():
         return sorted(
             map(
                 tuple,
                 linking.link_mentions(
-                    _mentions(spark, _LADDER_KEYS),
-                    entity_dict_df,
-                    strategy=strategy,
+                    _mentions(spark, _LADDER_KEYS), entity_dict_df
                 ).collect(),
             )
         )
 
-    b, s = rows("broadcast"), rows("shuffle")
+    b = rows()
+    with _no_auto_broadcast(spark):
+        s = rows()
     assert b == s
     assert len(b) == len(_LADDER_KEYS)
 
 
 def test_shuffle_fallback_plan_has_no_broadcast_of_index(spark, entity_dict_df):
     """With Spark's own auto-broadcast off (as it would be for a >threshold
-    index at scale), the fallback plan must contain NO broadcast — the
-    whole point is that the index never has to fit in executor memory."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    index at scale), the plan must contain NO broadcast — the whole point
+    is that the index never has to fit in executor memory."""
+    with _no_auto_broadcast(spark):
         linked = linking.link_mentions(
-            _mentions(spark, _LADDER_KEYS), entity_dict_df, strategy="shuffle"
+            _mentions(spark, _LADDER_KEYS), entity_dict_df
         )
+        linked.collect()
         plan = linked._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert "BroadcastExchange" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_auto_strategy_switches_on_size_estimate(
-    spark, entity_dict_df, monkeypatch
-):
-    """An alias index estimated past the broadcast budget must route
-    auto → the shuffle fallback, with identical output."""
-    monkeypatch.setattr(
-        linking, "_estimated_bytes", lambda df: linking._BROADCAST_MAX_BYTES + 1
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        forced = linking.link_mentions(
-            _mentions(spark, _LADDER_KEYS),
-            entity_dict_df,
-            strategy="auto",
-        )
-        plan = forced._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    got = {r["raw_key"]: (r["entity_id"], r["link_priority"]) for r in forced.collect()}
-    assert got["cfr/title=40/part=105"] == ("us/federal/ecfr/title=40/part=105", 1)
-    assert got["nonsense/key=1"] == (None, None)
+    assert "Broadcast" not in plan
 
 
 def test_broadcast_join_in_plan(spark, entity_dict_df):
@@ -137,30 +124,3 @@ def test_broadcast_join_in_plan(spark, entity_dict_df):
     )
     plan = linked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_auto_strategy_fails_safe_without_size_estimate(spark, entity_dict_df, monkeypatch):
-    """When Catalyst's size estimate is unavailable (Spark Connect / API
-    drift) auto must take the SHUFFLE path: an unestimatable oversized
-    dictionary on the broadcast path is exactly the executor-OOM the
-    fallback exists to avoid."""
-    monkeypatch.setattr(linking, "_estimated_bytes", lambda df: None)
-    chosen = {}
-    real = linking._link_shuffle
-
-    def spy(out, idx, orig):
-        chosen["path"] = "shuffle"
-        return real(out, idx, orig)
-
-    monkeypatch.setattr(linking, "_link_shuffle", spy)
-    got = {
-        r["raw_key"]: (r["entity_id"], r["link_priority"])
-        for r in linking.link_mentions(
-            _mentions(spark, ["cfr/title=40/part=105", "nonsense/key=1"]),
-            entity_dict_df,
-            strategy="auto",
-        ).collect()
-    }
-    assert chosen.get("path") == "shuffle"
-    assert got["cfr/title=40/part=105"] == ("us/federal/ecfr/title=40/part=105", 1)
-    assert got["nonsense/key=1"] == (None, None)

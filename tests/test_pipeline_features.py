@@ -68,6 +68,63 @@ def test_addendum_on_nodes(spark, transcripts_df, entity_dict_df, transcripts_pd
     assert got  # fixtures do produce addenda
 
 
+def test_addendum_edge_cases_match_oracle(spark, entity_dict_df, entity_dict_pd):
+    """Hand-built sections: one whose only content turn is its addendum
+    (text NULL, addendum set), one with an early trailer, content and a
+    later trailer (the last trailer is the addendum; the early one stays
+    in the text, in order), and a childless heading (all NULL)."""
+    import datetime
+
+    import pandas as pd
+
+    from open_source_legislation_spark import schemas
+
+    texts = [
+        "Title 1. General",
+        "Section 1.1 Only a source",
+        "Source: https://ex.gov/a (accessed).",
+        "Section 1.2 Mixed",
+        "History: a",
+        "Body of section 1.2.",
+        "Source: b",
+        "Section 1.3 Childless",
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    t = pd.DataFrame(
+        {
+            "conv_id": "c1",
+            "turn_idx": range(len(texts)),
+            "role": "user",
+            "text": texts,
+            "tool": None,
+            "ts": ts,
+        }
+    )
+    res = run_pipeline(
+        spark, spark.createDataFrame(t, schema=schemas.TRANSCRIPTS), entity_dict_df
+    )
+    try:
+        got = {
+            r.node_id: (r.node_addendum, r.node_text, r.n_paragraphs)
+            for r in res.nodes.select(
+                "node_id", "node_addendum", "node_text", "n_paragraphs"
+            ).collect()
+        }
+    finally:
+        res.cleanup()
+    onodes = oracle.run_oracle(t, entity_dict_pd)["nodes"]
+    exp = {}
+    for r in onodes.itertuples(index=False):
+        text = r.node_text if isinstance(r.node_text, str) else None
+        addendum = r.node_addendum if isinstance(r.node_addendum, str) else None
+        exp[r.node_id] = (addendum, text, len(text.split("\n")) if text else None)
+    assert got == exp
+    sec = "conv=c1/title=1/section="
+    assert got[sec + "1.1"] == ("Source: https://ex.gov/a (accessed).", None, None)
+    assert got[sec + "1.2"] == ("Source: b", "History: a\nBody of section 1.2.", 2)
+    assert got[sec + "1.3"] == (None, None, None)
+
+
 def test_subdefinition_rule():
     text = (
         "“Act” means the statute, including: "
@@ -111,8 +168,8 @@ def test_node_text_matches_oracle(
 ):
     """Per-node document text (reference NodeText.to_list_text,
     pydanticModels.py:290-296): ordered content turns under each node,
-    addendum peeled — identical between the chunk-salted Spark aggregate
-    and the oracle's sequential walk."""
+    addendum peeled — identical between the Spark aggregate and the
+    oracle's sequential walk."""
     res = _pipeline(spark, transcripts_df, entity_dict_df)
     got = {
         r.node_id: r.node_text

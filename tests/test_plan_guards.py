@@ -57,9 +57,10 @@ def test_no_cartesian_or_row_python_in_any_registered_plan(spark):
 _PYTHON_NODES = {"ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas"}
 
 
-def _python_nodes(df) -> list[str]:
-    """Run ``df`` and name the Python-crossing nodes of its executed plan,
-    descending through the adaptive plan and its query stages."""
+def _executed_nodes(df) -> list:
+    """Run ``df`` and list the physical nodes of its executed plan,
+    descending through the adaptive plan and its query stages (a reused
+    exchange is a leaf, so each exchange counts once)."""
     df.collect()
     found, stack = [], [df._jdf.queryExecution().executedPlan()]
     while stack:
@@ -71,11 +72,17 @@ def _python_nodes(df) -> list[str]:
         if kind.endswith("QueryStageExec"):
             stack.append(p.plan())
             continue
-        if p.nodeName() in _PYTHON_NODES:
-            found.append(p.nodeName())
+        found.append(p)
         kids = p.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return found
+
+
+def _python_nodes(df) -> list[str]:
+    """Name the Python-crossing nodes of ``df``'s executed plan."""
+    return [
+        p.nodeName() for p in _executed_nodes(df) if p.nodeName() in _PYTHON_NODES
+    ]
 
 
 def test_kg_pipeline_has_no_python_after_the_spill(
@@ -92,6 +99,24 @@ def test_kg_pipeline_has_no_python_after_the_spill(
         assert _python_nodes(res.nodes) == ["ArrowEvalPython"]
     finally:
         res.cleanup()
+
+
+def test_nodes_plan_builds_each_node_fact_once(spark, transcripts_df, entity_dict_df):
+    """A node's addendum and its peeled text come from ONE aggregate over
+    its content turns (``extract.node_text_agg``): no second addenda
+    aggregate, no peel join, no two-phase text aggregate. Pins the shuffle
+    exchanges and aggregate operators of the executed ``nodes`` plan."""
+    from collections import Counter
+
+    from open_source_legislation_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, transcripts_df, entity_dict_df)
+    try:
+        kinds = Counter(p.getClass().getSimpleName() for p in _executed_nodes(res.nodes))
+    finally:
+        res.cleanup()
+    aggregates = sum(n for k, n in kinds.items() if k.endswith("AggregateExec"))
+    assert (kinds["ShuffleExchangeExec"], aggregates) == (5, 11), kinds
 
 
 def test_repeated_kg_build_compiles_no_new_code(spark, transcripts_df, entity_dict_df):

@@ -58,12 +58,11 @@ def test_ord_is_dense_per_conv(derived):
     assert bad == 0
 
 
-def test_reassemble_documents_order(derived, monkeypatch):
-    """Chunked (skew-safe) per-node text reassembly equals a direct ordered
-    collect — chunk boundaries must not disturb turn order."""
-    monkeypatch.setattr(extract, "_TEXT_CHUNK", 7)
-    no_addenda = derived.select("current_node", "turn_idx").limit(0)
-    docs = extract.node_text_agg(derived, no_addenda)
+def test_reassemble_documents_order(derived):
+    """Per-node text is the node's content turns in ``ord`` order, with
+    only the turn peeled as its addendum (the last one carrying that text)
+    left out; a node with nothing left has NULL text columns."""
+    docs = {r["node_id"]: r for r in extract.node_text_agg(derived).collect()}
     content = derived.filter(F.col("node_id").isNull())
     direct = content.groupBy(F.col("current_node").alias("node_id")).agg(
         F.transform(
@@ -71,11 +70,19 @@ def test_reassemble_documents_order(derived, monkeypatch):
             lambda s: s["clean_text"],
         ).alias("expected")
     )
-    joined = docs.join(direct, "node_id")
-    assert joined.filter(F.col("node_text_list") != F.col("expected")).count() == 0
-    assert docs.count() == direct.count()
-    # some node really spans several 7-turn chunks
-    assert docs.filter(F.col("n_paragraphs") > 7).count() > 0
+    expected = {r["node_id"]: list(r["expected"]) for r in direct.collect()}
+    assert set(docs) == set(expected)
+    for node_id, paras in expected.items():
+        doc = docs[node_id]
+        if doc["node_addendum"] is not None:
+            last = len(paras) - 1 - paras[::-1].index(doc["node_addendum"])
+            del paras[last]
+        assert doc["node_text_list"] == (paras or None), node_id
+        assert doc["node_text"] == ("\n".join(paras) if paras else None)
+        assert doc["n_paragraphs"] == (len(paras) or None)
+    # non-vacuous: multi-paragraph nodes and peeled addenda both occur
+    assert any((d["n_paragraphs"] or 0) > 1 for d in docs.values())
+    assert any(d["node_addendum"] is not None for d in docs.values())
 
 
 def test_order_independence_under_repartition(spark, transcripts_df):
