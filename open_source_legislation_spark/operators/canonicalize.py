@@ -26,8 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_ITERATIONS = 25  # rounds before an unconverged component raises
 
-def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """``(member, canonical)`` for every vertex in ``edges(src, dst)``,
     canonical = lexicographic-min id of the component (matches the oracle's
     union-find labeling)."""
@@ -43,7 +45,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     )
     sym = sym.localCheckpoint(eager=True)
     labels = labels.localCheckpoint(eager=True)
-    for i in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["member"], "inner")
             .groupBy(F.col("a").alias("member"))
@@ -79,13 +81,12 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
             .limit(1)
             .count()
         )
-        _ = i
         labels = new_labels
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds "
-        "(component diameter beyond 2^rounds — raise max_iterations)"
+        f"connected_components did not converge in {MAX_ITERATIONS} rounds "
+        "(component diameter beyond 2^rounds — raise MAX_ITERATIONS)"
     )
 
 

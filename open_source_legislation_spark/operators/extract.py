@@ -404,7 +404,8 @@ def nodes_table(derived: DataFrame) -> DataFrame:
     """Materialize the nodes table (reference CLAUDE.md:514-536 shape),
     including one root node per conversation and the bluebook-style
     ``citation`` derived from the id path (reference node_citation,
-    scrapeECFR.py:1174-1210)."""
+    scrapeECFR.py:1174-1210). Each root comes from its conversation's
+    first turn: the state pass restarts ``ord`` at 1 per conversation."""
     node_rows = derived.filter(F.col("node_id").isNotNull()).select(
         F.col("node_id"),
         F.when(F.col("level_classifier") == "section", "content")
@@ -420,7 +421,7 @@ def nodes_table(derived: DataFrame) -> DataFrame:
         citation_expr(F.col("node_id")).alias("citation"),
     )
     roots = (
-        derived.select("conv_id").distinct().select(
+        derived.filter(F.col("ord") == 1).select(
             conv_root_col(F.col("conv_id")).alias("node_id"),
             F.lit("structure").alias("node_type"),
             F.lit("conv").alias("level_classifier"),

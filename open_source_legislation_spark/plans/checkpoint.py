@@ -6,7 +6,8 @@ failures instead of retrying forever (reference ``3_process.py:18-36``,
 ``processingHelpers.py:55-76``). The Spark analog:
 
 - input rows land in ``num_buckets`` deterministic conversation buckets
-  (``pmod(hash(conv_id), B)`` — Murmur3, stable across runs/executors);
+  (``pmod(hash(conv_id), B)`` — Murmur3, stable across runs/executors)
+  under ``_input/_bucket=b/_batch=<id>``, through one writer (``land``);
 - :meth:`CheckpointedRunner.run_buckets` re-derives each given bucket from
   all of its landed rows and writes it to its own parquet partition
   directory with ``mode=overwrite`` (idempotent retries);
@@ -17,7 +18,8 @@ A batch build lands its input once and runs the buckets not yet in the
 manifest, so a killed run re-executes only unfinished buckets and converges
 to the identical final tables (tested by kill-and-resume). The streaming
 front-end lands each micro-batch and runs the buckets it touched
-(``streaming/incremental.py``).
+(``streaming/incremental.py``), so passes after a batch build add to it; a
+batch build after a streamed commit raises.
 
 On a real cluster the same structure maps to Iceberg snapshot-per-bucket
 commits; parquet directories are the sandbox stand-in (SURVEY §7.4.5).
@@ -28,10 +30,11 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import run_pipeline
@@ -39,10 +42,25 @@ from ..plans.pipeline import run_pipeline
 MANIFEST_DIR = "_manifest"
 METRICS_DIR = "_metrics"
 INPUT_DIR = "_input"
+LAYOUT_FILE = "_layout.json"  # the bucket count of the first landing
+META_FILE = "_input_meta.json"  # the batch landing's fingerprint
+BATCH_LANDING = -1  # streamed micro-batches are numbered from 0
 
 
 def bucket_col(conv_id_col, num_buckets: int):
     return F.pmod(F.hash(conv_id_col), F.lit(num_buckets)).cast("int")
+
+
+def _append_jsonl(path: str, *rows: dict) -> None:
+    with open(path, "a") as fh:
+        fh.writelines(json.dumps(row) + "\n" for row in rows)
+
+
+def _write_json(path: str, obj: dict) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 @dataclass
@@ -63,12 +81,13 @@ class CheckpointedRunner:
         spark: SparkSession,
         out_dir: str,
         run_id: str,
-        num_buckets: int = 8,
+        num_buckets: int | None = None,
     ) -> None:
+        """``num_buckets`` defaults to the out_dir's recorded count, else 8."""
         self.spark = spark
         self.out_dir = out_dir
         self.run_id = run_id
-        self.num_buckets = num_buckets
+        self.num_buckets = num_buckets or self._recorded_buckets() or 8
         os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(out_dir, METRICS_DIR), exist_ok=True)
 
@@ -91,21 +110,17 @@ class CheckpointedRunner:
         """Append manifest + metrics rows — the per-partition lineage commit
         (analog of the reference's per-batch conn.commit(),
         processingHelpers.py:93-95)."""
-        with open(self._manifest_path(), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "run_id": self.run_id,
-                        "stage": "triples",
-                        "partition_id": stats.partition_id,
-                        "status": "success",
-                        "rows_in": stats.rows_in,
-                        "rows_out": stats.rows_out,
-                        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    }
-                )
-                + "\n"
-            )
+        key = {"run_id": self.run_id, "stage": "triples", "partition_id": stats.partition_id}
+        _append_jsonl(
+            self._manifest_path(),
+            {
+                **key,
+                "status": "success",
+                "rows_in": stats.rows_in,
+                "rows_out": stats.rows_out,
+                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            },
+        )
         miss_rate = (
             1.0 - stats.mentions_linked / stats.mentions if stats.mentions else 0.0
         )
@@ -115,20 +130,10 @@ class CheckpointedRunner:
             ("link_miss_rate", miss_rate),
             ("wall_ms", stats.wall_ms),
         ]
-        with open(os.path.join(self.out_dir, METRICS_DIR, "metrics.jsonl"), "a") as f:
-            for metric, value in metrics:
-                f.write(
-                    json.dumps(
-                        {
-                            "run_id": self.run_id,
-                            "stage": "triples",
-                            "partition_id": stats.partition_id,
-                            "metric": metric,
-                            "value": value,
-                        }
-                    )
-                    + "\n"
-                )
+        _append_jsonl(
+            os.path.join(self.out_dir, METRICS_DIR, "metrics.jsonl"),
+            *({**key, "metric": metric, "value": value} for metric, value in metrics),
+        )
 
     # -- execution ---------------------------------------------------------
     @staticmethod
@@ -146,38 +151,50 @@ class CheckpointedRunner:
                     total += pq.read_metadata(os.path.join(root, fn)).num_rows
         return total
 
-    # -- bucketed input materialization -----------------------------------
+    # -- input landing -----------------------------------------------------
     def _input_path(self) -> str:
         return os.path.join(self.out_dir, INPUT_DIR)
 
+    def _recorded_buckets(self) -> int | None:
+        """The bucket count recorded at the out_dir's first landing."""
+        try:
+            with open(os.path.join(self._input_path(), LAYOUT_FILE)) as fh:
+                return json.load(fh)["num_buckets"]
+        except FileNotFoundError:
+            return None
+
+    def _check_buckets(self) -> None:
+        recorded = self._recorded_buckets()
+        if recorded not in (None, self.num_buckets):
+            raise ValueError(
+                f"checkpoint resume: materialized input at "
+                f"{self._input_path()} was bucketed with num_buckets="
+                f"{recorded} but this run uses {self.num_buckets}; clear "
+                f"{INPUT_DIR} (and the manifest) or restore the original "
+                f"bucket count — reusing it would mislabel every bucket"
+            )
+
+    def _landing_dirs(self, batch_id: int) -> list[str]:
+        pattern = os.path.join(
+            glob.escape(self._input_path()), "_bucket=*", f"_batch={batch_id}"
+        )
+        return sorted(glob.glob(pattern))
+
     def _materialize_input(self, transcripts: DataFrame) -> None:
-        """Write the input ONCE, hash-partitioned into per-bucket
-        directories, so each bucket run reads exactly its own partition (on
-        a real deployment, the transcripts table's Iceberg ``bucket(B,
-        conv_id)`` partition spec, SCALE.md). A completed write (Spark's
-        ``_SUCCESS`` marker) is REUSED on resume — but only after validating
-        the sidecar ``_input_meta.json`` (bucket count + input row
-        fingerprint): a resume with a different ``num_buckets``, or an
-        out_dir re-pointed at different input, would otherwise silently
-        commit empty buckets — data loss indistinguishable from genuinely
-        empty hash buckets. A reuse whose meta sidecar is missing (crash
-        between the parquet write and the meta rename) is re-materialized,
-        not trusted."""
+        """Land the batch build's input through :meth:`land` under
+        :data:`BATCH_LANDING`. The fingerprint sidecar of the batch's own
+        dirs is the landing's commit marker: a resume reuses the landing
+        only when it matches the incoming transcripts, and raises
+        ``ValueError`` on another bucket count or other input. Without a
+        sidecar the batch lands afresh, which raises ``ValueError`` when the
+        manifest already holds commits (from a stream): the runner cannot
+        tell which of those buckets are current."""
         path = self._input_path()
-        meta_path = os.path.join(path, "_input_meta.json")
-        if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
-            meta_path
-        ):
+        meta_path = os.path.join(path, META_FILE)
+        if os.path.exists(meta_path):
+            self._check_buckets()
             with open(meta_path) as fh:
                 meta = json.load(fh)
-            if meta["num_buckets"] != self.num_buckets:
-                raise ValueError(
-                    f"checkpoint resume: materialized input at {path} was "
-                    f"bucketed with num_buckets={meta['num_buckets']} but "
-                    f"this run uses {self.num_buckets}; clear {INPUT_DIR} "
-                    f"(and the manifest) or restore the original bucket "
-                    f"count — reusing it would mislabel every bucket"
-                )
             if "sum_crc32" not in meta:
                 raise ValueError(
                     f"checkpoint resume: the meta sidecar at {meta_path} "
@@ -203,77 +220,37 @@ class CheckpointedRunner:
                     f"resuming over stale buckets"
                 )
             return
-        from pyspark.sql import Observation
-
-        bucketed = transcripts.withColumn(
-            "_bucket", bucket_col(F.col("conv_id"), self.num_buckets)
-        )
-        # Observation rides the write itself: the incoming row count comes
-        # from the SAME evaluation that produced the files — zero extra
-        # scans — and cross-checks the committed footers below, so a write
-        # that silently drops rows (failed task commit, partial overwrite)
-        # is caught at materialization, not mis-diagnosed at resume
-        obs = Observation("materialize_rows")
-        (
-            bucketed.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .repartition(self.num_buckets, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(path)
-        )
-        incoming_rows = int(obs.get["rows"])
-        durable_rows = self._parquet_rows(path)
-        if incoming_rows != durable_rows:
-            raise RuntimeError(
-                f"materialized input at {path} lost rows in flight: "
-                f"incoming {incoming_rows} vs committed {durable_rows}"
+        if self.completed_buckets():
+            raise ValueError(
+                f"checkpoint: {self.out_dir} already holds committed buckets "
+                f"but no batch landing, so a batch build cannot tell which "
+                f"of them are current; stream the new rows through "
+                f"incremental_extract, or clear the out_dir"
             )
-        # fingerprint the COMMITTED parquet, not the incoming plan: what
-        # must be recorded is what was actually made durable (a second
-        # evaluation of an expensive derived plan could also diverge from
-        # the first)
-        meta = {
-            "num_buckets": self.num_buckets,
-            **self._input_fingerprint(self.spark.read.parquet(path)),
-        }
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, meta_path)
+        self.land(transcripts, BATCH_LANDING)
+        # fingerprint the COMMITTED parquet, not a second evaluation of the
+        # incoming plan
+        landed = self.spark.read.schema(transcripts.schema).parquet(
+            *self._landing_dirs(BATCH_LANDING)
+        )
+        _write_json(meta_path, self._input_fingerprint(landed))
 
     @staticmethod
     def _input_fingerprint(transcripts: DataFrame) -> dict:
         """Order-independent content fingerprint of the input in ONE
-        aggregate scan: row count + SUM of per-row crc32 over the identity
-        columns (conv_id, turn_idx, text). Sum is commutative so the value
-        is partitioning-independent, and unlike XOR it does NOT cancel on
-        even multiplicities (two identical rows XOR to zero, so a swapped
-        duplicate PAIR would slip through an xor fingerprint — duplicated
-        turns are a real input class here). Accumulated in DECIMAL(38,0):
-        1e12 rows x 2^32 exceeds int64.
-
-        Every field is coalesced to a DISTINCT NULL sentinel before the
-        concat: concat_ws silently DROPS null arguments, so without the
-        sentinels (NULL, '5', t) and ('5', NULL, t) would concat to the
-        same string and the stale-input guard could false-pass on inputs
-        differing only in which key column is null. The sentinels embed
-        the field name, so a null in one position can never collide with
-        a null (or a literal) in another."""
+        aggregate scan: row count + SUM of per-row crc32 over (conv_id,
+        turn_idx, text), in DECIMAL(38,0) as 1e12 rows x 2^32 exceeds int64.
+        Unlike XOR, a sum does not cancel a duplicated row PAIR (duplicated
+        turns are a real input class). Each field is coalesced to its own
+        NULL sentinel, as concat_ws drops nulls: (NULL, '5', t) and ('5',
+        NULL, t) would otherwise concat to the same string."""
+        fields = [
+            F.coalesce(F.col(c).cast("string"), F.lit(f"\x00nul:{c}"))
+            for c in ("conv_id", "turn_idx", "text")
+        ]
         row = transcripts.select(
             F.count("*").alias("n"),
-            F.sum(
-                F.crc32(
-                    F.concat_ws(
-                        "\x1f",
-                        F.coalesce(F.col("conv_id"), F.lit("\x00nul:conv_id")),
-                        F.coalesce(
-                            F.col("turn_idx").cast("string"),
-                            F.lit("\x00nul:turn_idx"),
-                        ),
-                        F.coalesce(F.col("text"), F.lit("\x00nul:text")),
-                    )
-                ).cast("decimal(38,0)")
-            ).alias("h"),
+            F.sum(F.crc32(F.concat_ws("\x1f", *fields)).cast("decimal(38,0)")).alias("h"),
         ).first()
         return {
             "rows": int(row["n"]),
@@ -328,23 +305,39 @@ class CheckpointedRunner:
         )
 
     def land(self, batch_df: DataFrame, batch_id: int) -> list[int]:
-        """Land one micro-batch under ``_bucket=b/_batch=<batch_id>`` and
-        return the buckets it touched, read from the directory listing. The
-        dynamic partition overwrite replaces only this batch's directories,
-        so a replayed batch lands once."""
+        """Land one batch of rows under ``_bucket=b/_batch=<batch_id>`` and
+        return the buckets it touched. The only writer of ``_input/``: the
+        batch build lands under :data:`BATCH_LANDING`, each streamed
+        micro-batch under its id, replacing an earlier landing of that id,
+        so a replayed batch lands once. Every landing is checked: a bucket
+        count other than the one recorded at the out_dir's first landing
+        raises ``ValueError``, and a write whose rows (an ``Observation`` on
+        the write itself) differ from its footers raises ``RuntimeError``."""
         path = self._input_path()
+        self._check_buckets()
+        os.makedirs(path, exist_ok=True)
+        _write_json(os.path.join(path, LAYOUT_FILE), {"num_buckets": self.num_buckets})
+        for d in self._landing_dirs(batch_id):
+            shutil.rmtree(d)
         bucket = bucket_col(F.col("conv_id"), self.num_buckets)
+        obs = Observation("landed_rows")
         (
-            batch_df.withColumns({"_bucket": bucket, "_batch": F.lit(batch_id)})
+            batch_df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .withColumns({"_bucket": bucket, "_batch": F.lit(batch_id)})
             .repartition(self.num_buckets, "_bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
+            .write.mode("append")
             .partitionBy("_bucket", "_batch")
             .parquet(path)
         )
-        pattern = os.path.join(glob.escape(path), "_bucket=*", f"_batch={batch_id}")
-        landed = glob.glob(pattern)
-        return sorted(int(os.path.dirname(d).rsplit("=", 1)[1]) for d in landed)
+        dirs = self._landing_dirs(batch_id)
+        incoming_rows = int(obs.get["rows"])
+        durable_rows = sum(self._parquet_rows(d) for d in dirs)
+        if incoming_rows != durable_rows:
+            raise RuntimeError(
+                f"landing of batch {batch_id} at {path} lost rows in flight: "
+                f"incoming {incoming_rows} vs committed {durable_rows}"
+            )
+        return sorted(int(os.path.dirname(d).rsplit("=", 1)[1]) for d in dirs)
 
     def run(
         self,

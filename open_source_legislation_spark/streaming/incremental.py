@@ -6,15 +6,17 @@ rows runs under ``Trigger.AvailableNow`` (deterministic, terminating — the
 streaming analog of "process until no pending rows", SURVEY §2.11).
 
 Streaming and the batch checkpoint build share one engine,
-:class:`CheckpointedRunner`: each micro-batch lands its rows in the
-runner's conversation buckets, and the runner re-derives every bucket the
-batch touched from all rows landed in it, overwriting that bucket's
-``triples`` and ``nodes`` partitions. So the outputs equal the batch build
-over every row landed so far, in any arrival order: a late turn, a late
-parent heading or a repeated ``(conv_id, turn_idx, ts)`` key resolves as
-it does in the batch build. A batch replayed after a crash before its
-stream commit rewrites only its own landing directories and the same
-buckets, so a replay is idempotent.
+:class:`CheckpointedRunner`: each micro-batch lands its rows through
+:meth:`CheckpointedRunner.land`, the writer and layout a batch build lands
+through, in the out_dir's recorded bucket count. The runner re-derives
+every bucket the batch touched from all rows landed in it, overwriting that
+bucket's ``triples`` and ``nodes`` partitions. So the outputs equal the
+batch build over every row landed so far, in any arrival order and after a
+batch build into the same out_dir: a late turn, a late parent heading or a
+repeated ``(conv_id, turn_idx, ts)`` key resolves as it does in the batch
+build. A batch replayed after a crash before its stream commit rewrites
+only its own landing directories and the same buckets, so a replay is
+idempotent. A batch build after a streamed commit raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -66,7 +68,8 @@ def incremental_extract(
     out_dir: str,
 ) -> None:
     """Run one AvailableNow pass: land the new transcript files of
-    ``input_dir`` and re-derive the buckets they touch into ``out_dir``."""
+    ``input_dir`` and re-derive the buckets they touch into ``out_dir``,
+    which may hold a batch build (:meth:`CheckpointedRunner.run`)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         runner = CheckpointedRunner(spark, out_dir, run_id=f"batch-{batch_id}")

@@ -30,7 +30,7 @@ def test_cc_handles_chain_and_cycle(spark):
 
 def test_cc_converges_on_deep_chains(spark):
     """Regression: pure min-label propagation moves labels one hop per
-    round, so a component whose diameter exceeds max_iterations used to
+    round, so a component whose diameter exceeds MAX_ITERATIONS used to
     return silently WRONG labels (60-chain → 34 bad). The pointer-jump
     round makes convergence logarithmic — a 200-chain must label fully."""
     edges = spark.createDataFrame(

@@ -104,8 +104,10 @@ def test_kg_pipeline_has_no_python_after_the_spill(
 def test_nodes_plan_builds_each_node_fact_once(spark, transcripts_df, entity_dict_df):
     """A node's addendum and its peeled text come from ONE aggregate over
     its content turns (``extract.node_text_agg``): no second addenda
-    aggregate, no peel join, no two-phase text aggregate. Pins the shuffle
-    exchanges and aggregate operators of the executed ``nodes`` plan."""
+    aggregate, no peel join, no two-phase text aggregate; and the
+    conversation roots come from each conversation's first turn, not a
+    distinct over ``conv_id``. Pins the shuffle exchanges and aggregate
+    operators of the executed ``nodes`` plan."""
     from collections import Counter
 
     from open_source_legislation_spark.plans.pipeline import run_pipeline
@@ -116,7 +118,7 @@ def test_nodes_plan_builds_each_node_fact_once(spark, transcripts_df, entity_dic
     finally:
         res.cleanup()
     aggregates = sum(n for k, n in kinds.items() if k.endswith("AggregateExec"))
-    assert (kinds["ShuffleExchangeExec"], aggregates) == (5, 11), kinds
+    assert (kinds["ShuffleExchangeExec"], aggregates) == (4, 9), kinds
 
 
 def test_repeated_kg_build_compiles_no_new_code(spark, transcripts_df, entity_dict_df):

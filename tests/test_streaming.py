@@ -44,19 +44,37 @@ def _same_key_other_text(t):
 
 
 @pytest.mark.parametrize(
-    "split", [_two_pass, _late_parent_heading, _same_key_other_text],
-    ids=["two_pass", "late_parent_heading", "same_key_other_text"],
+    "split, batch_first",
+    [
+        (_two_pass, False),
+        (_late_parent_heading, False),
+        (_same_key_other_text, False),
+        (_two_pass, True),
+    ],
+    ids=["two_pass", "late_parent_heading", "same_key_other_text", "batch_then_stream"],
 )
-def test_passes_equal_batch_build(spark, entity_dict_df, tmp_path_factory, split):
+def test_passes_equal_batch_build(
+    spark, entity_dict_df, tmp_path_factory, split, batch_first
+):
     """Rows split across AvailableNow passes: the streamed triples equal
     ``run_pipeline`` over all rows and the streamed nodes equal a
-    ``CheckpointedRunner`` build over them."""
+    ``CheckpointedRunner`` build over them. With ``batch_first`` the first
+    pass is a 4-bucket batch build into the same out_dir, and the stream
+    must land in its recorded bucket count, not the default 8."""
     in_dir = str(tmp_path_factory.mktemp("split_in"))
     out_dir = str(tmp_path_factory.mktemp("split_out"))
-    for rows in split(synth.make_transcripts(seed=3, n_turns_target=300)):
-        spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS).write.mode(
-            "append"
-        ).parquet(in_dir)
+    passes = [
+        spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+        for rows in split(synth.make_transcripts(seed=3, n_turns_target=300))
+    ]
+    # nodes carry their bucket: the reference build uses the same count
+    buckets = 4 if batch_first else None
+    if batch_first:
+        CheckpointedRunner(spark, out_dir, run_id="batch", num_buckets=buckets).run(
+            passes[0], entity_dict_df
+        )
+    for df in passes[1:] if batch_first else passes:
+        df.write.mode("append").parquet(in_dir)
         incremental_extract(spark, in_dir, entity_dict_df, out_dir)
 
     def same(a, b):
@@ -64,6 +82,8 @@ def test_passes_equal_batch_build(spark, entity_dict_df, tmp_path_factory, split
         assert b.exceptAll(a).count() == 0
 
     landed = spark.read.parquet(in_dir)
+    if batch_first:
+        landed = landed.unionByName(passes[0])
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
     res = run_pipeline(spark, landed, entity_dict_df)
     try:
@@ -74,10 +94,30 @@ def test_passes_equal_batch_build(spark, entity_dict_df, tmp_path_factory, split
     finally:
         res.cleanup()
     ref = CheckpointedRunner(
-        spark, str(tmp_path_factory.mktemp("split_ref")), run_id="ref"
+        spark, str(tmp_path_factory.mktemp("split_ref")), run_id="ref",
+        num_buckets=buckets,
     )
     ref.run(landed, entity_dict_df)
     same(spark.read.parquet(os.path.join(out_dir, "nodes")), ref.nodes())
+
+
+def test_batch_build_after_streamed_pass_refused(
+    spark, entity_dict_df, tmp_path_factory
+):
+    """A batch build into an out_dir whose manifest already holds a
+    stream's commits cannot tell which buckets are current: it must raise,
+    not replace the streamed landing or skip the committed buckets."""
+    in_dir = str(tmp_path_factory.mktemp("first_in"))
+    out_dir = str(tmp_path_factory.mktemp("first_out"))
+    t = spark.createDataFrame(
+        synth.make_transcripts(seed=3, n_turns_target=300),
+        schema=schemas.TRANSCRIPTS,
+    )
+    t.write.mode("overwrite").parquet(in_dir)
+    incremental_extract(spark, in_dir, entity_dict_df, out_dir)
+    runner = CheckpointedRunner(spark, out_dir, run_id="batch")
+    with pytest.raises(ValueError, match="already holds committed buckets"):
+        runner.run(t, entity_dict_df)
 
 
 def test_available_now_incremental(spark, entity_dict_df, tmp_path_factory):
