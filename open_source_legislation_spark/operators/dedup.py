@@ -9,9 +9,10 @@ value bit-for-bit.
 Scale notes (100 TB corpus):
 - exact dedup is one hash-aggregate (map-side partial agg; no skew — md5
   keys are uniform);
-- n-gram Jaccard / MinHash explode shingles: the shuffle is bounded by
-  banding (LSH) or by the shingle→pair semi-join; pairs are generated only
-  within buckets, never via cross join;
+- n-gram Jaccard / MinHash explode shingles: the pair shuffle is bounded
+  by banding (LSH) or by a prefix filter that joins only each doc's rarest
+  shingles (exact: it loses no pair); pairs are generated only within
+  buckets, never via cross join;
 - SimHash is two hash-aggregates (doc×bit partial sums, then doc);
 - embedding near-dup brute force is quadratic — kept for small dims /
   verification; the LSH/IVF path in ``similarity.py`` is the scale route.
@@ -19,7 +20,9 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from decimal import Decimal
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import _dot, _norm
@@ -46,33 +49,48 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame, n: int = 3, threshold: float = 0.8, max_doc_freq: int = 1000
+    docs: DataFrame, n: int = 3, threshold: float = 0.8
 ) -> DataFrame:
-    """Near-dup pairs by token-n-gram Jaccard ≥ threshold.
+    """Every pair of docs whose token-n-gram Jaccard, rounded to 3
+    decimals, is ≥ ``threshold``; for ``threshold`` ≤ 0 the pairs that
+    share at least one shingle.
 
-    Candidate generation via shingle co-occurrence join, with a
-    document-frequency cap: shingles appearing in more than ``max_doc_freq``
-    docs are excluded from CANDIDATE generation (a single stop-phrase shingle
-    shared by 10^6 docs would otherwise make the co-occurrence join emit
-    10^12 rows). Candidate pairs are then verified with the TRUE Jaccard over
-    the FULL shingle sets (joined through the candidate list, like the
-    MinHash path), so capping never changes a reported jaccard value — it
-    can only skip pairs whose every shared shingle is ubiquitous, which at
-    threshold ≥ 0.8 means near-dups made entirely of stop phrases.
-    Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded 3.
+    Candidates come from a prefix filter (the first level of the two-level
+    signature scheme for set similarity joins): shingles are ordered
+    globally by ``(df, shingle)`` and each doc keeps its first
+    ``|s| − ⌈t′·|s|⌉ + 1``, with ``t′ = threshold − 0.0005`` because a
+    Jaccard of ``t′`` still rounds to ``threshold``. Two sets with Jaccard
+    ≥ t′ share a shingle of those prefixes and satisfy
+    ``min(|a|,|b|) ≥ t′·max(|a|,|b|)``, so the filter loses no pair; both
+    bounds are computed in decimal, as a double ``t′·|s|`` can land one ulp
+    above an integer. The rare shingles sort first, so a shingle shared by
+    every doc reaches a prefix only in docs made of common shingles.
+    Candidates are verified with the true Jaccard over the full shingle
+    sets. Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard
+    rounded 3.
     """
+    t = F.lit(Decimal(str(threshold)) - Decimal("0.0005"))
     sh = shingles(docs, n)
     doc_freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    rare = sh.join(
-        doc_freq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle"
+    by_doc = Window.partitionBy("doc_id")
+    prefix = (
+        sh.join(doc_freq, "shingle")
+        .select(
+            "doc_id",
+            "shingle",
+            F.row_number().over(by_doc.orderBy("df", "shingle")).alias("pos"),
+            F.count("*").over(by_doc).alias("sz"),
+        )
+        .filter(F.col("pos") <= F.col("sz") - F.ceil(F.col("sz") * t) + 1)
     )
-    a = rare.alias("a")
-    b = rare.alias("b")
+    a = prefix.alias("a")
+    b = prefix.alias("b")
     cands = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.least("a.sz", "b.sz") >= F.greatest("a.sz", "b.sz") * t),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()

@@ -34,6 +34,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -227,13 +228,13 @@ class CheckpointedRunner:
                 f"of them are current; stream the new rows through "
                 f"incremental_extract, or clear the out_dir"
             )
-        self.land(transcripts, BATCH_LANDING)
-        # fingerprint the COMMITTED parquet, not a second evaluation of the
-        # incoming plan
-        landed = self.spark.read.schema(transcripts.schema).parquet(
-            *self._landing_dirs(BATCH_LANDING)
-        )
-        _write_json(meta_path, self._input_fingerprint(landed))
+        if self.land(transcripts, BATCH_LANDING):
+            # fingerprint the COMMITTED parquet, not a second evaluation of
+            # the incoming plan; an empty landing has no parquet to read
+            transcripts = self.spark.read.schema(transcripts.schema).parquet(
+                *self._landing_dirs(BATCH_LANDING)
+            )
+        _write_json(meta_path, self._input_fingerprint(transcripts))
 
     @staticmethod
     def _input_fingerprint(transcripts: DataFrame) -> dict:
@@ -306,13 +307,14 @@ class CheckpointedRunner:
 
     def land(self, batch_df: DataFrame, batch_id: int) -> list[int]:
         """Land one batch of rows under ``_bucket=b/_batch=<batch_id>`` and
-        return the buckets it touched. The only writer of ``_input/``: the
-        batch build lands under :data:`BATCH_LANDING`, each streamed
-        micro-batch under its id, replacing an earlier landing of that id,
-        so a replayed batch lands once. Every landing is checked: a bucket
-        count other than the one recorded at the out_dir's first landing
-        raises ``ValueError``, and a write whose rows (an ``Observation`` on
-        the write itself) differ from its footers raises ``RuntimeError``."""
+        return the buckets it touched, none for an empty batch. The only
+        writer of ``_input/``: the batch build lands under
+        :data:`BATCH_LANDING`, each streamed micro-batch under its id,
+        replacing an earlier landing of that id, so a replayed batch lands
+        once. Every landing is checked: a bucket count other than the one
+        recorded at the out_dir's first landing raises ``ValueError``, and a
+        write whose rows (an ``Observation`` on the write itself) differ
+        from its footers raises ``RuntimeError``."""
         path = self._input_path()
         self._check_buckets()
         os.makedirs(path, exist_ok=True)
@@ -330,7 +332,14 @@ class CheckpointedRunner:
             .parquet(path)
         )
         dirs = self._landing_dirs(batch_id)
-        incoming_rows = int(obs.get["rows"])
+        try:
+            incoming_rows = int(obs.get["rows"])
+        except Py4JJavaError:
+            # over empty input Spark may run no task of the observed plan
+            # and deliver no metric row; such a write lands no dir
+            if dirs:
+                raise
+            incoming_rows = 0
         durable_rows = sum(self._parquet_rows(d) for d in dirs)
         if incoming_rows != durable_rows:
             raise RuntimeError(

@@ -21,6 +21,7 @@ from .operators import (
     canonicalize,
     dedup,
     defscope,
+    extract,
     linking,
     multimodal,
     sampling,
@@ -1802,14 +1803,9 @@ def q_prj_citation_node(spark, sf_dir):
         F.col("l_linenumber").cast("string"),
         F.when(F.col("l_linenumber") % 2 == 0, F.lit("-v_2")).otherwise(F.lit("")),
     )
-    title = F.regexp_extract(node_id, r"/title=([0-9]+(?:\.[0-9]+)?[A-Za-z]?)", 1)
-    sec = F.regexp_extract(node_id, r"/section=([0-9]+(?:\.[0-9]+)?[A-Za-z]?)", 1)
-    citation = F.concat_ws(
-        ", ",
-        F.when(title != "", F.concat(F.lit("Tit. "), title)),
-        F.when(sec != "", F.concat(F.lit("§ "), sec)),
-    )
-    return li.select(node_id.alias("node_id"), citation.alias("citation")).distinct()
+    return li.select(
+        node_id.alias("node_id"), extract.citation_expr(node_id).alias("citation")
+    ).distinct()
 
 
 def q_join_defs_closure(spark, sf_dir):
@@ -2011,8 +2007,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # DuckDB oracle SQL (same column names; doubles rounded identically)
 # ---------------------------------------------------------------------------
 
-# mirrors ngram_jaccard_pairs exactly: candidates from df-capped shingles,
-# TRUE jaccard verified over the full shingle sets of candidate pairs
+# the definition of ngram_jaccard_pairs: the rounded shingle Jaccard of
+# every pair that shares a shingle (a pair sharing none has Jaccard 0);
+# _minhash_sql verifies its LSH candidates against the same jac
 _JACCARD_CTE = """
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS w FROM documents
@@ -2024,19 +2021,9 @@ WITH toks AS (
   FROM toks
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), df AS (
-  SELECT shingle, count(*) AS dfc FROM sh GROUP BY shingle
-), rare AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN df USING (shingle)
-  WHERE dfc <= 1000
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
 ), inter AS (
-  SELECT doc_a, doc_b, count(*) AS inter
-  FROM cand
-  JOIN sh sa ON sa.doc_id = cand.doc_a
-  JOIN sh sb ON sb.doc_id = cand.doc_b AND sb.shingle = sa.shingle
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ), jac AS (
   SELECT doc_a, doc_b,
@@ -2212,28 +2199,7 @@ def _minhash_sql(num_perm: int = 16, bands: int = 4, threshold: float = 0.5) -> 
         )
         for bi in range(bands)
     )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(list_filter(
-    [array_to_string(w[i:i+2], ' ') FOR i IN range(1, greatest(len(w)-1, 2))],
-    s -> length(s) > 0
-  ))) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), jac AS (
-  SELECT doc_a, doc_b,
-         round(inter * 1.0 / (sa.sz + sb.sz - inter), 3) AS jaccard
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-), hashed AS (
+    return _JACCARD_CTE + f""", hashed AS (
   SELECT doc_id, CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT) AS h FROM sh
 ), sig AS (
   SELECT doc_id, {mins} FROM hashed GROUP BY doc_id

@@ -147,3 +147,33 @@ def test_fingerprint_distinguishes_null_text_from_empty(spark):
     fb = CheckpointedRunner._input_fingerprint(b)
     assert fa["rows"] == fb["rows"] == 1
     assert fa["sum_crc32"] != fb["sum_crc32"]
+
+
+def test_empty_input_commits_empty_buckets(spark, entity_dict_df, tmp_path_factory):
+    """An empty landing lands nothing, and an empty batch build commits
+    every bucket as an empty success, from a local relation and from a
+    parquet scan alike."""
+    import json
+
+    from open_source_legislation_spark import schemas
+
+    empty = spark.createDataFrame([], schema=schemas.TRANSCRIPTS)
+    scanned = str(tmp_path_factory.mktemp("ckpt_empty_src"))
+    empty.write.mode("overwrite").parquet(scanned)
+    for source in (empty, spark.read.schema(schemas.TRANSCRIPTS).parquet(scanned)):
+        landing = CheckpointedRunner(
+            spark, str(tmp_path_factory.mktemp("ckpt_empty_land")), "l", num_buckets=4
+        )
+        assert landing.land(source, 0) == []
+
+        runner = CheckpointedRunner(
+            spark, str(tmp_path_factory.mktemp("ckpt_empty")), "e", num_buckets=4
+        )
+        assert runner.run(source, entity_dict_df) == 4
+        with open(runner._manifest_path()) as fh:
+            rows = [json.loads(line) for line in fh]
+        assert sorted(r["partition_id"] for r in rows) == [0, 1, 2, 3]
+        assert {(r["status"], r["rows_in"], r["rows_out"]) for r in rows} == {
+            ("success", 0, 0)
+        }
+        assert runner.run(source, entity_dict_df) == 0

@@ -3,14 +3,18 @@
 1. The exact embedding near-dup operator must not put a row-level
    CartesianProduct in the plan (blocked matmul replaces the crossJoin) and
    must return exactly the brute-force result.
-2. The n-gram Jaccard candidate join must bound candidate counts under a
-   ubiquitous shingle (document-frequency cap), while true Jaccard values
-   for surviving pairs stay exact.
+2. The n-gram Jaccard prefix filter must lose no pair: not one made of a
+   shingle every doc shares, not one whose Jaccard only rounds up to the
+   threshold, and none that brute force over all pairs finds.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,32 +61,70 @@ def test_blocked_plan_has_no_row_cartesian(emb_df):
     assert "CartesianProduct" not in plan
 
 
-def test_ngram_cap_bounds_candidates(spark):
-    # 30 docs sharing one ubiquitous trigram + one unique trigram each:
-    # without the df cap, the ubiquitous shingle alone creates C(30,2)=435
-    # candidate pairs; with cap < 30 it creates none.
+def _brute_force_jaccard(docs, threshold):
+    """All pairs over ``dedup.shingles``, as in the definition; rounded
+    half-up from the double's decimal form, as Spark's ``round`` does."""
+    sets: dict[int, set[str]] = {}
+    for r in dedup.shingles(docs, 3).collect():
+        sets.setdefault(r.doc_id, set()).add(r.shingle)
+    out = set()
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            if a < b and sa & sb:
+                j = Decimal(repr(len(sa & sb) / len(sa | sb)))
+                j = float(j.quantize(Decimal("0.001"), ROUND_HALF_UP))
+                if j >= threshold:
+                    out.add((a, b, j))
+    return out
+
+
+def _pairs(df):
+    return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
+
+
+def test_ngram_finds_pairs_made_of_a_ubiquitous_shingle(spark):
+    # 1002 docs share one trigram (df > 1000); docs 0 and 1 consist only
+    # of it, so their Jaccard is 1.0
     docs = spark.createDataFrame(
-        [
-            (i, f"common stop phrase unique{i} token{i} tail{i}")
-            for i in range(30)
-        ],
+        [(0, "common stop phrase"), (1, "common stop phrase")]
+        + [(i, f"common stop phrase unique{i} token{i} tail{i}") for i in range(2, 1002)],
         schema="doc_id long, text string",
     )
-    capped = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.0, max_doc_freq=10)
-    uncapped = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.0, max_doc_freq=10**6)
-    assert uncapped.count() == 435  # every pair shares 'common stop phrase'
-    assert capped.count() == 0
+    assert _pairs(dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8)) == {(0, 1, 1.0)}
 
-    # surviving pairs keep EXACT jaccard: duplicate docs (identical text,
-    # rare shingles) must still be found with jaccard 1.0 under the cap
     docs2 = spark.createDataFrame(
         [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta"), (2, "x y z w")],
         schema="doc_id long, text string",
     )
-    out = dedup.ngram_jaccard_pairs(docs2, n=3, threshold=0.8, max_doc_freq=10).collect()
-    assert [(r.doc_a, r.doc_b, r.cos if hasattr(r, "cos") else r.jaccard) for r in out] == [
-        (0, 1, 1.0)
-    ]
+    out = dedup.ngram_jaccard_pairs(docs2, n=3, threshold=0.8).collect()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in out] == [(0, 1, 1.0)]
+
+
+def test_ngram_keeps_a_pair_that_rounds_up_to_the_threshold(spark):
+    # doc 1 holds 1599 of doc 0's 2000 trigrams: Jaccard 0.7995 rounds to
+    # 0.8; in doubles ceil(0.7995 * 2000) is 1600, a prefix one too short
+    words = [f"w{i}" for i in range(2002)]
+    docs = spark.createDataFrame(
+        [(0, " ".join(words)), (1, " ".join(words[:1601]))],
+        schema="doc_id long, text string",
+    )
+    assert _pairs(dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8)) == {(0, 1, 0.8)}
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from("abcde"), min_size=3, max_size=9), min_size=2, max_size=8
+    ),
+    threshold=st.sampled_from([0.5, 0.8]),
+)
+def test_ngram_equals_brute_force(spark, texts, threshold):
+    docs = spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in enumerate(texts)], schema="doc_id long, text string"
+    )
+    assert _pairs(
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=threshold)
+    ) == _brute_force_jaccard(docs, threshold)
 
 
 def test_ann_lsh_pairs_subset_of_exact(emb_df):
