@@ -65,12 +65,13 @@ def ngram_jaccard_pairs(
     bounds are computed in decimal, as a double ``t′·|s|`` can land one ulp
     above an integer. The rare shingles sort first, so a shingle shared by
     every doc reaches a prefix only in docs made of common shingles.
-    Candidates are verified with the true Jaccard over the full shingle
-    sets. Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard
-    rounded 3.
+    The prefix window's ``count`` is each doc's set size, carried on the
+    candidates to the verifier; every branch reuses one shingle exchange by
+    ``doc_id``. Output: (doc_a, doc_b, jaccard), doc_a < doc_b, rounded 3.
     """
     t = F.lit(Decimal(str(threshold)) - Decimal("0.0005"))
-    sh = shingles(docs, n)
+    # the joins infer this filter; stating it lets the df branch share their exchange
+    sh = shingles(docs.filter(F.col("doc_id").isNotNull()), n).repartition("doc_id")
     doc_freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     by_doc = Window.partitionBy("doc_id")
     prefix = (
@@ -92,41 +93,29 @@ def ngram_jaccard_pairs(
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.least("a.sz", "b.sz") >= F.greatest("a.sz", "b.sz") * t),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
+        )
         .distinct()
     )
     return _verified_jaccard(cands, sh, threshold)
 
 
 def _verified_jaccard(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """True shingle Jaccard of each candidate pair ``(doc_a, doc_b)``, over
-    the full shingle sets ``sh`` joined through the candidate list (never
-    the all-pairs co-occurrence join). Output: (doc_a, doc_b, jaccard) with
-    jaccard rounded 3 and ≥ threshold."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    """True shingle Jaccard of each sized candidate ``(doc_a, doc_b, sz_a,
+    sz_b)``, counting only the intersection, over ``sh`` joined through the
+    candidate list (never the all-pairs co-occurrence join). Output:
+    (doc_a, doc_b, jaccard) with jaccard rounded 3 and ≥ threshold."""
     a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b_sh = sh.select(
-        F.col("doc_id").alias("_doc_b2"), F.col("shingle").alias("shingle_b")
-    )
-    inter = (
-        cands.join(a_sh, "doc_a")
-        .join(
-            b_sh,
-            (F.col("doc_b") == F.col("_doc_b2"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    b_sh = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     return (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"),
-            "doc_b",
-        )
+        cands.join(a_sh, "doc_a")
+        .join(b_sh, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
+        .agg(F.count("*").alias("inter"))
         .withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 3),
@@ -147,16 +136,17 @@ def _mh_params(num_perm: int) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(sh: DataFrame, num_perm: int = 16) -> DataFrame:
-    """(doc_id, sig: array<bigint>[num_perm]) MinHash signatures of the
-    ``(doc_id, shingle)`` frame ``sh``."""
+    """(doc_id, sig: array<bigint>[num_perm], sz) MinHash signatures of the
+    ``(doc_id, shingle)`` frame ``sh``; ``sz``, the doc's shingle count, is
+    counted in the same ``groupBy(doc_id)`` as the ``min``s."""
     sh = sh.withColumn("h", _h64(F.col("shingle")))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_P)).alias(f"mh{i}")
         for i, (a, b) in enumerate(_mh_params(num_perm))
     ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
+    sig = sh.groupBy("doc_id").agg(*aggs, F.count("*").alias("sz"))
     return sig.select(
-        "doc_id", F.array(*[f"mh{i}" for i in range(num_perm)]).alias("sig")
+        "doc_id", F.array(*[f"mh{i}" for i in range(num_perm)]).alias("sig"), "sz"
     )
 
 
@@ -177,10 +167,11 @@ def minhash_lsh_pairs(
     #docs × #bands, never quadratic. Output: (doc_a, doc_b, jaccard).
     """
     rows_per_band = num_perm // bands
-    sh = shingles(docs, n)
+    sh = shingles(docs, n).repartition("doc_id")
     sig = minhash_signatures(sh, num_perm)
     banded = sig.select(
         "doc_id",
+        "sz",
         F.explode(
             F.array(
                 *[
@@ -198,7 +189,7 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ).select("doc_id", "sz", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     l, r = banded.alias("l"), banded.alias("r")
     cands = (
         l.join(
@@ -207,7 +198,12 @@ def minhash_lsh_pairs(
             & (F.col("l.bucket") == F.col("r.bucket"))
             & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .select(
+            F.col("l.doc_id").alias("doc_a"),
+            F.col("r.doc_id").alias("doc_b"),
+            F.col("l.sz").alias("sz_a"),
+            F.col("r.sz").alias("sz_b"),
+        )
         .distinct()
     )
     return _verified_jaccard(cands, sh, threshold)

@@ -1559,9 +1559,9 @@ def q_src_fetch_retry(spark, sf_dir):
     over fixture files carrying each document's exact text, with the
     ``doc_id % 3 == 0`` slice deliberately absent. Fetch runs through the
     same urllib path as https; present files yield ``(ok, 1 attempt,
-    content)``, missing ones exhaust the retry budget and are TAGGED
-    ``(failed, max_retries+1, NULL)`` — one output row per input row,
-    never a drop. ``backoff_s=0`` pins determinism (and wall time)."""
+    content)``, missing ones are a permanent failure, TAGGED ``(failed,
+    1, NULL)`` without a retry — one output row per input row, never a
+    drop. ``backoff_s=0`` pins determinism (and wall time)."""
     from .sources.fetch import fetch_with_retry
 
     d = ensure_fetch_fixture(sf_dir)
@@ -1760,32 +1760,37 @@ def q_snk_upsert_merge(spark, sf_dir):
 
 
 def q_agg_node_text(spark, sf_dir):
-    """Per-node document-text aggregate (reference NodeText.to_list_text,
-    pydanticModels.py:290-296; pipeline op extract.node_text_agg): a running
-    scope id (last marker row — signup events — via last(ignorenulls)) then
-    an ordered per-scope concat of the content rows. One window + one
-    aggregate sharing the user_id partitioning: a single exchange."""
+    """Per-node document text from the pipeline op ``extract.node_text_agg``
+    (reference NodeText.to_list_text, pydanticModels.py:290-296), with
+    ``events`` mapped onto its derived-turn columns: a user's events in
+    ``(ts, event_id)`` order are one conversation, a signup is a node row
+    (``node_id`` set) that opens the scope ``<user_id>/<event_id>`` (events
+    before a user's first signup fall under ``<user_id>/-1``), every other
+    event is a content turn, and an error event reads as a ``Note:`` trailer,
+    so the last one under a node is peeled off as its addendum."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     scope = F.last(
         F.when(F.col("event_type") == "signup", F.col("event_id")), ignorenulls=True
     ).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    scoped = e.withColumn("scope", F.coalesce(scope, F.lit(-1)))
-    return (
-        scoped.filter(F.col("event_type") != "signup")
-        .groupBy("user_id", "scope")
-        .agg(
-            F.concat_ws(
-                "|",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("ts", "event_id", "event_type"))
-                    ),
-                    lambda s: s["event_type"],
-                ),
-            ).alias("node_text"),
-            F.count("*").alias("n_turns"),
+    node = F.concat_ws(
+        "/", F.col("user_id").cast("string"), F.coalesce(scope, F.lit(-1)).cast("string")
+    )
+    derived = e.select(
+        node.alias("current_node"),
+        F.when(F.col("event_type") == "signup", node).alias("node_id"),
+        F.row_number().over(w).alias("ord"),
+        F.when(
+            F.col("event_type") == "error",
+            F.concat(F.lit("Note: error "), F.col("event_id").cast("string")),
         )
+        .otherwise(F.col("event_type"))
+        .alias("clean_text"),
+        F.col("user_id").alias("conv_id"),
+        F.col("event_id").alias("turn_idx"),
+    )
+    return extract.node_text_agg(derived).select(
+        "node_id", "node_addendum", "node_text", "n_paragraphs"
     )
 
 
@@ -2082,8 +2087,8 @@ def _fetch_oracle_sql(sf_dir: str) -> str:
     a pure function of the documents table and the fixture rule — present
     files (written by ``ensure_fetch_fixture`` with the document's exact
     UTF-8 text) fetch ok on the first attempt with that text as content;
-    the deliberately-missing ``doc_id % 3 == 0`` slice exhausts the retry
-    budget (3 retries → 4 attempts) and lands tagged with NULL content.
+    the deliberately-missing ``doc_id % 3 == 0`` slice is a permanent
+    failure, tagged after its first attempt with NULL content.
     Asserting content from the PARQUET (not by re-reading the files)
     makes this a genuine cross-check of the urllib read path: a fixture
     writer bug would surface as a Spark-vs-oracle content mismatch."""
@@ -2091,8 +2096,7 @@ def _fetch_oracle_sql(sf_dir: str) -> str:
     return f"""
         SELECT 'file://{d}/doc_' || CAST(doc_id AS VARCHAR) || '.txt' AS url,
                CASE WHEN doc_id % 3 = 0 THEN 'failed' ELSE 'ok' END AS status,
-               CAST(CASE WHEN doc_id % 3 = 0 THEN 4 ELSE 1 END AS INTEGER)
-                 AS attempts,
+               CAST(1 AS INTEGER) AS attempts,
                CASE WHEN doc_id % 3 = 0 THEN NULL ELSE text END AS content
         FROM documents
         WHERE text IS NOT NULL AND doc_id % 20 < 5
@@ -3382,20 +3386,35 @@ ORACLE_SQL: dict[str, str] = {
         FROM merged GROUP BY seg
     """,
     "agg_node_text": """
-        WITH scoped AS (
-          SELECT user_id, ts, event_id, event_type,
-                 coalesce(last_value(CASE WHEN event_type = 'signup'
-                                          THEN event_id END IGNORE NULLS)
-                          OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                          -1) AS scope
+        -- extract.node_text_agg over events as derived turns: the last
+        -- addendum-pattern turn of a node is its addendum and leaves the
+        -- '\\n'-joined text; all text columns are NULL when nothing is left
+        WITH turns AS (
+          SELECT event_type,
+                 CAST(user_id AS VARCHAR) || '/' || CAST(coalesce(
+                   last_value(CASE WHEN event_type = 'signup' THEN event_id END
+                              IGNORE NULLS) OVER w, -1) AS VARCHAR) AS node_id,
+                 row_number() OVER w AS ord,
+                 CASE WHEN event_type = 'error'
+                      THEN 'Note: error ' || CAST(event_id AS VARCHAR)
+                      ELSE event_type END AS clean_text
           FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        ), content AS (
+          SELECT node_id, ord, clean_text,
+                 max(CASE WHEN regexp_matches(
+                            clean_text, '^(?:Source|History|Authority|Note)\\s*:')
+                          THEN ord END) OVER (PARTITION BY node_id) AS a_ord
+          FROM turns WHERE event_type IS DISTINCT FROM 'signup'
         )
-        SELECT user_id, scope,
-               string_agg(event_type, '|' ORDER BY ts, event_id) AS node_text,
-               count(*) AS n_turns
-        FROM scoped WHERE event_type != 'signup'
-        GROUP BY user_id, scope
+        SELECT node_id,
+               max(CASE WHEN ord = a_ord THEN clean_text END) AS node_addendum,
+               string_agg(clean_text, chr(10) ORDER BY ord)
+                 FILTER (WHERE ord IS DISTINCT FROM a_ord) AS node_text,
+               nullif(count(*) FILTER (WHERE ord IS DISTINCT FROM a_ord), 0)
+                 AS n_paragraphs
+        FROM content GROUP BY node_id
     """,
     "prj_citation_node": """
         SELECT DISTINCT

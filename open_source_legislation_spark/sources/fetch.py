@@ -14,7 +14,9 @@ same tag-don't-retry policy). The Spark-native re-expression:
 - the output keeps ONE row per input row: ``status='ok'`` with content,
   ``status='truncated'`` with the first ``max_bytes`` of a longer body,
   or ``status='failed'`` with the error string and the attempt count —
-  misses and cut bodies become metrics, never silent drops;
+  misses and cut bodies become metrics, never silent drops; a failure no
+  retry can mend (an HTTP 4xx other than 408 and 429, a missing
+  ``file://`` file) is tagged at once, after one attempt;
 - deterministic: given the same URL set and filesystem state, the output
   is identical (ordering is carried by the input row, not arrival time).
 
@@ -26,6 +28,8 @@ operator and are out of scope here, as in the reference.
 """
 
 from __future__ import annotations
+
+import urllib.error
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -41,6 +45,17 @@ FETCH_RESULT = T.StructType(
 )
 
 
+def _permanent(e: Exception) -> bool:
+    """True for a failure that no retry can mend: an HTTP 4xx other than
+    408 (request timeout) and 429 (too many requests), or a ``file://``
+    URL whose file is missing."""
+    if isinstance(e, urllib.error.HTTPError):
+        return 400 <= e.code < 500 and e.code not in (408, 429)
+    return isinstance(e, urllib.error.URLError) and isinstance(
+        e.reason, FileNotFoundError
+    )
+
+
 def fetch_with_retry(
     refs: DataFrame,
     url_col: str = "url",
@@ -52,9 +67,11 @@ def fetch_with_retry(
     """Fetch every URL in ``refs[url_col]``; never raises on a bad URL.
 
     ``max_retries`` counts retries AFTER the first attempt (the reference's
-    ``retries=3`` budget); backoff doubles per retry. Content is decoded
-    UTF-8 (errors replaced) and capped at ``max_bytes``; a longer body
-    keeps its first ``max_bytes`` and is tagged ``status='truncated'``.
+    ``retries=3`` budget); backoff doubles per retry. A permanent failure
+    (:func:`_permanent`) is not retried: it is tagged ``failed`` with
+    ``attempts = 1``. Content is decoded UTF-8 (errors replaced) and capped
+    at ``max_bytes``; a longer body keeps its first ``max_bytes`` and is
+    tagged ``status='truncated'``.
     """
 
     def gen(batches):
@@ -81,7 +98,7 @@ def fetch_with_retry(
                         break
                     except Exception as e:  # noqa: BLE001 — tag, don't crash
                         error = f"{type(e).__name__}: {e}"
-                        if attempts > max_retries:
+                        if attempts > max_retries or _permanent(e):
                             break
                         time.sleep(backoff_s * (2 ** (attempts - 1)))
                 rows.append(

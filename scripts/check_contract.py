@@ -79,10 +79,11 @@ def frame_summary(cols, rows):
     return sorted_cols, len(rows), h, lines
 
 
-def plan_facts(sdf) -> tuple[int, int]:
-    """(Exchange, Python) node counts of an executed plan, read through the
-    adaptive plan and its query stages; a reused exchange is not counted."""
-    exchanges = python = 0
+def plan_facts(sdf) -> tuple[int, int, int]:
+    """(Exchange, Generate, Python) node counts of an executed plan, read
+    through the adaptive plan and its query stages; a reused exchange is
+    not counted."""
+    exchanges = generates = python = 0
     stack = [sdf._jdf.queryExecution().executedPlan()]
     while stack:
         p = stack.pop()
@@ -91,12 +92,13 @@ def plan_facts(sdf) -> tuple[int, int]:
         elif p.nodeName().endswith("QueryStage"):
             stack.append(p.plan())
         exchanges += p.nodeName() in ("Exchange", "BroadcastExchange")
+        generates += p.nodeName() == "Generate"
         # every node that crosses into a Python worker lives in one package
         cls = p.getClass().getName()
         python += cls.startswith("org.apache.spark.sql.execution.python.")
         kids = p.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return exchanges, python
+    return exchanges, generates, python
 
 
 def compilations(spark) -> int:
@@ -134,10 +136,10 @@ def main(sf_dir: str, only: list[str]) -> int:
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
             wall, compiles = time.perf_counter() - t0, compilations(spark) - c0
-            exchanges, python = plan_facts(sdf)
+            exchanges, generates, python = plan_facts(sdf)
             facts = (
-                f"{wall:.2f} s, {exchanges} exchanges, {python} python nodes, "
-                f"{compiles} compiles"
+                f"{wall:.2f} s, {exchanges} exchanges, {generates} generates, "
+                f"{python} python nodes, {compiles} compiles"
             )
         except Exception as e:  # noqa: BLE001
             print(f"[SPARK-ERR] {name}: {type(e).__name__}: {str(e)[:300]}")

@@ -1,12 +1,15 @@
 """Acquisition retry-fetch source (reference make_request_with_retries,
 scrapingHelpers.py:118-164): bounded retries, failure tagging, one output
-row per input row — exercised over file:// URLs (no network in sandbox;
-urllib serves file:// through the same code path as https://)."""
+row per input row — exercised over file:// URLs and a localhost HTTP
+server (urllib serves both through the same code path as https://)."""
 
 from __future__ import annotations
 
 import errno
+import http.server
 import os
+import threading
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -21,28 +24,63 @@ def _urls_df(spark, urls):
     return spark.createDataFrame([(u,) for u in urls], "url string")
 
 
-def test_fetch_ok_and_failed_tagged(spark, tmp_path):
+@pytest.fixture
+def http_server():
+    """A localhost HTTP server: path ``/<code>/<n>/<body>`` answers HTTP
+    ``code`` to its first ``n`` requests and 200 with ``body`` after.
+    Yields the base URL and the request count per path."""
+    hits = Counter()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            hits[self.path] += 1
+            _, code, n, body = self.path.split("/")
+            if hits[self.path] <= int(n):
+                self.send_error(int(code))
+                return
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body.encode())
+
+        def log_message(self, *args):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_port}", hits
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_fetch_ok_and_failed_tagged(spark, tmp_path, http_server):
     p1 = tmp_path / "a.html"
     p1.write_text("<html><body>doc A</body></html>")
     p2 = tmp_path / "b.html"
     p2.write_text("<html><body>doc B</body></html>")
     missing = tmp_path / "nope.html"
-    urls = [p1.as_uri(), missing.as_uri(), p2.as_uri()]
+    base, hits = http_server
+    gone = {code: f"{base}/{code}/9/x" for code in (403, 404)}
+    urls = [p1.as_uri(), missing.as_uri(), p2.as_uri(), *gone.values()]
     out = {
         r.url: r
         for r in fetch.fetch_with_retry(
             _urls_df(spark, urls), max_retries=2, backoff_s=0.001
         ).collect()
     }
-    assert len(out) == 3  # one row per input, misses included
+    assert len(out) == 5  # one row per input, misses included
     assert out[p1.as_uri()].status == "ok"
     assert "doc A" in out[p1.as_uri()].content
     assert out[p1.as_uri()].attempts == 1
     bad = out[missing.as_uri()]
     assert bad.status == "failed"
     assert bad.content is None
-    assert bad.attempts == 3  # 1 try + 2 retries, then tagged
-    assert "Error" in bad.error or "error" in bad.error
+    assert bad.attempts == 1  # a missing file is permanent: no retry
+    assert "No such file" in bad.error
+    # so is an HTTP 4xx other than 408 and 429
+    for url in gone.values():
+        got = (out[url].status, out[url].attempts, hits[url[len(base) :]])
+        assert got == ("failed", 1, 1)
 
 
 def test_fetch_over_max_bytes_is_tagged_truncated(spark, tmp_path):
@@ -65,31 +103,20 @@ def test_fetch_over_max_bytes_is_tagged_truncated(spark, tmp_path):
     assert (whole.status, whole.content) == ("ok", "01234")
 
 
-def test_fetch_retry_succeeds_after_transient_failure(spark, tmp_path):
-    """A file that appears between attempts: the retry loop must pick it up
-    (the reference's whole reason for backoff)."""
-    import threading
-    import time
-
-    target = tmp_path / "late.html"
-
-    def create_late():
-        time.sleep(0.3)
-        target.write_text("<html>late but fine</html>")
-
-    t = threading.Thread(target=create_late)
-    t.start()
+def test_fetch_retry_succeeds_after_transient_failure(spark, http_server):
+    """A server that answers an error twice, then the page: the retry loop
+    must pick it up (the reference's whole reason for backoff) for a 5xx and
+    for the two retryable 4xx, 408 (request timeout) and 429 (too many
+    requests)."""
+    base, hits = http_server
+    urls = [f"{base}/{code}/2/late-but-fine" for code in (408, 429, 500, 503)]
     out = fetch.fetch_with_retry(
-        _urls_df(spark, [target.as_uri()]), max_retries=10, backoff_s=0.05
-    ).collect()[0]
-    t.join()
-    # NOT asserting attempts > 1: on a loaded host Spark's job startup can
-    # exceed the creation delay, making the first attempt succeed — the
-    # bounded-attempt accounting is pinned deterministically by
-    # test_fetch_ok_and_failed_tagged instead
-    assert out.status == "ok"
-    assert out.attempts >= 1
-    assert "late but fine" in out.content
+        _urls_df(spark, urls), max_retries=3, backoff_s=0.001
+    ).collect()
+    assert sorted((r.url, r.status, r.attempts, r.content) for r in out) == [
+        (url, "ok", 3, "late-but-fine") for url in urls
+    ]
+    assert [hits[url[len(base) :]] for url in urls] == [3, 3, 3, 3]
 
 
 def test_fetch_feeds_the_parse_layer(spark, tmp_path):

@@ -148,3 +148,31 @@ def test_repeated_kg_build_compiles_no_new_code(spark, transcripts_df, entity_di
 
     build()
     assert build() == 0
+
+
+def test_dedup_shingles_once_and_counts_each_set_once(spark):
+    """Each dedup query explodes its shingles under one exchange by
+    ``doc_id`` that its branches reuse, and counts a doc's set where it
+    already groups the shingles (the prefix window, the MinHash signature
+    aggregate): the verifier holds no size aggregate. Pins the ``Generate``
+    and ``HashAggregate`` nodes of the executed plans of
+    ``ngram_jaccard_pairs`` and ``minhash_lsh_pairs``."""
+    from collections import Counter
+
+    from open_source_legislation_spark.operators import dedup
+
+    words = "the a key agg row scan slow fast table value part hash merge".split()
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[i % 7 :] + words[: i % 7] * (i % 3))) for i in range(60)],
+        schema="doc_id long, text string",
+    )
+    counts = {}
+    for name, df in (
+        ("ngram", dedup.ngram_jaccard_pairs(docs)),
+        ("minhash", dedup.minhash_lsh_pairs(docs)),
+    ):
+        kinds = Counter(p.getClass().getSimpleName() for p in _executed_nodes(df))
+        counts[name] = (kinds["GenerateExec"], kinds["HashAggregateExec"])
+    # with a shingle explode per branch and a size aggregate in the
+    # verifier the plans held (5, 8) and (6, 9)
+    assert counts == {"ngram": (1, 6), "minhash": (3, 8)}, counts
