@@ -190,6 +190,9 @@ def minhash_lsh_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "sz", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    # one exchange on the join keys that both sides of the self-join reuse,
+    # so the signatures and the band explode run once
+    banded = banded.repartition("band", "bucket")
     l, r = banded.alias("l"), banded.alias("r")
     cands = (
         l.join(

@@ -114,7 +114,8 @@ def incoming_references(edges: DataFrame) -> DataFrame:
 
 
 def orphan_nodes(nodes: DataFrame) -> DataFrame:
-    """Nodes whose parent id does not exist — the left-anti orphan check."""
+    """Nodes whose parent id does not exist — the left-anti orphan check,
+    contract-checked as ``join_orphan_anti``."""
     ids = nodes.select(F.col("node_id").alias("_pid"))
     return (
         nodes.filter(F.col("parent").isNotNull())
@@ -130,6 +131,8 @@ def null_parent_violations(nodes: DataFrame) -> DataFrame:
 
 
 def counts_by_level(nodes: DataFrame) -> DataFrame:
+    """Node count per ``level_classifier`` (reference CLAUDE.md:438), sorted
+    by classifier — contract-checked as ``agg_count_by_level``."""
     return nodes.groupBy("level_classifier").agg(F.count("*").alias("n")).orderBy(
         "level_classifier"
     )

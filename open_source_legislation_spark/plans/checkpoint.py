@@ -268,42 +268,48 @@ class CheckpointedRunner:
         # properties only isolate per-bucket when PySpark pinned-thread mode
         # is active — without it the property bleeds across Python threads
         # and buckets land in arbitrary pools (scheduling-only; results are
-        # unaffected). Skip the property rather than mis-scope it.
-        if os.environ.get("PYSPARK_PIN_THREAD", "true").lower() != "false":
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"bucket-{b}"
-            )
-        part_path = os.path.join(self._input_path(), f"_bucket={b}")
-        if not os.path.exists(part_path):
-            # hash bucket with no conversations: commit an empty success
-            # row so resume skips it
+        # unaffected). Skip the property rather than mis-scope it, and give
+        # the caller its own pool back after the bucket.
+        sc = self.spark.sparkContext
+        caller_pool = sc.getLocalProperty("spark.scheduler.pool")
+        pin = os.environ.get("PYSPARK_PIN_THREAD", "true").lower() != "false"
+        if pin:
+            sc.setLocalProperty("spark.scheduler.pool", f"bucket-{b}")
+        try:
+            part_path = os.path.join(self._input_path(), f"_bucket={b}")
+            if not os.path.exists(part_path):
+                # hash bucket with no conversations: commit an empty success
+                # row so resume skips it
+                return BucketStats(
+                    partition_id=b, rows_in=0, rows_out=0, mentions=0,
+                    mentions_linked=0, wall_ms=(time.time() - t0) * 1000.0,
+                )
+            # directory-level pruning: only this bucket's files are ever opened
+            # (the analog of Iceberg partition pruning on bucket(B, conv_id))
+            part = self.spark.read.parquet(part_path)
+            rows_in = self._parquet_rows(part_path)
+            res = run_pipeline(self.spark, part, entity_dict)
+            tri_path = os.path.join(self.out_dir, "triples", f"bucket={b}")
+            nodes_path = os.path.join(self.out_dir, "nodes", f"bucket={b}")
+            # overwrite per-bucket dirs → retries of a half-written bucket
+            # are idempotent (reference: idempotent batches, 3_process.py)
+            res.triples.write.mode("overwrite").parquet(tri_path)
+            res.nodes.write.mode("overwrite").parquet(nodes_path)
+            m = res.mentions.agg(
+                F.count(F.lit(1)).alias("n"), F.count("entity_id").alias("linked")
+            ).first()
+            res.cleanup()
             return BucketStats(
-                partition_id=b, rows_in=0, rows_out=0, mentions=0,
-                mentions_linked=0, wall_ms=(time.time() - t0) * 1000.0,
+                partition_id=b,
+                rows_in=rows_in,
+                rows_out=self._parquet_rows(tri_path),
+                mentions=int(m.n),
+                mentions_linked=int(m.linked),
+                wall_ms=(time.time() - t0) * 1000.0,
             )
-        # directory-level pruning: only this bucket's files are ever opened
-        # (the analog of Iceberg partition pruning on bucket(B, conv_id))
-        part = self.spark.read.parquet(part_path)
-        rows_in = self._parquet_rows(part_path)
-        res = run_pipeline(self.spark, part, entity_dict)
-        tri_path = os.path.join(self.out_dir, "triples", f"bucket={b}")
-        nodes_path = os.path.join(self.out_dir, "nodes", f"bucket={b}")
-        # overwrite per-bucket dirs → retries of a half-written bucket
-        # are idempotent (reference: idempotent batches, 3_process.py)
-        res.triples.write.mode("overwrite").parquet(tri_path)
-        res.nodes.write.mode("overwrite").parquet(nodes_path)
-        m = res.mentions.agg(
-            F.count(F.lit(1)).alias("n"), F.count("entity_id").alias("linked")
-        ).first()
-        res.cleanup()
-        return BucketStats(
-            partition_id=b,
-            rows_in=rows_in,
-            rows_out=self._parquet_rows(tri_path),
-            mentions=int(m.n),
-            mentions_linked=int(m.linked),
-            wall_ms=(time.time() - t0) * 1000.0,
-        )
+        finally:
+            if pin:
+                sc.setLocalProperty("spark.scheduler.pool", caller_pool)
 
     def land(self, batch_df: DataFrame, batch_id: int) -> list[int]:
         """Land one batch of rows under ``_bucket=b/_batch=<batch_id>`` and

@@ -21,9 +21,12 @@ from .operators import (
     canonicalize,
     dedup,
     defscope,
+    enrich,
     extract,
+    graph,
     linking,
     multimodal,
+    rangejoin,
     sampling,
     similarity,
     text_analysis,
@@ -67,30 +70,30 @@ def _scaled_bigint(col, scale: int = 100):
 
 def q_agg_count_by_level(spark, sf_dir):
     """SURVEY §2.5 agg_count_by_level (validation group-by, CLAUDE.md:438) —
-    Q1-shaped hash aggregate: partial agg map-side, no skew."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "sum_revenue"
-            ),
-        )
-    )
+    graph.counts_by_level over lineitem, whose level classifier is
+    ``<l_returnflag>/<l_linestatus>``: a Q1-shaped hash aggregate."""
+    li = _t(spark, sf_dir, "lineitem")
+    level = F.concat("l_returnflag", F.lit("/"), "l_linestatus")
+    return graph.counts_by_level(li.select(level.alias("level_classifier")))
 
 
 def q_join_orphan_anti(spark, sf_dir):
     """SURVEY §2.3 join_orphan_anti — left-anti orphan check
-    (CLAUDE.md:448-452): customers with no orders, counted by segment."""
-    c = _t(spark, sf_dir, "customer")
+    (CLAUDE.md:448-452), graph.orphan_nodes over customers and orders as
+    nodes: customers with ``c_custkey % 4 != 0`` are the roots
+    ``c<custkey>``, every order ``o<orderkey>`` hangs under
+    ``c<o_custkey>``, so the orders of the other customers are orphans."""
+    c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 4 != 0)
     o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o.select("o_custkey"), c["c_custkey"] == o["o_custkey"], "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_orphans"))
+    roots = c.select(
+        F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node_id"),
+        F.lit(None).cast("string").alias("parent"),
     )
+    orders = o.select(
+        F.concat(F.lit("o"), F.col("o_orderkey").cast("string")).alias("node_id"),
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("parent"),
+    )
+    return graph.orphan_nodes(roots.unionByName(orders))
 
 
 def q_join_entity_link(spark, sf_dir):
@@ -186,17 +189,24 @@ def q_dedup_version(spark, sf_dir):
     )
 
 
+def _order_nodes(spark, sf_dir):
+    """orders as graph nodes: each order a child of its customer, with
+    ``turn_idx = o_orderkey % 7`` so that child order differs from id order."""
+    return _t(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").cast("string").alias("node_id"),
+        F.col("o_custkey").cast("string").alias("parent"),
+        (F.col("o_orderkey") % 7).alias("turn_idx"),
+    )
+
+
 def q_agg_children_collect(spark, sf_dir):
     """SURVEY §2.5 agg_children_collect — order-sensitive child list per
-    parent (direct_children derivation, CLAUDE.md:172-174)."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_custkey").agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.collect_list("o_orderkey")), lambda x: x.cast("string")
-            ),
-        ).alias("children")
+    parent (direct_children derivation, CLAUDE.md:172-174):
+    graph.children_agg over the orders as nodes, so each customer lists its
+    orders in ``(turn_idx, id)`` order."""
+    children = graph.children_agg(_order_nodes(spark, sf_dir))
+    return children.select(
+        "node_id", F.concat_ws(",", "direct_children").alias("children")
     )
 
 
@@ -402,37 +412,30 @@ def q_join_defs_scope(spark, sf_dir):
 
 
 def q_join_incoming_refs(spark, sf_dir):
-    """SURVEY §2.3 join_incoming_refs — reverse-edge aggregate: per target,
-    the sorted distinct set of citing sources (incoming_references,
-    pydanticModels.py:442)."""
+    """SURVEY §2.3 join_incoming_refs — reverse-edge aggregate
+    (incoming_references, pydanticModels.py:442): graph.incoming_references
+    over the events as edges user → event type, where an error is a
+    ``child_of`` edge the operator skips and every other event a ``cites``
+    edge. Per target, the sorted distinct set of citing users."""
     e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.col("event_type").alias("node_id"))
-        .agg(
-            F.concat_ws(
-                ",", F.array_sort(F.collect_set(F.col("user_id").cast("string")))
-            ).alias("incoming_refs")
-        )
+    edges = e.select(
+        F.col("user_id").cast("string").alias("src"),
+        F.col("event_type").alias("dst"),
+        F.when(F.col("event_type") == "error", "child_of").otherwise("cites").alias("rel"),
+    )
+    return graph.incoming_references(edges).select(
+        "node_id", F.concat_ws(",", "incoming_references").alias("incoming_refs")
     )
 
 
 def q_agg_siblings(spark, sf_dir):
     """SURVEY §2.5 agg_siblings — nodes sharing a parent, self removed
-    (CLAUDE.md:535): per order, the other orders of the same customer."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    w = Window.partitionBy("o_custkey")
-    sibs = F.array_remove(
-        F.array_sort(F.collect_list("o_orderkey").over(w)), F.col("o_orderkey")
-    )
-    return (
-        o.select("o_orderkey", sibs.alias("sib_arr"))
-        .filter(F.size("sib_arr") > 0)
-        .select(
-            "o_orderkey",
-            F.concat_ws(
-                ",", F.transform(F.col("sib_arr"), lambda x: x.cast("string"))
-            ).alias("siblings"),
-        )
+    (CLAUDE.md:535): graph.siblings_agg over graph.children_agg of the
+    orders as nodes, so each order lists the other orders of its customer in
+    ``(turn_idx, id)`` order, '' for an only child."""
+    children = graph.children_agg(_order_nodes(spark, sf_dir))
+    return graph.siblings_agg(children).select(
+        "node_id", F.concat_ws(",", "siblings").alias("siblings")
     )
 
 
@@ -748,8 +751,6 @@ def q_enrich_hash_embed(spark, sf_dir):
     """Phase-3 embedding enrichment (operators/enrich.py): deterministic
     feature-hashed embedding as a codegen'd expression; exposed as a
     comma-joined string for portable value comparison."""
-    from .operators import enrich
-
     d = _t(spark, sf_dir, "documents")
     emb = enrich.hash_embed_expr(F.col("text"), dim=8)
     return d.select(
@@ -767,8 +768,6 @@ def q_enrich_multi_embed(spark, sf_dir):
     Arrow pass yields the token count, the text embedding, the
     name-column embedding (``source`` stands in for the node name), and
     the deterministic extractive summary stand-in."""
-    from .operators import enrich
-
     d = _t(spark, sf_dir, "documents")
     fmt = lambda v: F.concat_ws(  # noqa: E731
         ",", F.transform(v, lambda x: F.format_number(x, 4))
@@ -841,8 +840,6 @@ def q_join_range_bucketed(spark, sf_dir):
     ``o_orderkey % 100000`` via bucket-exploded equi-join + exact
     re-check; aggregated to matches per interval. The oracle writes the
     range predicate directly (DuckDB plans the small case natively)."""
-    from .operators import rangejoin
-
     p = _t(spark, sf_dir, "part").select(
         "p_partkey",
         (F.col("p_partkey") * 5).alias("lo"),
@@ -867,14 +864,12 @@ def q_graph_pagerank(spark, sf_dir):
     bit-identical regardless of aggregation order. Graph-analytics
     completion of the nodes/edges materialization (the reference stores
     the graph; ranking its hubs is the first query a consumer runs)."""
-    from .operators import graph as graph_ops
-
     li = _t(spark, sf_dir, "lineitem")
     edges = li.select(
         (F.col("l_orderkey") % 300).alias("src"),
         (F.col("l_partkey") % 300).alias("dst"),
     )
-    return graph_ops.pagerank_int(edges, iters=3)
+    return graph.pagerank_int(edges, iters=3)
 
 
 def q_graph_triangles(spark, sf_dir):
@@ -883,8 +878,6 @@ def q_graph_triangles(spark, sf_dir):
     finds its triangles as out(x) ∩ out(y) — no wedge rows, no cache. The
     oracle enumerates triangles directly over the canonical u<v edge set
     (each triangle once as a<b<c)."""
-    from .operators import graph as graph_ops
-
     li = _t(spark, sf_dir, "lineitem")
     # the % 4 thinning keeps the derived graph sparse enough that the
     # triangle count grows ~linearly with sf instead of saturating the
@@ -894,7 +887,7 @@ def q_graph_triangles(spark, sf_dir):
         (F.col("l_orderkey") % 1000).alias("src"),
         (F.col("l_partkey") % 1000).alias("dst"),
     )
-    return graph_ops.triangle_counts(edges)
+    return graph.triangle_counts(edges)
 
 
 def q_join_interval_overlap(spark, sf_dir):
@@ -904,8 +897,6 @@ def q_join_interval_overlap(spark, sf_dir):
     bucket (the one holding max(lo_a, lo_b)) — a pure filter instead of a
     dedup shuffle. Aggregated per left interval. The oracle writes the
     theta condition directly."""
-    from .operators import rangejoin
-
     p = _t(spark, sf_dir, "part").select(
         "p_partkey",
         (F.col("p_partkey") * 5).alias("llo"),
@@ -933,14 +924,12 @@ def q_graph_label_prop(spark, sf_dir):
     lineitem-derived graph as graph_triangles; the oracle unrolls both
     iterations as CTEs with a row_number argmax (an independent
     formulation of the same pick)."""
-    from .operators import graph as graph_ops
-
     li = _t(spark, sf_dir, "lineitem")
     edges = li.filter((F.col("l_orderkey") + F.col("l_partkey")) % 4 == 0).select(
         (F.col("l_orderkey") % 1000).alias("src"),
         (F.col("l_partkey") % 1000).alias("dst"),
     )
-    return graph_ops.label_propagation(edges, iters=2)
+    return graph.label_propagation(edges, iters=2)
 
 
 def q_graph_bfs_khop(spark, sf_dir):
@@ -950,15 +939,13 @@ def q_graph_bfs_khop(spark, sf_dir):
     unrolls the three frontier expansions as CTEs with NOT-IN settlement
     checks. Same thinned lineitem-derived directed graph as
     graph_triangles."""
-    from .operators import graph as graph_ops
-
     li = _t(spark, sf_dir, "lineitem")
     edges = li.filter((F.col("l_orderkey") + F.col("l_partkey")) % 4 == 0).select(
         (F.col("l_orderkey") % 1000).alias("src"),
         (F.col("l_partkey") % 1000).alias("dst"),
     )
     seeds = spark.createDataFrame([(i,) for i in range(5)], "node long")
-    return graph_ops.bfs_distances(edges, seeds, max_hops=3)
+    return graph.bfs_distances(edges, seeds, max_hops=3)
 
 
 def q_join_asof(spark, sf_dir):
@@ -970,8 +957,6 @@ def q_join_asof(spark, sf_dir):
     the oracle formulates it independently as a lateral latest-row pick
     (row_number over the inequality join, which DuckDB plans natively
     at gate scale)."""
-    from .operators import rangejoin
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", (F.col("user_id") % 20).alias("key"), "ts"
     )
@@ -1057,8 +1042,6 @@ def q_enrich_quantize(spark, sf_dir):
     quantize_embeddings) — the ANN-index compression step, exposed as a
     comma-joined lane string plus a floor-micro scale so the hashed payload
     is float-free."""
-    from .operators import enrich
-
     e = _t(spark, sf_dir, "embeddings")
     out = enrich.quantize_embeddings(e)
     return out.select(
@@ -2170,8 +2153,6 @@ def _ivf_oracle_sql(sf_dir: str, k: int = 8, iters: int = 2) -> str:
 
 
 def _ann_lsh_sql(n_planes: int = 4, dim: int = 64, threshold: float = 0.30) -> str:
-    from .operators.similarity import lsh_planes
-
     def dot_plane(p):
         lits = ", ".join(repr(x) for x in p)
         return (
@@ -2181,7 +2162,7 @@ def _ann_lsh_sql(n_planes: int = 4, dim: int = 64, threshold: float = 0.30) -> s
 
     bucket = " || ".join(
         f"(CASE WHEN {dot_plane(p)} > 0 THEN '1' ELSE '0' END)"
-        for p in lsh_planes(n_planes, dim)
+        for p in similarity.lsh_planes(n_planes, dim)
     )
     return f"""
         WITH bk AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings)
@@ -2231,15 +2212,16 @@ round(
 
 ORACLE_SQL: dict[str, str] = {
     "agg_count_by_level": """
-        SELECT l_returnflag, l_linestatus, count(*) AS n,
-               round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_revenue
-        FROM lineitem GROUP BY l_returnflag, l_linestatus
+        SELECT l_returnflag || '/' || l_linestatus AS level_classifier,
+               count(*) AS n
+        FROM lineitem GROUP BY 1
     """,
     "join_orphan_anti": """
-        SELECT c_mktsegment, count(*) AS n_orphans
-        FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        WHERE o.o_custkey IS NULL GROUP BY c_mktsegment
+        SELECT 'o' || CAST(o_orderkey AS VARCHAR) AS node_id,
+               'c' || CAST(o_custkey AS VARCHAR) AS parent
+        FROM orders
+        WHERE o_custkey IS NOT NULL
+          AND o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_custkey % 4 != 0)
     """,
     "join_entity_link": """
         SELECT p_brand, count(*) AS n,
@@ -2263,9 +2245,11 @@ ORACLE_SQL: dict[str, str] = {
               FROM lineitem)
     """,
     "agg_children_collect": """
-        SELECT o_custkey,
-               string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey) AS children
-        FROM orders GROUP BY o_custkey
+        SELECT CAST(o_custkey AS VARCHAR) AS node_id,
+               string_agg(CAST(o_orderkey AS VARCHAR), ','
+                          ORDER BY o_orderkey % 7, CAST(o_orderkey AS VARCHAR))
+                 AS children
+        FROM orders WHERE o_custkey IS NOT NULL GROUP BY o_custkey
     """,
     "agg_text_concat": """
         SELECT user_id, string_agg(event_type, ',' ORDER BY ts, event_id) AS event_seq
@@ -2348,14 +2332,17 @@ ORACLE_SQL: dict[str, str] = {
         SELECT event_type AS node_id,
                string_agg(DISTINCT CAST(user_id AS VARCHAR), ','
                           ORDER BY CAST(user_id AS VARCHAR)) AS incoming_refs
-        FROM events GROUP BY event_type
+        FROM events WHERE event_type IS DISTINCT FROM 'error' GROUP BY event_type
     """,
     "agg_siblings": """
-        SELECT a.o_orderkey,
-               string_agg(CAST(b.o_orderkey AS VARCHAR), ',' ORDER BY b.o_orderkey)
+        SELECT CAST(a.o_orderkey AS VARCHAR) AS node_id,
+               coalesce(string_agg(CAST(b.o_orderkey AS VARCHAR), ','
+                                   ORDER BY b.o_orderkey % 7,
+                                            CAST(b.o_orderkey AS VARCHAR)), '')
                  AS siblings
-        FROM orders a JOIN orders b
+        FROM orders a LEFT JOIN orders b
           ON a.o_custkey = b.o_custkey AND a.o_orderkey != b.o_orderkey
+        WHERE a.o_custkey IS NOT NULL
         GROUP BY a.o_orderkey
     """,
     "prj_citation": """

@@ -177,3 +177,29 @@ def test_empty_input_commits_empty_buckets(spark, entity_dict_df, tmp_path_facto
             ("success", 0, 0)
         }
         assert runner.run(source, entity_dict_df) == 0
+
+
+def test_bucket_pools_do_not_outlive_the_run(
+    spark, transcripts_df, entity_dict_df, tmp_path_factory
+):
+    """Each bucket runs in its own scheduler pool; once the runner returns,
+    or raises, the calling thread is back in the pool it started in."""
+    sc = spark.sparkContext
+    small = transcripts_df.filter(
+        "conv_id IN ('conv-000004', 'conv-000012', 'conv-000013')"
+    )
+    out = str(tmp_path_factory.mktemp("ckpt_pool"))
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
+    runner = CheckpointedRunner(spark, out, run_id="a", num_buckets=2)
+    runner.run(small, entity_dict_df, max_concurrency=1)
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
+    sc.setLocalProperty("spark.scheduler.pool", "caller")
+    try:
+        killed = CheckpointedRunner(
+            spark, str(tmp_path_factory.mktemp("ckpt_pool_kill")), "b", num_buckets=2
+        )
+        with pytest.raises(RuntimeError, match="injected failure"):
+            killed.run(small, entity_dict_df, fail_after=1)
+        assert sc.getLocalProperty("spark.scheduler.pool") == "caller"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)

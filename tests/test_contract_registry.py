@@ -9,11 +9,17 @@ mid-dict. These tests make that class of drift a CI failure:
 - every key that still lacks a green driver row sits inside the checked
   window;
 - the oracle dict has no orphan entries;
-- the queries' scratch dirs share one exit-time cleanup.
+- the queries' scratch dirs share one exit-time cleanup;
+- a builder whose docstring names a package operator calls it.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
+
+import open_source_legislation_spark
 from open_source_legislation_spark.queries import (
     DRIVER_WINDOW,
     NEVER_DRIVER_VERIFIED,
@@ -107,3 +113,96 @@ def test_run_tmpdir_shares_one_exit_callback():
     for d in dirs:
         assert os.path.isdir(d)
         assert d in _LIVE_SPILL_DIRS
+
+
+_PKG_DIR = pathlib.Path(open_source_legislation_spark.__file__).parent
+# the operator modules a builder's docstring may name: rules.* is the spec,
+# which a row names without running it
+_OP_MODULES = {
+    f"{path.parent.name}.{path.stem}": {
+        node.name
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    for sub in ("operators", "plans")
+    for path in (_PKG_DIR / sub).glob("*.py")
+    if path.stem != "__init__"
+}
+_DOC_NAMES = re.compile(r"\b(\w+)\.(\w+)\b|\b(operators|plans)/(\w+)\.py\s+(\w+)")
+
+
+def _import_names(nodes) -> dict[str, str]:
+    """Local name → ``<sub>.<module>[.<func>]`` for the relative imports
+    among ``nodes``."""
+    names = {}
+    for node in nodes:
+        if isinstance(node, ast.ImportFrom) and node.level == 1 and node.module:
+            for a in node.names:
+                names[a.asname or a.name] = f"{node.module}.{a.name}"
+    return names
+
+
+def _docstring_operators(doc: str) -> set[str]:
+    found = set()
+    for m in _DOC_NAMES.finditer(doc):
+        if m.group(1):
+            mods = [f"{sub}.{m.group(1)}" for sub in ("operators", "plans")]
+            func = m.group(2)
+        else:
+            mods, func = [f"{m.group(3)}.{m.group(4)}"], m.group(5)
+        found |= {f"{mod}.{func}" for mod in mods if func in _OP_MODULES.get(mod, ())}
+    return found
+
+
+def _uncalled_docstring_operators(source: str) -> dict[str, list[str]]:
+    """Per ``q_*`` builder, the operators its docstring names that its body
+    never calls."""
+    tree = ast.parse(source)
+    top = _import_names(tree.body)
+    out = {}
+    for fn in tree.body:
+        if not (isinstance(fn, ast.FunctionDef) and fn.name.startswith("q_")):
+            continue
+        named = _docstring_operators(ast.get_docstring(fn) or "")
+        if not named:
+            continue
+        names = {**top, **_import_names(ast.walk(fn))}
+        called = set()
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                if f.value.id in names:
+                    called.add(f"{names[f.value.id]}.{f.attr}")
+            elif isinstance(f, ast.Name) and f.id in names:
+                called.add(names[f.id])
+        if named - called:
+            out[fn.name] = sorted(named - called)
+    return out
+
+
+def test_builders_call_the_operators_their_docstrings_name():
+    """A builder whose docstring names a package operator runs it: a row
+    that re-spells the operator over the TPC-H tables checks the copy, not
+    the code the KG build runs."""
+    source = (_PKG_DIR / "queries.py").read_text()
+    assert "operators.graph.children_agg" in _docstring_operators(source)
+    assert not _uncalled_docstring_operators(source)
+    respelled = '''
+from .operators import graph as graph_ops
+
+
+def q_agg_children_collect(spark, sf_dir):
+    """Child list per parent, as graph.children_agg builds it."""
+    o = _t(spark, sf_dir, "orders")
+    return o.groupBy("o_custkey").agg(F.collect_list("o_orderkey"))
+
+
+def q_agg_siblings(spark, sf_dir):
+    """Siblings (operators/graph.py siblings_agg)."""
+    return graph_ops.siblings_agg(graph_ops.children_agg(_nodes(spark, sf_dir)))
+'''
+    assert _uncalled_docstring_operators(respelled) == {
+        "q_agg_children_collect": ["operators.graph.children_agg"]
+    }

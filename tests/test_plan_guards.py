@@ -154,9 +154,10 @@ def test_dedup_shingles_once_and_counts_each_set_once(spark):
     """Each dedup query explodes its shingles under one exchange by
     ``doc_id`` that its branches reuse, and counts a doc's set where it
     already groups the shingles (the prefix window, the MinHash signature
-    aggregate): the verifier holds no size aggregate. Pins the ``Generate``
-    and ``HashAggregate`` nodes of the executed plans of
-    ``ngram_jaccard_pairs`` and ``minhash_lsh_pairs``."""
+    aggregate): the verifier holds no size aggregate. Both sides of the
+    MinHash band self-join reuse one exchange, so its signatures and band
+    explode run once. Pins the ``Generate`` and ``HashAggregate`` nodes of
+    the executed plans of ``ngram_jaccard_pairs`` and ``minhash_lsh_pairs``."""
     from collections import Counter
 
     from open_source_legislation_spark.operators import dedup
@@ -174,5 +175,6 @@ def test_dedup_shingles_once_and_counts_each_set_once(spark):
         kinds = Counter(p.getClass().getSimpleName() for p in _executed_nodes(df))
         counts[name] = (kinds["GenerateExec"], kinds["HashAggregateExec"])
     # with a shingle explode per branch and a size aggregate in the
-    # verifier the plans held (5, 8) and (6, 9)
-    assert counts == {"ngram": (1, 6), "minhash": (3, 8)}, counts
+    # verifier the plans held (5, 8) and (6, 9); with the signatures and
+    # band explode on each side of the band join, MinHash held (3, 8)
+    assert counts == {"ngram": (1, 6), "minhash": (2, 6)}, counts
