@@ -8,12 +8,14 @@ as one derive engine, :func:`derive_nodes_stream`:
 - a stateless **Arrow-batched payload UDF** (``turn_payload_udf``) runs
   every regex kernel BEFORE the ``conv_id`` shuffle — shared with the
   oracle via ``rules.py`` (no drift), balanced across scan partitions and
-  immune to hot-conversation skew. It also resolves each incorporated
-  definition's citation to its raw key, so linking after the spill is
-  JVM-only;
+  immune to hot-conversation skew. It also gives every mention and every
+  incorporated definition's citation its linking keys (the raw key and
+  the ``rules.candidate_keys`` rungs ``k2``, ``k3``), so linking after the
+  spill is a plain JVM equi-join;
 - a vectorized ``mapInArrow`` state pass over the ``hash(conv_id)``-
   partitioned, sorted turns does dedup/ordinals/parent-stack/scope fills
-  at ~µs/row.
+  at ~µs/row, and stamps each node id it mints with its
+  ``rules.node_citation``.
 
 The pure-Python oracle (``oracle.py``) is the independent reference the
 engine is tested against (tests/test_engines_equivalent.py).
@@ -43,6 +45,8 @@ _MENTIONS_TYPE = T.ArrayType(
             T.StructField("mention_text", T.StringType()),
             T.StructField("corpus", T.StringType()),
             T.StructField("raw_key", T.StringType()),
+            T.StructField("k2", T.StringType()),
+            T.StructField("k3", T.StringType()),
             T.StructField("start", T.IntegerType()),
         ]
     )
@@ -56,27 +60,40 @@ _DEFS_TYPE = T.ArrayType(
             T.StructField("incorporated_from", T.StringType()),
             T.StructField("parent_term", T.StringType()),
             T.StructField("incorporated_key", T.StringType()),
+            T.StructField("incorporated_k2", T.StringType()),
+            T.StructField("incorporated_k3", T.StringType()),
         ]
     )
 )
 
 
+def ladder_rungs(raw_key: str | None) -> tuple[str | None, str | None]:
+    """The ``k2`` (zero-padded) and ``k3`` (popped level) rungs of
+    ``rules.candidate_keys(raw_key)``, null where the rung does not exist:
+    the keys ``linking.link_mentions`` joins after ``raw_key``."""
+    rungs = dict(rules.candidate_keys(raw_key)) if raw_key is not None else {}
+    return rungs.get(2), rungs.get(3)
+
+
 def _def_tuple(d: dict) -> tuple:
     """One ``_DEFS_TYPE`` row. ``incorporated_key`` is the raw key of the
     first mention inside an incorporated definition's citation (the key
-    ``pipeline.link_incorporated`` links), else null."""
+    ``pipeline.link_incorporated`` links), else null; ``incorporated_k2``
+    and ``incorporated_k3`` are its :func:`ladder_rungs`."""
     hits = (
         rules.extract_mentions(d["incorporated_from"])
         if d["kind"] == "incorporated"
         else []
     )
+    key = hits[0]["raw_key"] if hits else None
     return (
         d["term"],
         d["definition"],
         d["kind"],
         d["incorporated_from"],
         d["parent_term"],
-        hits[0]["raw_key"] if hits else None,
+        key,
+        *ladder_rungs(key),
     )
 
 
@@ -100,6 +117,7 @@ _DERIVED_SCHEMA = T.StructType(
         T.StructField("node_raw_id", T.StringType()),
         T.StructField("node_parent", T.StringType()),
         T.StructField("node_status", T.StringType()),
+        T.StructField("node_citation", T.StringType()),
         T.StructField("current_node", T.StringType()),
         T.StructField("in_defs_scope", T.BooleanType()),
         T.StructField("extractions", _EXTRACTIONS_TYPE),
@@ -141,7 +159,8 @@ def turn_payload_udf(texts: pd.Series) -> pd.DataFrame:
         if p is not None
         else (
             [
-                (m["mention_text"], m["corpus"], m["raw_key"], m["start"])
+                (m["mention_text"], m["corpus"], m["raw_key"],
+                 *ladder_rungs(m["raw_key"]), m["start"])
                 for m in rules.extract_mentions(c)
             ],
             [_def_tuple(d) for d in rules.extract_definitions(c, True)],
@@ -261,6 +280,7 @@ def _state_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
         raw_id = np.full(m, None, dtype=object)
         parent = np.full(m, None, dtype=object)
         status = np.full(m, None, dtype=object)
+        citation = np.full(m, None, dtype=object)
         current = np.full(m, None, dtype=object)
         defs_v = np.full(m, None, dtype=object)
 
@@ -283,6 +303,7 @@ def _state_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
             raw_id[i] = r
             parent[i] = par
             status[i] = rules.node_status(nam[i])
+            citation[i] = rules.node_citation(nid)
             current[i] = nid
 
         # definitions scope: headers open it, hierarchy nodes close it,
@@ -321,6 +342,7 @@ def _state_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
                 pa.array(raw_id, type=pa.string()),
                 pa.array(parent, type=pa.string()),
                 pa.array(status, type=pa.string()),
+                pa.array(citation, type=pa.string()),
                 pa.array(current, type=pa.string()),
                 pa.array(defs_filled, type=pa.bool_()),
                 col["extractions"],
@@ -380,32 +402,13 @@ def conv_root_col(conv_id: Column) -> Column:
     return F.concat(F.lit("conv="), conv_id)
 
 
-_RANKED_LEVELS = sorted(rules.LEVEL_RANKS, key=rules.LEVEL_RANKS.get)
-
-
-def citation_expr(node_id_col) -> "F.Column":
-    """Column twin of :func:`rules.node_citation` (reference
-    create_citation_from_level_classifier, scrapeECFR.py:1174-1210):
-    a pure ``regexp_extract``/``format`` chain — whole-stage codegen, no
-    UDF. Levels appear in the id path in rank order (the parent stack is
-    rank-monotone), so assembling in ``_RANKED_LEVELS`` order matches the
-    path order the Python rule walks."""
-    pieces = []
-    for lvl in _RANKED_LEVELS:
-        label = rules.CITATION_LABELS[lvl]
-        num = F.regexp_extract(
-            node_id_col, rf"/{lvl}=([0-9]+(?:\.[0-9]+)?[A-Za-z]?)", 1
-        )
-        pieces.append(F.when(num != "", F.concat(F.lit(label + " "), num)))
-    return F.nullif(F.concat_ws(", ", *pieces), F.lit(""))
-
-
 def nodes_table(derived: DataFrame) -> DataFrame:
     """Materialize the nodes table (reference CLAUDE.md:514-536 shape),
     including one root node per conversation and the bluebook-style
-    ``citation`` derived from the id path (reference node_citation,
-    scrapeECFR.py:1174-1210). Each root comes from its conversation's
-    first turn: the state pass restarts ``ord`` at 1 per conversation."""
+    ``citation`` that the state pass derived from the id path as it minted
+    the id (``rules.node_citation``, reference scrapeECFR.py:1174-1210).
+    Each root comes from its conversation's first turn: the state pass
+    restarts ``ord`` at 1 per conversation."""
     node_rows = derived.filter(F.col("node_id").isNotNull()).select(
         F.col("node_id"),
         F.when(F.col("level_classifier") == "section", "content")
@@ -418,7 +421,7 @@ def nodes_table(derived: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         F.col("clean_text").alias("text"),
-        citation_expr(F.col("node_id")).alias("citation"),
+        F.col("node_citation").alias("citation"),
     )
     roots = (
         derived.filter(F.col("ord") == 1).select(
@@ -518,8 +521,8 @@ def extract_mentions(derived: DataFrame) -> DataFrame:
     """Explode citation/URL mentions from non-node turns.
 
     One row per mention: ``conv_id, turn_idx, current_node, mention_text,
-    corpus, raw_key, start`` (reference Reference rows,
-    pydanticModels.py:169-189).
+    corpus, raw_key, k2, k3, start`` (reference Reference rows,
+    pydanticModels.py:169-189); ``k2``, ``k3`` are the linking rungs.
     """
     return _explode_extractions(derived, "mentions")
 
@@ -529,7 +532,7 @@ def extract_definitions(derived: DataFrame) -> DataFrame:
 
     One row per definition: ``conv_id, turn_idx, current_node, term,
     definition, kind, incorporated_from, parent_term, incorporated_key,
-    term_id``.
+    incorporated_k2, incorporated_k3, term_id``.
     """
     return _explode_extractions(derived, "defs").withColumn(
         "term_id", F.concat(F.col("current_node"), F.lit("/term="), F.col("term"))

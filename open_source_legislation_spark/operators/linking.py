@@ -4,12 +4,12 @@ Replaces the reference's per-row linking lookups (``analyze_partial_link``,
 reference ``pydanticModels.py:555-636``: repeated ``SELECT ... ILIKE`` with
 pop-level / zero-pad backoff — an N+1-query correlated lookup) with:
 
-1. a JVM ``regexp_extract`` / ``lpad`` expression generating the *ranked
-   candidate keys* per mention (exact → zero-padded → popped level, the
-   ``rules.candidate_keys`` spec the oracle uses, pinned equal by a
-   property test); at most ONE candidate exists per priority, so the ladder
-   is three nullable key columns, not an exploded array — and no row
-   crosses into Python;
+1. the *ranked candidate keys* per mention (exact → zero-padded → popped
+   level, the ``rules.candidate_keys`` spec the oracle uses), which the
+   pre-shuffle payload kernel computes from that spec as it makes each raw
+   key (``extract.ladder_rungs``): at most ONE candidate exists per
+   priority, so the ladder is three nullable key columns ``raw_key``,
+   ``k2``, ``k3``, not an exploded array;
 2. one **left equi-join per rung** against the alias-exploded canonical
    dictionary, whose strategy Spark's join selection picks: a broadcast
    hash join (map-side, zero shuffles of the mention stream) while the
@@ -26,37 +26,8 @@ past the threshold costs one sort-merge exchange of the stream per rung.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# ``head/cls=num`` with the split at the LAST slash and the first ``=`` of
-# the last level; ``(?s)`` and ``\z`` because Java's ``.`` skips ``\n`` and
-# its ``$`` also matches before a trailing line terminator.
-_LAST_LEVEL = r"(?s)^(.*)/([^/=]*)=([^/]*)\z"
-# a paddable ``num``: 1-2 ASCII digits, optionally followed by ``.<rest>``
-_PADDABLE = r"(?s)^([0-9]{1,2})((?:\..*)?)\z"
-
-
-def _candidate_keys(raw_key: Column) -> Column:
-    """The ``rules.candidate_keys`` ladder as a JVM ``struct<k1,k2,k3>``
-    (priority 1/2/3, each nullable): exact, zero-padded last number,
-    popped last level."""
-    head = F.regexp_extract(raw_key, _LAST_LEVEL, 1)
-    num = F.regexp_extract(raw_key, _LAST_LEVEL, 3)
-    padded = F.concat(
-        head,
-        F.lit("/"),
-        F.regexp_extract(raw_key, _LAST_LEVEL, 2),
-        F.lit("="),
-        F.lpad(F.regexp_extract(num, _PADDABLE, 1), 3, "0"),
-        F.regexp_extract(num, _PADDABLE, 2),
-    )
-    return F.struct(
-        raw_key.alias("k1"),
-        # num is "" when the key has no last level, so k2 stays null
-        F.when(num.rlike(_PADDABLE), padded).alias("k2"),
-        F.when(raw_key.rlike(_LAST_LEVEL), head).alias("k3"),
-    )
 
 
 def alias_index(entity_dict: DataFrame) -> DataFrame:
@@ -70,7 +41,9 @@ def alias_index(entity_dict: DataFrame) -> DataFrame:
 
 
 def link_mentions(mentions: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Attach ``entity_id`` (nullable) + ``link_priority`` to each mention.
+    """Attach ``entity_id`` (nullable) + ``link_priority`` to each mention
+    and drop its rungs: ``mentions`` carries the ladder as ``raw_key``,
+    ``k2``, ``k3`` (``extract.ladder_rungs``).
 
     Misses stay as null entity_id rows — they become ``link_miss_rate``
     metrics, never silent drops (reference tags failures instead of
@@ -84,14 +57,12 @@ def link_mentions(mentions: DataFrame, entity_dict: DataFrame) -> DataFrame:
     never broadcast.
     """
     idx = alias_index(entity_dict)
-    out = mentions.withColumn("_c", _candidate_keys(F.col("raw_key")))
-    for p in (1, 2, 3):
+    out = mentions
+    for p, key in enumerate(("raw_key", "k2", "k3"), start=1):
         idx_p = idx.select(
             F.col("alias_key").alias(f"_ak{p}"), F.col("entity_id").alias(f"_e{p}")
         )
-        out = out.join(
-            idx_p, F.col("_c").getField(f"k{p}") == F.col(f"_ak{p}"), "left"
-        ).drop(f"_ak{p}")
+        out = out.join(idx_p, F.col(key) == F.col(f"_ak{p}"), "left").drop(f"_ak{p}")
     return (
         out.withColumn("entity_id", F.coalesce("_e1", "_e2", "_e3"))
         .withColumn(
@@ -100,5 +71,5 @@ def link_mentions(mentions: DataFrame, entity_dict: DataFrame) -> DataFrame:
             .when(F.col("_e2").isNotNull(), 2)
             .when(F.col("_e3").isNotNull(), 3),
         )
-        .drop("_c", "_e1", "_e2", "_e3")
+        .drop("k2", "k3", "_e1", "_e2", "_e3")
     )

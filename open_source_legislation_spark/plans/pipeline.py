@@ -3,15 +3,18 @@
 One declarative DataFrame plan per the SURVEY §3.2 lifecycle:
 
     scan(transcripts) → payload Arrow kernel (clean + marker + mention/
-    definition extraction) → repartition(hash(conv_id)) → sort →
-    mapInArrow state pass (dedup, ordinals, hierarchy nodes, scopes) →
+    definition extraction + linking keys) → repartition(hash(conv_id)) →
+    sort → mapInArrow state pass (dedup, ordinals, hierarchy nodes and
+    their citations, scopes) →
     parquet spill → explode → candidate-ladder join →
     alias CC loop → triples/nodes/edges materialization.
 
 Python runs only before the spill (the two Arrow kernels) and in the
-nodes enrichment (``enrich.node_enrich_udf``): the linking ladder is a JVM
-expression and the incorporated definitions' raw keys come out of the
-payload kernel, so the triples plan after the spill is JVM-only.
+nodes enrichment (``enrich.node_enrich_udf``). The payload kernel gives
+each mention and each incorporated definition its linking keys (the raw
+key and the ``rules.candidate_keys`` rungs), and the state kernel gives
+each node its ``rules.node_citation`` as it mints the id, so the triples
+plan after the spill is JVM-only and re-derives neither with a regex.
 
 The reference runs this as a per-document Python loop with one Postgres
 round-trip per node (``2_scrape_regular.py:33-146``); here the whole corpus
@@ -355,10 +358,11 @@ def _rewritten_turns(derived: DataFrame, linked: DataFrame) -> DataFrame:
 
 def link_incorporated(defs: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Link the citation inside 'as defined in <citation>': the raw key of
-    its first mention (``incorporated_key``, taken by the pre-shuffle
-    payload kernel) through the same JVM candidate ladder."""
-    incorp = defs.filter(F.col("kind") == "incorporated").withColumnRenamed(
-        "incorporated_key", "raw_key"
+    its first mention and its rungs (``incorporated_key``,
+    ``incorporated_k2``, ``incorporated_k3``, made by the pre-shuffle
+    payload kernel) through the same candidate-ladder joins."""
+    incorp = defs.filter(F.col("kind") == "incorporated").withColumnsRenamed(
+        {"incorporated_key": "raw_key", "incorporated_k2": "k2", "incorporated_k3": "k3"}
     )
     return linking.link_mentions(incorp, entity_dict)
 

@@ -114,39 +114,39 @@ def q_join_entity_link(spark, sf_dir):
 
 
 def q_join_entity_link_ladder(spark, sf_dir):
-    """The REAL linking candidate ladder (operators/linking.py
-    link_mentions), one left equi-join per rung whose strategy Spark's
-    join selection picks (the nation-sized dictionary broadcasts):
-    exact → zero-padded → popped-level backoff
-    (rules.candidate_keys, reference analyze_partial_link
-    pydanticModels.py:555-636) over synthetic mentions from orders against
-    a nation-derived alias dictionary whose aliases hit each rung; misses
-    stay as null rows. The oracle replicates the ladder with string ops +
-    three left joins + priority coalesce."""
+    """The REAL linking path of the KG build: extract.turn_payload_udf makes
+    each mention's raw key and its candidate rungs (rules.candidate_keys,
+    reference analyze_partial_link pydanticModels.py:555-636: exact →
+    zero-padded → popped-level backoff), then linking.link_mentions joins
+    them, one left equi-join per rung whose strategy Spark's join selection
+    picks (the nation-sized dictionary broadcasts). Each order is one
+    minted turn ``<o_orderkey % 50> U.S.C. § <o_custkey % 30>``, linked
+    against a nation-derived alias dictionary whose aliases hit each rung;
+    misses stay as null rows. The oracle replicates the ladder with string
+    ops + three left joins + priority coalesce."""
     o = _t(spark, sf_dir, "orders")
     n = _t(spark, sf_dir, "nation")
-    mentions = o.select(
-        "o_orderkey",
-        F.concat(
-            F.lit("corp/title="),
-            (F.col("o_orderkey") % 50).cast("string"),
-            F.lit("/sect="),
-            (F.col("o_custkey") % 30).cast("string"),
-        ).alias("raw_key"),
+    text = F.concat(
+        (F.col("o_orderkey") % 50).cast("string"),
+        F.lit(" U.S.C. § "),
+        (F.col("o_custkey") % 30).cast("string"),
     )
+    mentions = o.select(
+        "o_orderkey", extract.turn_payload_udf(text).alias("feat")
+    ).select("o_orderkey", F.inline("feat.extractions.mentions"))
     nk = F.col("n_nationkey")
     ed = n.select(
         F.concat(F.lit("ent/"), F.col("n_name")).alias("entity_id"),
         F.array(
             F.concat(
-                F.lit("corp/title="), (nk * 2).cast("string"),
-                F.lit("/sect="), nk.cast("string"),
+                F.lit("usc/title="), (nk * 2).cast("string"),
+                F.lit("/section="), nk.cast("string"),
             ),
             F.concat(
-                F.lit("corp/title="), (nk * 2 + 1).cast("string"),
-                F.lit("/sect="), F.lpad(nk.cast("string"), 3, "0"),
+                F.lit("usc/title="), (nk * 2 + 1).cast("string"),
+                F.lit("/section="), F.lpad(nk.cast("string"), 3, "0"),
             ),
-            F.concat(F.lit("corp/title="), (nk + 25).cast("string")),
+            F.concat(F.lit("usc/title="), (nk + 25).cast("string")),
         ).alias("aliases"),
     )
     out = linking.link_mentions(mentions, ed)
@@ -238,16 +238,12 @@ def q_sort_topk(spark, sf_dir):
 
 
 def q_set_except(spark, sf_dir):
-    """SURVEY §2.8 set_except — id-set difference: nations having suppliers
-    but no customers."""
-    s = _t(spark, sf_dir, "supplier").select("s_nationkey").distinct()
-    c = _t(spark, sf_dir, "customer").select("c_nationkey").distinct()
-    n = _t(spark, sf_dir, "nation")
-    only = s.join(c, s["s_nationkey"] == c["c_nationkey"], "left_anti")
-    return (
-        only.join(n, only["s_nationkey"] == n["n_nationkey"])
-        .select("n_name")
-        .orderBy("n_name")
+    """SURVEY §2.8 set_except — id-set difference: the orders that no
+    line item references."""
+    o = _t(spark, sf_dir, "orders").select("o_orderkey").distinct()
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
+    return o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_anti").orderBy(
+        "o_orderkey"
     )
 
 
@@ -1779,21 +1775,31 @@ def q_agg_node_text(spark, sf_dir):
 
 def q_prj_citation_node(spark, sf_dir):
     """Citation from the node-id PATH (reference
-    create_citation_from_level_classifier, scrapeECFR.py:1174-1210; pipeline
-    op extract.citation_expr): ids minted from lineitem keys — including a
-    -v_n version tag on even lines, which the citation strips — then the
-    pure regexp_extract/format chain (whole-stage codegen, no UDF)."""
-    li = _t(spark, sf_dir, "lineitem")
-    node_id = F.concat(
-        F.lit("conv=c/title="),
-        (F.col("l_orderkey") % 5 + 1).cast("string"),
-        F.lit("/section="),
-        F.col("l_linenumber").cast("string"),
-        F.when(F.col("l_linenumber") % 2 == 0, F.lit("-v_2")).otherwise(F.lit("")),
+    create_citation_from_level_classifier, scrapeECFR.py:1174-1210) as the
+    KG build makes it: extract.derive_nodes_stream mints the ids and stamps
+    each with rules.node_citation, and extract.nodes_table reads it. One
+    minted conversation per order: a ``Title <o % 5 + 1>`` turn (repeated
+    on every line item, so the derive's turn dedup keeps one), a
+    ``Section <line>`` turn per line item, and a repeated ``Section`` turn
+    on even lines, where the derive mints a ``-v_2`` id (the citation
+    strips the tag); the conversation root has no citation."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber").distinct()
+    ln = F.col("l_linenumber").cast("int")
+    title = F.concat(F.lit("Title "), (F.col("l_orderkey") % 5 + 1).cast("string"))
+    section = F.concat(F.lit("Section "), ln.cast("string"))
+    turns = F.array(
+        *(
+            F.struct(idx.alias("turn_idx"), text.alias("text"))
+            for idx, text in ((F.lit(0), title), (ln * 2 - 1, section), (ln * 2, section))
+        )
     )
-    return li.select(
-        node_id.alias("node_id"), extract.citation_expr(node_id).alias("citation")
-    ).distinct()
+    transcripts = li.select(
+        F.col("l_orderkey").cast("string").alias("conv_id"),
+        F.inline(F.when(ln % 2 == 0, turns).otherwise(F.slice(turns, 1, 2))),
+        F.lit(None).cast("timestamp").alias("ts"),
+    )
+    derived = extract.derive_nodes_stream(transcripts)
+    return extract.nodes_table(derived).select("node_id", "citation")
 
 
 def q_join_defs_closure(spark, sf_dir):
@@ -2260,10 +2266,10 @@ ORACLE_SQL: dict[str, str] = {
         FROM orders ORDER BY price DESC, o_orderkey LIMIT 10
     """,
     "set_except": """
-        SELECT n_name FROM nation
-        WHERE n_nationkey IN (SELECT DISTINCT s_nationkey FROM supplier)
-          AND n_nationkey NOT IN (SELECT DISTINCT c_nationkey FROM customer)
-        ORDER BY n_name
+        SELECT o_orderkey FROM orders
+        EXCEPT
+        SELECT l_orderkey FROM lineitem
+        ORDER BY o_orderkey
     """,
     "prj_text_clean": """
         SELECT doc_id,
@@ -2892,24 +2898,24 @@ ORACLE_SQL: dict[str, str] = {
     "join_entity_link_ladder": """
         WITH m AS (
           SELECT o_orderkey,
-                 'corp/title=' || CAST(o_orderkey % 50 AS VARCHAR) ||
-                   '/sect=' || CAST(o_custkey % 30 AS VARCHAR) AS raw_key,
-                 'corp/title=' || CAST(o_orderkey % 50 AS VARCHAR) ||
-                   '/sect=' || lpad(CAST(o_custkey % 30 AS VARCHAR), 3, '0') AS k2,
-                 'corp/title=' || CAST(o_orderkey % 50 AS VARCHAR) AS k3
+                 'usc/title=' || CAST(o_orderkey % 50 AS VARCHAR) ||
+                   '/section=' || CAST(o_custkey % 30 AS VARCHAR) AS raw_key,
+                 'usc/title=' || CAST(o_orderkey % 50 AS VARCHAR) ||
+                   '/section=' || lpad(CAST(o_custkey % 30 AS VARCHAR), 3, '0') AS k2,
+                 'usc/title=' || CAST(o_orderkey % 50 AS VARCHAR) AS k3
           FROM orders
         ), al AS (
           -- alias_index: explode + first-writer-wins (min entity_id)
           SELECT alias_key, min(entity_id) AS entity_id FROM (
-            SELECT 'corp/title=' || CAST(n_nationkey * 2 AS VARCHAR) ||
-                     '/sect=' || CAST(n_nationkey AS VARCHAR) AS alias_key,
+            SELECT 'usc/title=' || CAST(n_nationkey * 2 AS VARCHAR) ||
+                     '/section=' || CAST(n_nationkey AS VARCHAR) AS alias_key,
                    'ent/' || n_name AS entity_id FROM nation
             UNION ALL
-            SELECT 'corp/title=' || CAST(n_nationkey * 2 + 1 AS VARCHAR) ||
-                     '/sect=' || lpad(CAST(n_nationkey AS VARCHAR), 3, '0'),
+            SELECT 'usc/title=' || CAST(n_nationkey * 2 + 1 AS VARCHAR) ||
+                     '/section=' || lpad(CAST(n_nationkey AS VARCHAR), 3, '0'),
                    'ent/' || n_name FROM nation
             UNION ALL
-            SELECT 'corp/title=' || CAST(n_nationkey + 25 AS VARCHAR),
+            SELECT 'usc/title=' || CAST(n_nationkey + 25 AS VARCHAR),
                    'ent/' || n_name FROM nation
           ) GROUP BY 1
         )
@@ -3404,14 +3410,14 @@ ORACLE_SQL: dict[str, str] = {
         FROM content GROUP BY node_id
     """,
     "prj_citation_node": """
-        SELECT DISTINCT
-               'conv=c/title=' || CAST(l_orderkey % 5 + 1 AS VARCHAR)
-                 || '/section=' || CAST(l_linenumber AS VARCHAR)
-                 || CASE WHEN l_linenumber % 2 = 0 THEN '-v_2' ELSE '' END
-                 AS node_id,
-               'Tit. ' || CAST(l_orderkey % 5 + 1 AS VARCHAR)
-                 || ', § ' || CAST(l_linenumber AS VARCHAR) AS citation
-        FROM lineitem
+        WITH k AS (SELECT DISTINCT 'conv=' || l_orderkey AS root,
+                          '/title=' || (l_orderkey % 5 + 1) AS t,
+                          'Tit. ' || (l_orderkey % 5 + 1) AS ct,
+                          l_linenumber AS ln FROM lineitem)
+        SELECT DISTINCT root AS node_id, NULL::VARCHAR AS citation FROM k
+        UNION ALL SELECT DISTINCT root || t, ct FROM k
+        UNION ALL SELECT root || t || '/section=' || ln || v, ct || ', § ' || ln
+        FROM k, (VALUES (''), ('-v_2')) AS s(v) WHERE v = '' OR ln % 2 = 0
     """,
     "join_defs_closure": """
         -- the synthetic lineitem is NOT (orderkey, linenumber)-unique:

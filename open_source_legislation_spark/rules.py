@@ -271,8 +271,8 @@ def candidate_keys(raw_key: str) -> list[tuple[int, str]]:
        pydanticModels.py:595-605).
 
     Only 1-2 ASCII digits count as a paddable number (``str.isdigit`` would
-    also take ``²`` or ``٣``), so the JVM twin in ``operators.linking`` can
-    share this spec exactly.
+    also take ``²`` or ``٣``). The payload kernel attaches rungs 2 and 3
+    to every raw key it makes (``extract.ladder_rungs``).
     """
     cands: list[tuple[int, str]] = [(1, raw_key)]
     head, sep, last = raw_key.rpartition("/")

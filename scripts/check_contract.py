@@ -8,7 +8,9 @@ class came from the session's codegen cache).
 The hash compares FORMATTED values, so an int column on one engine and a
 float column on the other agree on it (``3`` vs ``3.0``) yet diverge
 once converted through pandas; a query whose values agree but
-whose column type classes differ is reported as ``[TYPE]``."""
+whose column type classes differ is reported as ``[TYPE]``. Two empty
+results agree on every hash and check nothing, so a query that returns 0
+rows on both engines is reported as ``[EMPTY]`` and fails too."""
 
 from __future__ import annotations
 
@@ -176,6 +178,9 @@ def main(sf_dir: str, only: list[str]) -> int:
         if bad:
             failures += 1
             print(f"[TYPE] {name}: {bad}")
+        elif sn == 0:
+            failures += 1
+            print(f"[EMPTY] {name}: 0 rows on both engines, {facts}")
         else:
             print(f"[OK] {name}: {sn} rows, {facts}")
     spark.stop()

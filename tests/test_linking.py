@@ -7,14 +7,20 @@ import contextlib
 from pyspark.sql import functions as F
 
 from open_source_legislation_spark import schemas
-from open_source_legislation_spark.operators import linking
+from open_source_legislation_spark.operators import extract, linking
 
-_MENTION_COLS = "conv_id string, turn_idx int, current_node string, raw_key string"
+_MENTION_COLS = (
+    "conv_id string, turn_idx int, current_node string, raw_key string, "
+    "k2 string, k3 string"
+)
 
 
 def _mentions(spark, keys):
+    """Mentions as the payload kernel emits them: each raw key with its
+    ladder rungs."""
     return spark.createDataFrame(
-        [("c1", i, "conv=c1", k) for i, k in enumerate(keys)], _MENTION_COLS
+        [("c1", i, "conv=c1", k, *extract.ladder_rungs(k)) for i, k in enumerate(keys)],
+        _MENTION_COLS,
     )
 
 

@@ -198,7 +198,8 @@ def test_node_citation_matches_oracle(
 ):
     """Bluebook-style citation from the id path (reference
     create_citation_from_level_classifier, scrapeECFR.py:1174-1210):
-    JVM expression chain == pure-Python rule, version tags stripped."""
+    the citation the state pass stamps on each minted id == the
+    pure-Python rule over the id, version tags stripped."""
     res = _pipeline(spark, transcripts_df, entity_dict_df)
     got = {
         r.node_id: r.citation

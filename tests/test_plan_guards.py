@@ -101,6 +101,25 @@ def test_kg_pipeline_has_no_python_after_the_spill(
         res.cleanup()
 
 
+def test_kg_plans_run_no_jvm_regex_twin(spark, transcripts_df, entity_dict_df):
+    """The linking rungs and the node citation come from the Arrow kernels
+    that run the ``rules`` spec (``extract.ladder_rungs``,
+    ``rules.node_citation`` in the state pass), so neither output plan
+    re-derives them with ``regexp_extract``: a JVM copy of a rule would
+    need its own test to stay equal to the spec."""
+    from open_source_legislation_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, transcripts_df, entity_dict_df)
+    try:
+        for name in ("triples", "nodes"):
+            df = getattr(res, name)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "regexp_extract" not in plan, name
+    finally:
+        res.cleanup()
+
+
 def test_nodes_plan_builds_each_node_fact_once(spark, transcripts_df, entity_dict_df):
     """A node's addendum and its peeled text come from ONE aggregate over
     its content turns (``extract.node_text_agg``): no second addenda

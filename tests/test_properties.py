@@ -150,19 +150,32 @@ _ladder_key = st.one_of(
 @settings(
     max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
-@given(keys=st.lists(_ladder_key, max_size=60))
-def test_jvm_ladder_matches_rules_spec(spark, keys):
-    """The JVM candidate ladder ``linking._candidate_keys`` equals the
-    ``rules.candidate_keys`` spec the oracle links with, row by row."""
-    from pyspark.sql import functions as F
-
-    from open_source_legislation_spark.operators import linking
+@given(keys=st.lists(_ladder_key, max_size=60), data=st.data())
+def test_link_mentions_matches_oracle_ladder(spark, keys, data):
+    """``linking.link_mentions`` over the rungs the payload kernel attaches
+    (``extract.ladder_rungs``) picks the entity ``oracle.link_raw_key``
+    picks, against a dictionary that holds a random subset of each key's
+    ``rules.candidate_keys`` rungs (colliding aliases included)."""
+    from open_source_legislation_spark.operators import extract, linking
 
     keys = _LADDER_FIXED + keys
-    df = spark.createDataFrame(
-        list(enumerate(keys)), "i int, raw_key string"
-    ).select("i", linking._candidate_keys(F.col("raw_key")).alias("c"))
-    got = {r["i"]: (r["c"]["k1"], r["c"]["k2"], r["c"]["k3"]) for r in df.collect()}
+    rows = []
     for i, k in enumerate(keys):
-        rungs = dict(rules.candidate_keys(k)) if k is not None else {}
-        assert got[i] == (rungs.get(1), rungs.get(2), rungs.get(3)), repr(k)
+        mask = data.draw(st.integers(0, 7))
+        for p, cand in rules.candidate_keys(k) if k is not None else []:
+            if mask >> (p - 1) & 1:
+                rows.append((f"e{i:03d}.{p}", "statute", None, [cand], None))
+    ed = pd.DataFrame(rows, columns=schemas.ENTITY_DICTIONARY.fieldNames())
+    index = oracle.build_linking_index(ed)
+    mentions = spark.createDataFrame(
+        [(i, k, *extract.ladder_rungs(k)) for i, k in enumerate(keys)],
+        "i int, raw_key string, k2 string, k3 string",
+    )
+    linked = linking.link_mentions(
+        mentions, spark.createDataFrame(rows, schemas.ENTITY_DICTIONARY)
+    )
+    got = {r["i"]: r["entity_id"] for r in linked.collect()}
+    assert len(got) == len(keys)
+    for i, k in enumerate(keys):
+        exp = oracle.link_raw_key(k, index) if k is not None else None
+        assert got[i] == exp, repr(k)
